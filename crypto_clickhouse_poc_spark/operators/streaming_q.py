@@ -197,7 +197,6 @@ def kmv_partials_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.round(kmv_estimate(F.col("k_eff"), F.col("h_k")), 2).alias("n_kmv"),
         )
-        .orderBy("event_type")
     )
 
 

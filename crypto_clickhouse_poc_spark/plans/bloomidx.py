@@ -67,20 +67,13 @@ class PointerRace(RuntimeError):
     recompute (an extension's content depends on the coverage it read)."""
 
 
-def _pointer(path: str, key_col: str) -> Path:
-    """LEGACY (pre-r12) mutable pointer location — still read as
-    generation 0 when no generation files exist, so indexes built by
-    older code keep working; never written anymore."""
-    return Path(path) / IDX_DIR / f"bloom-{key_col}.json"
-
-
-# bloom-<key>.g<N>.json (generation pointer) or bloom-<key>.json (legacy
-# mutable pointer, read as generation 0). The suffix-anchored regex is
-# load-bearing: a key column whose NAME contains ".g" (e.g. "a.gx") must
-# not be truncated to "a" — naive split(".g") did exactly that (r12
-# sweep_bloom_orphans bug: the mis-keyed pointer was never read, its dirs
-# never marked live, and the sweep deleted a live index).
-_PTR_NAME = re.compile(r"^bloom-(.+?)(?:\.g(\d+))?\.json$")
+# bloom-<key>.g<N>.json, one immutable file per pointer generation. The
+# suffix-anchored regex is load-bearing: a key column whose NAME
+# contains ".g" (e.g. "a.gx") must not be truncated to "a" — naive
+# split(".g") did exactly that (r12 sweep_bloom_orphans bug: the
+# mis-keyed pointer was never read, its dirs never marked live, and the
+# sweep deleted a live index).
+_PTR_NAME = re.compile(r"^bloom-(.+?)\.g(\d+)\.json$")
 
 
 def _parse_ptr_name(name: str) -> tuple[str, int] | None:
@@ -91,12 +84,11 @@ def _parse_ptr_name(name: str) -> tuple[str, int] | None:
     m = _PTR_NAME.match(name)
     if m is None:
         return None
-    return m.group(1), int(m.group(2) or 0)
+    return m.group(1), int(m.group(2))
 
 
 def _gen_of(p: Path) -> int:
-    parsed = _parse_ptr_name(p.name)
-    return parsed[1] if parsed else 0
+    return _parse_ptr_name(p.name)[1]
 
 
 def _gen_files(idx_root: Path, key_col: str) -> list[Path]:
@@ -108,15 +100,14 @@ def _gen_files(idx_root: Path, key_col: str) -> list[Path]:
         for p in idx_root.glob(f"bloom-{key_col}.g*.json")
         if (parsed := _parse_ptr_name(p.name)) is not None
         and parsed[0] == key_col
-        and parsed[1] > 0
     ]
 
 
 def _read_pointer(path: str, key_col: str) -> tuple[dict, int] | None:
     """(meta, generation) of the CURRENT pointer — the highest-numbered
     ``bloom-<key>.g<N>.json`` (each one immutable, claimed by an atomic
-    ``os.link`` exactly like the log's own v{N}.json protocol, r12), or
-    the legacy mutable file as generation 0. None = no index."""
+    ``os.link`` exactly like the log's own v{N}.json protocol, r12).
+    None = no index."""
     idx_root = Path(path) / IDX_DIR
     gens = sorted(_gen_files(idx_root, key_col), key=_gen_of)
     for p in reversed(gens):
@@ -124,9 +115,6 @@ def _read_pointer(path: str, key_col: str) -> tuple[dict, int] | None:
             return json.loads(p.read_text()), _gen_of(p)
         except OSError:
             continue  # swept between glob and read — try the next newest
-    legacy = _pointer(path, key_col)
-    if legacy.exists():
-        return json.loads(legacy.read_text()), 0
     return None
 
 
@@ -300,9 +288,8 @@ def _publish_pointer(
                 "was published behind a newer generation — re-read and "
                 "recompute"
             )
-    # winners clean up: stale generation files (incl. the legacy mutable
-    # pointer) and the grandparent generation's now-unreferenced dirs
-    _pointer(path, key_col).unlink(missing_ok=True)
+    # winners clean up: stale generation files and the grandparent
+    # generation's now-unreferenced dirs
     for p in _gen_files(idx_root, key_col):
         if _gen_of(p) <= expect_gen:
             p.unlink(missing_ok=True)

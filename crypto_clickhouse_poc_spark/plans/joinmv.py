@@ -383,7 +383,7 @@ def refresh_enriched_rollup(
             spark, fact_path, dim_path, mv_path,
             join_key=join_key, dim_cols=dim_cols,
             partial_fn=partial_fn, app=app, ts_col=ts_col,
-            dim_view=dim_view, _dim_local=dim_local,
+            dim_view=dim_view, _dim_local=(dim_head, dim_local),
         )
     if dup is not None:
         raise ValueError(
@@ -404,7 +404,7 @@ def refresh_enriched_rollup(
             spark, fact_path, dim_path, mv_path,
             join_key=join_key, dim_cols=dim_cols,
             partial_fn=partial_fn, app=app, ts_col=ts_col,
-            dim_view=dim_view, _dim_local=dim_local,
+            dim_view=dim_view, _dim_local=(dim_head, dim_local),
         )
     keys = [r[0] for r in rows]
     if not keys:
@@ -476,17 +476,18 @@ def rebuild_enriched(
     app: str = "joinmv",
     ts_col: str = "minute",
     dim_view: Callable[[DataFrame], DataFrame] | None = None,
-    _dim_local: list | None = None,
+    _dim_local: tuple[int, list | None] | None = None,
 ) -> int:
     """Full recompute from both pinned heads in ONE manifest swap (the
     logmv rebuild contract, two logs). Fails loudly on a duplicate-key
     dim — fanning out partials would silently double-count forever.
 
-    ``_dim_local`` (r17, internal): the projected dim rows a falling-back
-    scoped refresh already collected at THIS dim head — passed through so
-    the rebuild doesn't re-plan and re-collect the dim's merge-on-read
-    read (the dim-collect showed up 2-3× per refresh in the job
-    profile)."""
+    ``_dim_local`` (r17, internal): ``(dim version, projected dim rows)``
+    a falling-back scoped refresh already collected — reused when the
+    version is still the dim head, so the rebuild doesn't re-plan and
+    re-collect the dim's merge-on-read read (the dim-collect showed up
+    2-3× per refresh in the job profile); a dim commit in between makes
+    the rows stale, and the rebuild collects them afresh."""
     fact_head = S.latest_version(fact_path)
     dim_head = S.latest_version(dim_path)
     if fact_head is None or dim_head is None:
@@ -501,11 +502,9 @@ def rebuild_enriched(
     # re-planning the dim's merge-on-read read. Same memory class as the
     # BroadcastExchange the join already builds driver-side; an
     # over-bound dim keeps the distributed path.
-    dim_local = (
-        _dim_local
-        if _dim_local is not None
-        else _collect_dim_local(dim, join_key, dim_cols)
-    )
+    held_v, dim_local = _dim_local if _dim_local is not None else (None, None)
+    if held_v != dim_head or dim_local is None:
+        dim_local = _collect_dim_local(dim, join_key, dim_cols)
     if dim_local is not None:
         from collections import Counter
 

@@ -31,6 +31,16 @@ and every operation is a NEW manifest over mostly-old files:
              versions needing them fails — the Delta retention-window
              trade; requires no concurrent writers)
 
+Every ``v{N}.json`` body is stamped ``"format_version": 1``
+(``FORMAT_VERSION``) by :func:`_commit`, and :func:`_version_body` — the
+one parser of version files — refuses a body whose stamp is missing or
+different with one error naming the file and version. There is no
+compatibility path for older log layouts. A version-1 body always
+carries ``committed_at`` and ``data_change``, every file entry carries
+``added_v``, and every commit from the table's first data write on
+carries the table ``schema`` (a body without one belongs to a table
+that has never been written).
+
 Commits are optimistic-concurrency: the manifest is written to a unique tmp
 name and ``os.link``ed to ``v{N}.json`` — EEXIST means another writer won
 version N, so re-read the head and retry on N+1 (the open-source Delta
@@ -74,6 +84,7 @@ from pyspark.sql import functions as F
 from .layout import PARTITION_COL, dedup_view, with_partition_col
 
 LOG_DIR = "_log"
+FORMAT_VERSION = 1
 DATA_DIR = "data"
 TXN_COL = "txn"
 _COMMIT_RETRIES = 50
@@ -137,7 +148,7 @@ def manifest(path: str, version: int, months: tuple[str, str] | None = None) -> 
     skips loading shards wholly outside the range (manifest-level
     pruning one level up: a months-pruned read of a million-file table
     never even parses the other months' metadata)."""
-    m = json.loads((_log(path) / f"v{version}.json").read_text())
+    m = _version_body(path, version)
     if "files" not in m:
         refs = m["files_ref"]
         if months is not None:
@@ -157,8 +168,19 @@ def _version_body(path: str, version: int) -> dict:
     questions (an op scan over a long commit range, the inline ``dvs``/
     ``eq_dvs``/``txns`` fields) must use this instead of
     :func:`manifest`, which splices every month shard back just to
-    build the file list."""
-    return json.loads((_log(path) / f"v{version}.json").read_text())
+    build the file list.
+
+    The one parser of version files: a body whose ``format_version`` is
+    not :data:`FORMAT_VERSION` raises ``ValueError``."""
+    p = _log(path) / f"v{version}.json"
+    body = json.loads(p.read_text())
+    if body.get("format_version") != FORMAT_VERSION:
+        raise ValueError(
+            f"{p}: version {version} has snapshot-log format_version "
+            f"{body.get('format_version')!r}; this engine reads only "
+            f"format_version {FORMAT_VERSION}"
+        )
+    return body
 
 
 def changed_ops(path: str, since_version: int, to_version: int) -> list[str]:
@@ -177,13 +199,11 @@ def changed_meta(
     path: str, since_version: int, to_version: int
 ) -> list[tuple[str, bool]]:
     """``(op, data_change)`` per commit in the range — the classification
-    change consumers dispatch on. Commits predating the flag read as
-    ``data_change=True`` (the conservative direction: a consumer that
-    cannot prove a commit was layout-only must treat it as a rewrite)."""
+    change consumers dispatch on."""
     out = []
     for v in range(since_version + 1, to_version + 1):
         b = _version_body(path, v)
-        out.append((b["op"], bool(b.get("data_change", True))))
+        out.append((b["op"], b["data_change"]))
     return out
 
 
@@ -233,7 +253,7 @@ def manifest_delta(path: str, v: int) -> tuple[list[dict], list[dict]]:
         else:
             prev_files = manifest(path, v - 1)["files"]
     now = {f["path"] for f in cur_files}
-    added = [f for f in cur_files if f.get("added_v") == v]
+    added = [f for f in cur_files if f["added_v"] == v]
     removed = [f for f in prev_files if f["path"] not in now]
     return added, removed
 
@@ -282,7 +302,7 @@ def history(path: str) -> list[dict]:
     ckpt = _read_last_checkpoint(path)
     out = list(ckpt["history"]) if ckpt and ckpt["version"] <= head else []
     for v in range(len(out), head + 1):
-        m = json.loads((_log(path) / f"v{v}.json").read_text())
+        m = _version_body(path, v)
         out.append(
             {
                 "version": v,
@@ -305,7 +325,7 @@ def _n_files(path: str, version: int) -> int:
     ``files_ref`` entries whose ``n`` sums to the answer — history
     walks and checkpoint builds stay O(months) per version instead of
     parsing every shard's file entries."""
-    m = json.loads((_log(path) / f"v{version}.json").read_text())
+    m = _version_body(path, version)
     if "files" in m:
         return len(m["files"])
     return sum(r["n"] for r in m["files_ref"])
@@ -340,7 +360,7 @@ def _write_checkpoint(path: str, version: int) -> None:
         else []
     )
     for v in range(len(hist), version + 1):
-        m = json.loads((_log(path) / f"v{v}.json").read_text())
+        m = _version_body(path, v)
         hist.append(
             {
                 "version": v,
@@ -357,9 +377,7 @@ def _write_checkpoint(path: str, version: int) -> None:
     body = {
         "version": version,
         "history": hist,
-        "manifest_raw": json.loads(
-            (_log(path) / f"v{version}.json").read_text()
-        ),
+        "manifest_raw": _version_body(path, version),
     }
     log = _log(path)
     tmp = log / f".ckpt-{uuid.uuid4().hex}.json"
@@ -663,8 +681,10 @@ def _commit(
     rule), ``"replace"`` (total rewrites: compact / rebuild / rollback,
     whose output schema IS the table schema). The default ``"inherit"``
     carries the parent's schema through schema-free commits (deletes,
-    retention). Readers with a stored schema skip footer inference
-    entirely; manifests written before this field fall back to it."""
+    retention). Readers hand the stored schema to the scan and never
+    infer one from footers.
+
+    Every body is stamped ``format_version`` (:data:`FORMAT_VERSION`)."""
     log = _log(path)
     log.mkdir(parents=True, exist_ok=True)
     tmp = log / f".tmp-{uuid.uuid4().hex}.json"
@@ -729,9 +749,7 @@ def _commit(
         # so a retry restamps fresh and head dicts are never mutated):
         # equality deletes sequence against this — an eq-delete drops a
         # row only when its file's added_v predates the delete's commit,
-        # the Iceberg sequence-number rule at file granularity. Entries
-        # predating the field read as added_v=0 (all eq-deletes apply —
-        # the conservative direction).
+        # the Iceberg sequence-number rule at file granularity.
         if rebased:
             # files_fn sees the state the op READ; the append-only
             # interleave rides along untouched (it is in the head
@@ -739,7 +757,7 @@ def _commit(
             carried = [
                 dict(f)
                 for f in head_m.get("files", [])
-                if f.get("added_v", 0) > expected_parent
+                if f["added_v"] > expected_parent
             ]
             base_files = manifest(path, expected_parent).get("files", [])
             files = [dict(f) for f in files_fn(base_files)] + carried
@@ -776,38 +794,25 @@ def _commit(
                     "rebuild the table to free them)"
                 )
         if schema_mode == "replace":
-            if not rebased:
-                schema = write_schema
-            elif head_m.get("schema") is not None:
-                # a rebased total rewrite carries an interleaved append's
-                # files forward VERBATIM — columns that append evolved in
-                # live only in its files, and logging just the rewrite's
-                # own (pre-interleave) schema would silently hide them
-                # (and the next compact would drop them). The winner's
-                # chain already merged the append's columns: union them.
-                schema = _merge_schemas(write_schema, head_m.get("schema"))
-            else:
-                # legacy head: the interleaved append's columns are
-                # unknowable without footers — the chain cannot start on
-                # a rebase; the next conflict-free rewrite upgrades
-                schema = None
+            # a rebased total rewrite carries an interleaved append's
+            # files forward VERBATIM — columns that append evolved in
+            # live only in its files, and logging just the rewrite's
+            # own (pre-interleave) schema would silently hide them
+            # (and the next compact would drop them). The winner's
+            # chain already merged the append's columns: union them.
+            schema = (
+                _merge_schemas(write_schema, head_m.get("schema"))
+                if rebased
+                else write_schema
+            )
         elif schema_mode == "merge":
-            # the schema chain may only START at v0 or at a total rewrite
-            # ("replace" ops, whose mergeSchema read carries the true
-            # union): merging onto a LEGACY head (pre-schema manifests)
-            # would record just this frame's columns and silently HIDE —
-            # and at the next compact, DROP — evolved columns that live
-            # only in older files. A legacy table stays legacy until its
-            # next compact/rebuild upgrades it.
-            if head is None or head_m.get("schema") is not None:
-                schema = _merge_schemas(head_m.get("schema"), write_schema)
-            else:
-                schema = None
+            schema = _merge_schemas(head_m.get("schema"), write_schema)
         elif schema_mode == "inherit":
             schema = head_m.get("schema")
         else:
             raise ValueError(f"unknown schema_mode {schema_mode!r}")
         body = {
+            "format_version": FORMAT_VERSION,
             "version": version,
             "parent": head,
             "op": op,
@@ -822,7 +827,7 @@ def _commit(
             # allowed) is sufficient — both resolvers use monotone
             # predicates.
             "committed_at": round(
-                max(_time.time(), head_m.get("committed_at") or 0.0), 3
+                max(_time.time(), head_m.get("committed_at", 0.0)), 3
             ),
             "data_change": bool(data_change),
             "txns": txns,
@@ -1157,7 +1162,7 @@ def prune_files_by_values(
         written = key_col
         if renames:
             written = rename_map_for_file(
-                renames, [key_col], f.get("added_v", 0)
+                renames, [key_col], f["added_v"]
             ).get(key_col, key_col)
         rng = f.get("cols", {}).get(written)
         if rng is None:
@@ -1293,7 +1298,7 @@ def read_changes(
     # arbitrary file's schema, an evolved column's values would be
     # silently dropped from the delta. The range end's LOGGED schema
     # covers every file added in the range (schemas only grow along an
-    # append range); legacy tables fall back to the footer union.
+    # append range).
     df = _read_files(
         spark,
         path,
@@ -1463,7 +1468,7 @@ def read_changes_cdc(
         # the commit's LOGGED schema reads both its added and its removed
         # files exactly (removed files predate v, so v's schema is a
         # superset and null-fills — the same semantics mergeSchema gave,
-        # without the footer union job); None on legacy tables
+        # without the footer union job)
         vbody = _version_body(path, v)
         vsch, vren = vbody.get("schema"), vbody.get("renames")
         if op in ("append", "merge", "retention", "upsert", "overwrite"):
@@ -1640,51 +1645,34 @@ def read_changes_cdc(
     return out
 
 
+def head_schema(path: str) -> dict:
+    """The head version's logged table schema (``StructType.jsonValue()``
+    form). Raises on a path with no log or a table never written."""
+    head = latest_version(path)
+    if head is None:
+        raise FileNotFoundError(f"no snapshots at {path}")
+    sch = _version_body(path, head).get("schema")
+    if sch is None:
+        raise ValueError(f"{path} has never been written — schema unknown")
+    return sch
+
+
 def _empty_like(spark: SparkSession, path: str) -> DataFrame:
     """A zero-row frame with the table's exact read schema (incl. the txn
-    and partition columns). With a LOGGED schema at the head (r13) this
-    is a pure local frame — zero file reads, zero jobs (the steady-state
-    empty read_changes poll costs one JSON stat); the partition columns
-    are appended with the types path inference gives a real read (txn
-    string, p_month int). Legacy fallback: limit(0) over the newest
-    version that has files, with mergeSchema — on a schema-EVOLVED table
-    a single arbitrary file may predate the evolution and lack the new
-    columns, and a consumer selecting them from the empty frame would
-    raise (r8 ADVICE). A table whose every version is empty has no
-    schema anywhere — that is unreadable by construction and raises."""
-    head = latest_version(path)
-    sch = _version_body(path, head).get("schema") if head is not None else None
-    if sch is not None:
-        from pyspark.sql.types import IntegerType, StringType, StructType
+    and partition columns), built from the head's LOGGED schema as a pure
+    local frame — zero file reads, zero jobs (the steady-state empty
+    read_changes poll costs one JSON stat); the partition columns are
+    appended with the types path inference gives a real read (txn
+    string, p_month int). A table that has never been written has no
+    schema and raises."""
+    from pyspark.sql.types import IntegerType, StringType, StructType
 
-        st = (
-            StructType.fromJson(sch)
-            .add(TXN_COL, StringType())
-            .add(PARTITION_COL, IntegerType())
-        )
-        return spark.createDataFrame([], st)
-    for v in range(head, -1, -1):
-        files = manifest(path, v)["files"]
-        if files:
-            # ONE file per txn dir covers every schema the snapshot can
-            # contain (a commit's dir is written by a single DataFrame,
-            # so schemas are uniform within it) — merging all files'
-            # footers would make the steady-state empty read_changes
-            # poll an O(live files) schema-inference job
-            seen: set[str] = set()
-            sample = [
-                f
-                for f in files
-                if (d := f["path"].split("/")[1]) not in seen
-                and not seen.add(d)
-            ]
-            df = (
-                spark.read.option("basePath", str(_data(path)))
-                .option("mergeSchema", "true")
-                .parquet(*[str(Path(path) / f["path"]) for f in sample])
-            )
-            return df.limit(0)
-    raise ValueError(f"{path} has no data files in any version — schema unknown")
+    st = (
+        StructType.fromJson(head_schema(path))
+        .add(TXN_COL, StringType())
+        .add(PARTITION_COL, IntegerType())
+    )
+    return spark.createDataFrame([], st)
 
 
 DV_DIR = "_dv"
@@ -1778,7 +1766,7 @@ def _added_v_map(files: list[dict]) -> Column:
     eq-carrying table; one ``F.expr`` parse is ~1 ms regardless of file
     count (the same one-parse rule as ``functions/vectors.py``)."""
     entries = ",".join(
-        f"{_sql_str(f['path'])},{int(f.get('added_v', 0))}L" for f in files
+        f"{_sql_str(f['path'])},{int(f['added_v'])}L" for f in files
     )
     return F.expr(f"map({entries})")
 
@@ -1815,7 +1803,7 @@ def _join_eq_filter(
         )
     else:
         added = spark.createDataFrame(
-            [(f["path"], f.get("added_v", 0)) for f in m["files"]],
+            [(f["path"], f["added_v"]) for f in m["files"]],
             f"{_DV_FILE} string, _added_v long",
         )
         tagged = tagged.join(F.broadcast(added), _DV_FILE, "left")
@@ -1991,7 +1979,7 @@ def _inline_eq_filter(tagged: DataFrame, m: dict, path: str, eq: list[dict]):
     # key count and file count). Null semantics match the join path:
     # a null key compares null -> the coalesce keeps the row.
     entries = ",".join(
-        f"{_sql_str(f['path'])},{int(f.get('added_v', 0))}L"
+        f"{_sql_str(f['path'])},{int(f['added_v'])}L"
         for f in m["files"]
     )
     added_sql = (
@@ -2431,7 +2419,7 @@ def _read_files(
         logical = [f["name"] for f in schema["fields"]]
         groups: dict[tuple, list[dict]] = {}
         for f in files:
-            m = rename_map_for_file(renames, logical, f.get("added_v", 0))
+            m = rename_map_for_file(renames, logical, f["added_v"])
             groups.setdefault(tuple(sorted(m.items())), []).append(f)
         if len(groups) > 1 or next(iter(groups), ()) != ():
             frames = []
@@ -2562,8 +2550,9 @@ def optimize_small_files(
     if read_v is None:
         raise FileNotFoundError(f"no snapshots at {path}")
     m = manifest(path, read_v)
-    # a file without recorded rows (legacy entry) is treated as small —
-    # rewriting is always semantics-preserving
+    # a file without recorded rows (its footer was unreadable at commit,
+    # see _footer_stats) is treated as small — rewriting is always
+    # semantics-preserving
     small = [f for f in m["files"] if f.get("rows", 0) < min_rows]
     untouched = [f for f in m["files"] if f.get("rows", 0) >= min_rows]
     if len(small) < 2:
@@ -2729,7 +2718,7 @@ def overwrite_months(
         clash = [
             f["path"]
             for f in head_files
-            if in_scope(f["p_month"]) and f.get("added_v", 0) > head
+            if in_scope(f["p_month"]) and f["added_v"] > head
         ]
         if clash:
             raise CommitConflict(
@@ -2753,9 +2742,9 @@ def overwrite_months(
 
 def table_history(path: str, limit: int | None = None) -> list[dict]:
     """``DESCRIBE HISTORY``: newest-first commit summaries — version,
-    op, wall-clock ``committed_at`` (None on pre-r13 commits),
-    ``data_change``, parent, live file count, deletion-vector /
-    equality-delete entry counts, and the idempotent-writer watermarks.
+    op, wall-clock ``committed_at``, ``data_change``, parent, live file
+    count, deletion-vector / equality-delete entry counts, and the
+    idempotent-writer watermarks.
     Raw version bodies + ``_n_files`` only — O(limit) tiny JSON reads,
     never a shard splice, so inspecting a million-commit table's recent
     history costs the same as a ten-commit one's."""
@@ -2770,8 +2759,8 @@ def table_history(path: str, limit: int | None = None) -> list[dict]:
             {
                 "version": v,
                 "op": b["op"],
-                "committed_at": b.get("committed_at"),
-                "data_change": b.get("data_change", True),
+                "committed_at": b["committed_at"],
+                "data_change": b["data_change"],
                 "parent": b.get("parent"),
                 "n_files": _n_files(path, v),
                 "n_dvs": len(b.get("dvs", [])),
@@ -2790,25 +2779,12 @@ def _last_version_at(path: str, head: int, when: float, strict: bool) -> int:
     its origin; at a 5 s commit cadence that is ~17k bodies/day of
     driver-side JSON at every stream start). Sound because the
     predicate is monotone over versions: stamps are non-decreasing by
-    the commit-time clamp (Delta's in-commit-timestamp rule), and
-    unstamped pre-r13 commits — treated as infinitely old, the
-    version_as_of convention — form a PREFIX of the log (stamping never
-    stops once started).
-
-    Legacy boundary (r16 review): a log written ENTIRELY by pre-clamp
-    writers under backward clock skew can hold a locally-decreasing
-    stamp pair, and the search may then resolve inside the skew window
-    differently from a linear walk — but such a log's timestamp
-    resolution was ALREADY unspecified inside that window (the old walk
-    silently included or dropped the skewed commits too, the r15 ADVICE
-    finding that motivated the clamp), and every commit made from now
-    on re-establishes the invariant. Delta's binary search over
-    in-commit timestamps has the same legacy caveat."""
+    the commit-time clamp (Delta's in-commit-timestamp rule)."""
     lo, hi, ans = 0, head, -1
     while lo <= hi:
         mid = (lo + hi) // 2
-        at = _version_body(path, mid).get("committed_at")
-        if at is None or (at < when if strict else at <= when):
+        at = _version_body(path, mid)["committed_at"]
+        if at < when if strict else at <= when:
             ans = mid
             lo = mid + 1
         else:
@@ -2820,9 +2796,7 @@ def version_as_of(path: str, when) -> int:
     """Timestamp time travel (Delta ``timestampAsOf``): the newest
     version whose ``committed_at`` is at or before ``when`` (float epoch
     seconds, or a datetime — naive means UTC, the repo-wide convention).
-    Commits that predate the stamp (pre-r13 manifests) are treated as
-    infinitely old — they satisfy any cutoff, the conservative
-    direction. Raises when even version 0 postdates the cutoff.
+    Raises when even version 0 postdates the cutoff.
     O(log history) body reads via :func:`_last_version_at`."""
     if isinstance(when, _dt.datetime):
         if when.tzinfo is None:
@@ -2847,22 +2821,14 @@ def rollback(path: str, to_version: int) -> int:
     restore-to-a-point IS the semantics."""
     return _commit(
         path,
-        # legacy entries (pre-added_v) must be restored WITH added_v=0
-        # pinned: _commit stamps the NEW commit's version onto unstamped
-        # entries outside the head, and a resurrected file stamped with
-        # the rollback's own version would escape every equality delete
-        # recorded before it (deletes apply only to files added earlier)
-        lambda _hf: [
-            {**f, "added_v": f.get("added_v", 0)}
-            for f in manifest(path, to_version)["files"]
-        ],
+        lambda _hf: manifest(path, to_version)["files"],
         "rollback",
         dvs_fn=lambda _dvs: manifest(path, to_version).get("dvs", []),
         eq_dvs_fn=lambda _eq, _v: manifest(path, to_version).get("eq_dvs", []),
         # restore-to-a-point includes the SCHEMA as of that point: a
         # rollback across an evolving append must not keep advertising
-        # columns whose files it just un-published (None on a pre-schema
-        # target simply drops the field — readers fall back to footers)
+        # columns whose files it just un-published (a target with no
+        # schema was never written, so it has no files to read either)
         write_schema=_version_body(path, to_version).get("schema"),
         schema_mode="replace",
         # ... and the column-mapping metadata as of that point: the
@@ -2952,8 +2918,8 @@ def table_details(path: str, version: int | None = None) -> dict:
     return {
         "version": m["version"],
         "op": m["op"],
-        "committed_at": m.get("committed_at"),
-        "data_change": m.get("data_change", True),
+        "committed_at": m["committed_at"],
+        "data_change": m["data_change"],
         "num_files": len(files),
         # raw per-file row counts: an UPPER bound under merge-on-read
         # (position/equality deletes subtract at read; compaction
@@ -2984,19 +2950,12 @@ def rename_column(path: str, old: str, new: str) -> int:
     fails its COMMIT with a clear error instead of silently forking the
     column. Live equality-delete entries that key on the renamed column
     follow it logically (their key FILES keep the written name, recorded
-    per entry as ``fcols``). Requires a schema-logged table (legacy
-    tables have no authoritative column list to edit — compact once to
-    upgrade)."""
+    per entry as ``fcols``)."""
     if old == new:
         raise ValueError("rename requires distinct names")
 
     def edit(head_m: dict, version: int) -> dict:
-        sch = head_m.get("schema")
-        if sch is None:
-            raise ValueError(
-                "rename_column requires a schema-logged table — compact "
-                "or rebuild once to upgrade a legacy table"
-            )
+        sch = head_m.get("schema", {"fields": []})
         names = [f["name"] for f in sch["fields"]]
         if old not in names:
             raise ValueError(f"no column {old!r} in {names}")
@@ -3092,16 +3051,10 @@ def widen_column_type(path: str, col: str, new_type: str) -> int:
     (byte→short→int→long, float→double, decimal growth), no data write
     required. Zero files rewritten — old files upcast at scan exactly
     like the implicit widen-by-write path. Refuses anything that is not
-    a widening of the current type (including no-ops), and requires a
-    schema-logged table."""
+    a widening of the current type (including no-ops)."""
 
     def edit(head_m: dict, version: int) -> dict:
-        sch = head_m.get("schema")
-        if sch is None:
-            raise ValueError(
-                "widen_column_type requires a schema-logged table — "
-                "compact or rebuild once to upgrade a legacy table"
-            )
+        sch = head_m.get("schema", {"fields": []})
         fields = []
         hit = False
         for f in sch["fields"]:
@@ -3194,12 +3147,7 @@ def set_column_default(
     probe.schema
 
     def edit(head_m: dict, version: int) -> dict:
-        sch = head_m.get("schema")
-        if sch is None:
-            raise ValueError(
-                "set_column_default requires a schema-logged table — "
-                "compact or rebuild once to upgrade a legacy table"
-            )
+        sch = head_m.get("schema", {"fields": []})
         if col not in [f["name"] for f in sch["fields"]]:
             raise ValueError(f"no column {col!r} to default")
         if col in head_m.get("generated", {}):
@@ -3520,12 +3468,7 @@ def drop_column(path: str, name: str) -> int:
     first)."""
 
     def edit(head_m: dict, version: int) -> dict:
-        sch = head_m.get("schema")
-        if sch is None:
-            raise ValueError(
-                "drop_column requires a schema-logged table — compact "
-                "or rebuild once to upgrade a legacy table"
-            )
+        sch = head_m.get("schema", {"fields": []})
         names = [f["name"] for f in sch["fields"]]
         if name not in names:
             raise ValueError(f"no column {name!r} in {names}")
@@ -3593,11 +3536,10 @@ def read_snapshot(
     the result equals a full read filtered to the range. Files without
     recorded stats are read, not pruned.
 
-    ``merge_schema=True`` unions the footer schemas across the snapshot's
-    files (Spark's mergeSchema) — the schema-EVOLUTION read: commits are
-    free to add columns (each txn dir is self-describing), and rows from
-    pre-evolution files surface the new columns as NULL, exactly the
-    Delta ADD COLUMN semantics without a table-level schema registry.
+    Schema evolution: the scan is handed the version's LOGGED schema, so
+    rows from pre-evolution files surface added columns as NULL — the
+    Delta ADD COLUMN semantics — and ``merge_schema`` changes nothing on
+    a written table.
 
     ``col_ranges={col: (lo, hi), ...}`` (r10) generalizes the ts pruning
     to ANY numeric column the commit recorded footer stats for (the

@@ -69,8 +69,8 @@ Semantics and scale shape:
   pre-commit manifest, pruned by per-file key [min,max] stats, one
   partition per surviving file. Visibility rewrites still refuse.
 
-The schema is the UNION of the live files' parquet footers (arrow
-types → Spark DDL; evolved columns null-filled for files that predate
+The schema is the head manifest's logged table schema (one JSON read,
+no parquet footer; evolved columns null-filled for files that predate
 them) + the two path-derived string columns; like every snapshot
 reader, files are never listed from storage — the manifest is the
 listing.
@@ -112,7 +112,7 @@ from pyspark.sql.datasource import (
 
 from ..plans.snapshots import CDC_TYPE, CDC_VERSION, PARTITION_COL, TXN_COL
 from ..plans.snapshots import manifest_delta, prune_files_by_values
-from ..plans.snapshots import rename_map_for_file
+from ..plans.snapshots import head_schema, rename_map_for_file
 from ..plans.snapshots import _version_body
 from ..plans.snapshots import changed_meta as _changed_meta
 from ..plans.snapshots import latest_version as _head
@@ -134,24 +134,17 @@ _ARROW_TO_DDL = {
 
 
 def _stored_schema(path: str):
-    """The head manifest's LOGGED table schema (r13) as the stream's
-    StructType — plus the two path-derived string columns — or None on a
-    pre-schema table. One JSON stat; zero footer reads, so a stream
-    (re)start over a million-file table costs the same as over ten."""
-    head = _head(path)
-    if head is None:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    sch = _version_body(path, head).get("schema")
-    if sch is None:
-        return None
+    """The head manifest's LOGGED table schema as the stream's StructType
+    — plus the two path-derived string columns. One JSON stat; zero
+    footer reads, so a stream (re)start over a million-file table costs
+    the same as over ten."""
     from pyspark.sql.types import StringType, StructType
 
-    st = StructType.fromJson(sch)
-    # same start-time type gate the legacy footer path enforces: a column
-    # the Arrow reader can't NULL-FILL (read() builds absent columns via
-    # _arrow_type) must fail the stream START with a clear error, not a
-    # KeyError inside a running micro-batch the day a pre-evolution file
-    # shows up (r13 review finding)
+    st = StructType.fromJson(head_schema(path))
+    # a column the Arrow reader can't NULL-FILL (read() builds absent
+    # columns via _arrow_type) must fail the stream START with a clear
+    # error, not a KeyError inside a running micro-batch the day a
+    # pre-evolution file shows up (r13 review finding)
     unmappable = [
         (f.name, f.dataType.simpleString())
         for f in st.fields
@@ -165,69 +158,9 @@ def _stored_schema(path: str):
     return st.add(TXN_COL, StringType()).add(PARTITION_COL, StringType())
 
 
-def _file_schema_ddl(path: str) -> str:
-    """Spark DDL from the UNION of the live files' footers + the path
-    columns — the legacy fallback for tables whose manifests predate the
-    logged schema. One arbitrary file is not enough on a schema-EVOLVED
-    table (the log explicitly supports column adds): a pre-evolution
-    file would hide the new columns from the stream entirely (r8
-    ADVICE). Columns appear in first-seen manifest order —
-    pre-evolution columns first, evolved columns appended — matching
-    mergeSchema's layout. Footer-only cost, O(files in the head
-    manifest)."""
-    import pyarrow.parquet as pq
-
-    head = _head(path)
-    if head is None:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    for v in range(head, -1, -1):
-        files = _manifest(path, v)["files"]
-        if files:
-            # ONE footer per txn dir: a commit's dir is written by a
-            # single DataFrame, so schemas are uniform within it — a
-            # per-file loop would serialize O(live files) driver-side
-            # metadata reads into every stream (re)start
-            dirs: set[str] = set()
-            sample = [
-                fe
-                for fe in files
-                if (d := fe["path"].split("/")[1]) not in dirs
-                and not dirs.add(d)
-            ]
-            seen: dict[str, str] = {}
-            for fe in sample:
-                sch = pq.read_schema(str(Path(path) / fe["path"]))
-                for f in sch:
-                    ddl = _ddl_of_arrow(f.type)
-                    if ddl is None:
-                        t = str(f.type)
-                        raise TypeError(f"unmapped arrow type {t} for column {f.name}")
-                    prev = seen.setdefault(f.name, ddl)
-                    if prev != ddl:
-                        # a LEGACY table may hold mixed-width files for
-                        # one column (its writes were never type-gated);
-                        # the batch mergeSchema read widens them, so the
-                        # stream's footer union must too (r16) — the
-                        # declared type takes the wider side and read()
-                        # upcasts each file's column at emit. Only a
-                        # genuine cross-family conflict still refuses.
-                        w = _widen_ddl(prev, ddl)
-                        if w is None:
-                            raise TypeError(
-                                f"column {f.name} has conflicting types across "
-                                f"the snapshot's files ({prev} vs {ddl})"
-                            )
-                        seen[f.name] = w
-            cols = [f"{n} {d}" for n, d in seen.items()]
-            cols.append(f"{TXN_COL} string")
-            cols.append(f"{PARTITION_COL} string")
-            return ", ".join(cols)
-    raise ValueError(f"{path} has no data files in any version — schema unknown")
-
-
 def _ddl_of_arrow(t) -> str | None:
-    """Spark DDL for an Arrow type, or None when unmapped — the one
-    translation _file_schema_ddl and the emit-cast diagnosis share."""
+    """Spark DDL for an Arrow type, or None when unmapped (the emit-cast
+    diagnosis)."""
     s = str(t)
     if s.startswith("timestamp"):
         return "timestamp"
@@ -348,11 +281,6 @@ class SnapshotCommitsDataSource(DataSource):
 
     def schema(self):
         st = _stored_schema(self.options["path"])
-        if st is None:
-            ddl = _file_schema_ddl(self.options["path"])
-            if self._flag("readChangeFeed"):
-                ddl += f", {CDC_TYPE} string, {CDC_VERSION} bigint"
-            return ddl
         if self._flag("readChangeFeed"):
             from pyspark.sql.types import LongType, StringType
 
@@ -366,11 +294,9 @@ class SnapshotCommitsDataSource(DataSource):
             # Delta parity (r15): start from the first commit stamped AT
             # OR AFTER the timestamp — resolved once here to an
             # exclusive start version (the newest commit strictly older
-            # than the cutoff; unstamped pre-r13 commits count as
-            # infinitely old, the version_as_of convention). A cutoff
-            # predating the whole log degrades to the full bootstrap
-            # read, which a fold consumer cannot distinguish from a
-            # replay of all history.
+            # than the cutoff). A cutoff predating the whole log
+            # degrades to the full bootstrap read, which a fold consumer
+            # cannot distinguish from a replay of all history.
             if "startingVersion" in self.options:
                 raise ValueError(
                     "startingVersion and startingTimestamp are mutually "
@@ -390,11 +316,7 @@ class SnapshotCommitsDataSource(DataSource):
             head = _head(self.options["path"])
             # O(log history) binary search over the non-decreasing
             # commit stamps (r16 — the linear walk read the WHOLE log
-            # at stream start for a cutoff near its origin). Unstamped
-            # pre-r13 commits are infinitely old — they satisfy any
-            # cutoff (the version_as_of convention); treating them as
-            # "no match" would fall through to a FULL bootstrap and
-            # replay history the cutoff excludes.
+            # at stream start for a cutoff near its origin)
             start = (
                 -1
                 if head is None
@@ -574,12 +496,12 @@ class SnapshotStreamReader(DataSourceStreamReader):
                         [
                             (cols, keys)
                             for cols, keys, v in eq_specs
-                            if f.get("added_v", 0) < v
+                            if f["added_v"] < v
                         ],
                         "insert",
                         to,
                         None,
-                        self._wmap(ren0, f.get("added_v", 0)),
+                        self._wmap(ren0, f["added_v"]),
                     )
                 )
                 for f in m0["files"]
@@ -633,7 +555,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
             InputPartition(
                 (str(Path(self.path) / f["path"]), f["path"], [], [],
                  "insert", to, None,
-                 self._wmap(ren_to, f.get("added_v", 0)))
+                 self._wmap(ren_to, f["added_v"]))
             )
             for f in added
         ]
@@ -692,7 +614,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
             for f in added:
                 parts.append(
                     self._part(f, [], [], "insert", v, None,
-                               self._wmap(vren, f.get("added_v", 0)))
+                               self._wmap(vren, f["added_v"]))
                 )
             if removed:
                 # deletes = the dropped/rewritten files' rows as visible
@@ -707,12 +629,12 @@ class SnapshotStreamReader(DataSourceStreamReader):
                             [
                                 (cols, keys)
                                 for cols, keys, ev in eq_specs
-                                if f.get("added_v", 0) < ev
+                                if f["added_v"] < ev
                             ],
                             "delete",
                             v,
                             None,
-                            self._wmap(vren, f.get("added_v", 0)),
+                            self._wmap(vren, f["added_v"]),
                         )
                     )
             if op == "delete":
@@ -735,7 +657,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
                         self._part(
                             fe, [], [], "delete", v,
                             ("pos", sorted(positions)),
-                            self._wmap(vren, fe.get("added_v", 0)),
+                            self._wmap(vren, fe["added_v"]),
                         )
                     )
             elif op in ("eq_delete", "upsert"):
@@ -781,12 +703,12 @@ class SnapshotStreamReader(DataSourceStreamReader):
                                     [
                                         (c2, k2)
                                         for c2, k2, ev2 in pre_eq
-                                        if f.get("added_v", 0) < ev2
+                                        if f["added_v"] < ev2
                                     ],
                                     "delete",
                                     v,
                                     ("eq", cols, keys),
-                                    self._wmap(vren, f.get("added_v", 0)),
+                                    self._wmap(vren, f["added_v"]),
                                 )
                             )
         return parts

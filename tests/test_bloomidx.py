@@ -394,7 +394,7 @@ def test_pointer_parser_and_sweep_survive_dot_g_key_names(tmp_path):
     import json
 
     assert B._parse_ptr_name("bloom-a.gx.g3.json") == ("a.gx", 3)
-    assert B._parse_ptr_name("bloom-a.gx.json") == ("a.gx", 0)
+    assert B._parse_ptr_name("bloom-a.gx.json") is None  # no generation
     assert B._parse_ptr_name("bloom-symbol.g12.json") == ("symbol", 12)
     assert B._parse_ptr_name("not-a-pointer.txt") is None
 

@@ -200,31 +200,6 @@ def test_input_validation_and_single_entry_per_delete(spark, table, tmp_path):
     assert len(S.manifest(table, v)["eq_dvs"]) == 1
 
 
-def test_rollback_of_legacy_entries_keeps_equality_deletes(spark, tmp_path):
-    """Pre-added_v tables: a rollback restores entries WITHOUT the field,
-    and _commit stamps unstamped non-head entries with the NEW version —
-    rollback must pin added_v=0 first, or resurrected files escape every
-    equality delete recorded before the rollback."""
-    import json
-
-    path = str(tmp_path / "legacy_table")
-    S.append(_batch(spark, 1, range(10)), path)  # v0
-    p = S._log(path) / "v0.json"
-    m = json.loads(p.read_text())
-    for f in m["files"]:
-        f.pop("added_v", None)  # simulate a pre-r9 manifest
-    p.write_text(json.dumps(m))
-    S.delete_by_keys(spark, path, _keys(spark, [3]))  # v1 (applies: 0 < 1)
-    assert sorted(
-        r.trade_id for r in S.read_snapshot(spark, path).collect()
-    ) == [i for i in range(10) if i != 3]
-    S.compact_snapshot(spark, path)  # v2 materializes the delete
-    S.rollback(path, 1)  # v3 restores the legacy files + the eq delete
-    assert sorted(
-        r.trade_id for r in S.read_snapshot(spark, path).collect()
-    ) == [i for i in range(10) if i != 3]
-
-
 def test_timestamp_key_delete_rides_the_inline_filter(spark, table):
     """r13: temporal keys join the inline (zero-join) read plan as epoch
     integers — unix_micros(col) vs int64 literals, both sides

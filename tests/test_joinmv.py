@@ -234,6 +234,34 @@ def test_key_cap_falls_back_to_rebuild(spark, paths):
     assert _mv_rows(spark, mv) == _expect(spark, fact, dim)
 
 
+def test_rebuild_recollects_a_dim_that_moved_after_the_refresh_read_it(
+    spark, paths, monkeypatch
+):
+    """A scoped refresh that falls back to a rebuild hands over the dim
+    rows it collected; when a dim commit lands in between, the rebuild
+    pins the NEW dim head and must not enrich with the stale rows."""
+    fact, dim, mv = paths
+    J.refresh_enriched_rollup(spark, fact, dim, mv)
+    S.upsert_by_keys(
+        _dim(spark, {"S0": "A", "S1": "B"}), dim, cols=["symbol"], ts_col="ts"
+    )
+    real = J.rebuild_enriched
+
+    def dim_moves_first(*args, **kwargs):
+        S.upsert_by_keys(
+            _dim(spark, {"S2": "LATE"}), dim, cols=["symbol"], ts_col="ts"
+        )
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(J, "rebuild_enriched", dim_moves_first)
+    v = J.refresh_enriched_rollup(spark, fact, dim, mv, max_scoped_keys=1)
+    assert S._version_body(mv, v)["op"] == "rebuild"
+    assert J.enriched_status(mv)["dim_version"] == S.latest_version(dim)
+    got = _mv_rows(spark, mv)
+    assert got == _expect(spark, fact, dim)
+    assert any(r[1] == "LATE" for r in got)
+
+
 def test_replay_is_a_detected_noop(spark, paths):
     fact, dim, mv = paths
     J.refresh_enriched_rollup(spark, fact, dim, mv)

@@ -7,14 +7,16 @@ Readers hand the stored schema to the scan EXPLICITLY — opening a table
 reads one JSON, never a parquet footer — and pre-evolution files
 null-fill added columns exactly as the old mergeSchema union did. These
 gates pin: storage & dtype parity with inference reads, the evolution
-rules per op, the commit-time type-conflict refusal, the legacy
-(pre-schema manifest) fallback, and the stream source's jobless schema.
+rules per op, the commit-time type-conflict refusal, the refusal of a
+log without the ``format_version`` stamp, and the stream source's
+jobless schema.
 """
 
 from __future__ import annotations
 
 import json
 from datetime import datetime
+from pathlib import Path
 
 import pytest
 
@@ -34,15 +36,6 @@ def _names(sch: dict) -> list[str]:
     return [f["name"] for f in sch["fields"]]
 
 
-def _strip_schemas(path: str) -> None:
-    for p in S._log(path).glob("v*.json"):
-        body = json.loads(p.read_text())
-        body.pop("schema", None)
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps(body))
-        tmp.replace(p)
-
-
 def test_append_logs_schema_and_read_dtypes_match_inference(spark, tmp_path):
     path = str(tmp_path / "t")
     S.append(_batch(spark, range(6)), path)
@@ -52,11 +45,14 @@ def test_append_logs_schema_and_read_dtypes_match_inference(spark, tmp_path):
     # files that predate its addition
     assert all(f["nullable"] for f in m["schema"]["fields"])
     got = S.read_snapshot(spark, path, keep_txn=True)
-    # dtypes equal the inference read bit-for-bit (incl. the path-derived
-    # partition columns' inferred types)
-    _strip_schemas(path)
-    legacy = S.read_snapshot(spark, path, keep_txn=True)
-    assert got.dtypes == legacy.dtypes
+    # dtypes equal a plain inference read of the same files bit-for-bit
+    # (incl. the path-derived partition columns' inferred types)
+    inferred = (
+        spark.read.option("basePath", str(S._data(path)))
+        .option("mergeSchema", "true")
+        .parquet(*[str(Path(path) / f["path"]) for f in m["files"]])
+    )
+    assert got.dtypes == inferred.dtypes
     assert sorted(r.trade_id for r in got.collect()) == list(range(6))
 
 
@@ -108,23 +104,6 @@ def test_deletes_inherit_compact_replaces_rollback_restores(spark, tmp_path):
     assert "venue" not in S.read_snapshot(spark, path).columns
 
 
-def test_legacy_manifests_fall_back_to_footer_inference(spark, tmp_path):
-    path = str(tmp_path / "t")
-    S.append(_batch(spark, range(4)), path)
-    S.append(
-        _batch(spark, range(4, 6)).withColumn(
-            "venue", __import__("pyspark.sql.functions", fromlist=["lit"]).lit("X")
-        ),
-        path,
-    )
-    _strip_schemas(path)
-    df = S.read_snapshot(spark, path, merge_schema=True)
-    rows = {r.trade_id: r.venue for r in df.collect()}
-    assert rows[1] is None and rows[4] == "X"
-    # the empty frame's legacy path still works too
-    assert "venue" in S._empty_like(spark, path).columns
-
-
 def test_empty_like_is_local_and_matches_read_schema(spark, tmp_path):
     path = str(tmp_path / "t")
     S.append(_batch(spark, range(3)), path)
@@ -165,30 +144,51 @@ def test_stream_schema_comes_from_the_log(spark, tmp_path):
         q.stop()
 
 
-def test_legacy_head_stays_legacy_until_a_total_rewrite(spark, tmp_path):
-    """The schema chain may only START at v0 or at a compact/rebuild: an
-    append onto a pre-schema head must NOT record just its own columns —
-    that would hide (and at the next compact, drop) evolved columns that
-    live only in older files."""
-    from pyspark.sql import functions as F
-
+def test_unstamped_manifest_is_refused(spark, tmp_path):
+    """Every version file is stamped ``format_version``; a forged body
+    without the stamp (or with another value) is refused by every read
+    and write path with one error naming the file and version."""
     path = str(tmp_path / "t")
-    S.append(_batch(spark, range(3)).withColumn("venue", F.lit("X")), path)
-    _strip_schemas(path)  # simulate a pre-upgrade table WITH an extra col
-    S.append(_batch(spark, range(3, 5)), path)  # narrower frame, post-upgrade
-    assert "schema" not in S.manifest(path, 1)  # stays legacy
-    df = S.read_snapshot(spark, path, merge_schema=True)
-    rows = {r.trade_id: r.venue for r in df.collect()}
-    assert rows[0] == "X" and rows[4] is None  # nothing hidden
-    # the next total rewrite upgrades the table — with the full union
-    S.compact_snapshot(
-        spark, path, keys=("ts", "symbol", "trade_id"), version_col="price"
-    )
-    head = S.latest_version(path)
-    assert "venue" in _names(S.manifest(path, head)["schema"])
-    assert {r.trade_id: r.venue for r in S.read_snapshot(spark, path).collect()}[
-        0
-    ] == "X"
+    S.append(_batch(spark, range(3)), path)
+    assert S._version_body(path, 0)["format_version"] == S.FORMAT_VERSION
+    p = S._log(path) / "v0.json"
+    body = json.loads(p.read_text())
+    for stamp in (None, S.FORMAT_VERSION + 1):
+        if stamp is None:
+            body.pop("format_version")
+        else:
+            body["format_version"] = stamp
+        p.write_text(json.dumps(body))
+        for call in (
+            lambda: S.manifest(path, 0),
+            lambda: S.read_snapshot(spark, path),
+            lambda: S.table_history(path),
+            lambda: S.append(_batch(spark, [9]), path),
+        ):
+            with pytest.raises(ValueError, match=r"v0\.json: version 0 has"):
+                call()
+    assert S.latest_version(path) == 0  # nothing landed
+
+
+@pytest.mark.parametrize("first", ["set_table_properties", "drop_months"])
+def test_metadata_only_first_commit_still_logs_the_schema(spark, tmp_path, first):
+    """A table whose FIRST commit is metadata-only (properties or a
+    retention on an empty path) has no schema yet; the first append
+    must start the schema chain, not leave the table schema-less."""
+    path = str(tmp_path / "t")
+    if first == "set_table_properties":
+        S.set_table_properties(path, {"owner": "desk"})
+    else:
+        S.drop_months(path, "202401")
+    assert "schema" not in S.manifest(path, 0)
+    S.append(_batch(spark, range(3)), path)
+    assert _names(S.manifest(path, 1)["schema"]) == [
+        "ts", "symbol", "trade_id", "price",
+    ]
+    S.rename_column(path, "symbol", "sym")
+    assert S.read_snapshot(spark, path).columns == [
+        "ts", "sym", "trade_id", "price", "p_month",
+    ]
 
 
 def test_rebased_total_rewrite_unions_interleaved_append_schema(spark, tmp_path):
@@ -232,8 +232,7 @@ def test_overwrite_requires_paired_txn(spark, tmp_path):
 
 
 def test_stream_start_rejects_unmappable_logged_types(spark, tmp_path):
-    """The stored-schema stream path keeps the legacy start-time type
-    gate: a logged column the Arrow null-fill can't materialize fails
+    """The stream source keeps its start-time type gate: a logged column the Arrow null-fill can't materialize fails
     the stream START with a clear error, never a mid-batch KeyError."""
     from pyspark.sql import functions as F
 
@@ -251,8 +250,7 @@ def test_table_history_and_timestamp_time_travel(spark, tmp_path):
     """DESCRIBE HISTORY + timestampAsOf (r13): commits carry a
     wall-clock stamp, history lists newest-first O(limit) summaries, and
     version_as_of resolves a cutoff between two commits to the earlier
-    one — with pre-stamp (legacy) commits treated as infinitely old."""
-    import json as _json
+    one."""
     import time
 
     path = str(tmp_path / "t")
@@ -282,13 +280,7 @@ def test_table_history_and_timestamp_time_travel(spark, tmp_path):
         ).collect()
     )
     assert got == [0, 1, 2]
-    # legacy commits (no stamp) satisfy any cutoff
-    p = S._log(path) / "v0.json"
-    body = _json.loads(p.read_text())
-    body.pop("committed_at")
-    p.write_text(_json.dumps(body))
-    assert S.version_as_of(path, 0.0) == 0  # pre-epoch cutoff still lands
-    # but a STAMPED v0 younger than the cutoff has no resolvable version
+    # a v0 younger than the cutoff has no resolvable version
     other = str(tmp_path / "t2")
     S.append(_batch(spark, [9]), other)
     with pytest.raises(ValueError, match="no version"):

@@ -229,12 +229,11 @@ def test_col_ranges_prune_files_and_preserve_semantics(spark, tmp_path):
     # a range no file's stats admit -> empty, schema intact
     none = S.read_snapshot(spark, path, col_ranges={"price": (9_000.0, 9_100.0)})
     assert none.count() == 0 and "price" in none.columns
-    # a legacy entry without stats is read, not pruned
+    # an entry without stats (footer stats are optional) is read, not
+    # pruned
     m = S.manifest(path, S.latest_version(path))
-    import json as _json
-
-    legacy = [{k: v for k, v in f.items() if k != "cols"} for f in m["files"]]
-    S._commit(path, lambda _hf: legacy, "append")
+    statless = [{k: v for k, v in f.items() if k != "cols"} for f in m["files"]]
+    S._commit(path, lambda _hf: statless, "append")
     conservative = S.read_snapshot(
         spark, path, col_ranges={"price": (110.0, 130.0)}
     )

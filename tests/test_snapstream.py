@@ -511,37 +511,6 @@ def test_starting_timestamp_resolves_to_the_commit_boundary(spark, table, tmp_pa
         q2.stop()
 
 
-def test_starting_timestamp_treats_unstamped_commits_as_old(spark, table, tmp_path):
-    """Review r15: pre-r13 commits carry no committed_at; the cutoff
-    resolution must treat them as infinitely old (the version_as_of
-    convention) — falling through to a full bootstrap would replay
-    history the cutoff excludes."""
-    import json as _json
-    import time as _time
-    from pathlib import Path
-
-    # strip the stamp from v0, simulating a legacy commit
-    v0 = Path(table) / "_snapshots" / "v0.json"
-    if not v0.exists():  # log dir name differs — find it
-        v0 = next(Path(table).rglob("v0.json"))
-    body = _json.loads(v0.read_text())
-    body.pop("committed_at", None)
-    v0.write_text(_json.dumps(body))
-
-    cutoff = _time.time() - 10_000  # before every stamped commit
-    S.append(_batch(spark, 3, [80]), table)
-    q = _start(spark, table, str(tmp_path / "ck_old"), "ss_old",
-               startingTimestamp=str(cutoff))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = _ids(spark, "ss_old")
-    # v0's rows are EXCLUDED (unstamped = older than any cutoff — the
-    # exclusive start lands at v0), later stamped commits stream
-    assert 0 not in got and got[-1] == 80
-
-
 def test_starting_timestamp_resolution_is_olog_history(spark, tmp_path):
     """r16 (VERDICT r15 next #3): startingTimestamp resolution
     binary-searches the monotone commit stamps — version-body reads at

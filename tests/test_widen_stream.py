@@ -199,42 +199,6 @@ def test_midstream_widen_overflow_fails_loudly_and_restart_adopts(spark, tmp_pat
     assert _signed_state(spark, "ws_midover2") == _snapshot_multiset(spark, path)
 
 
-def test_legacy_footer_union_widens_instead_of_refusing(spark, tmp_path):
-    """r16: a LEGACY (pre-schema-log) table may hold mixed-width files
-    for one column — its writes were never type-gated, and the batch
-    mergeSchema read widens them. The stream's footer-union schema must
-    widen too (it refused with 'conflicting types'), and the emit cast
-    then serves every era in the union type."""
-    import json as _json
-    from collections import Counter
-
-    path = str(tmp_path / "legacy_widen")
-    S.append(_batch(spark, SCHEMA_INT, range(3)), path)
-    S.append(_batch(spark, SCHEMA_LONG, [2**40]), path)
-    for p in S._log(path).glob("v*.json"):  # simulate a legacy table
-        body = _json.loads(p.read_text())
-        body.pop("schema", None)
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(_json.dumps(body))
-        tmp.replace(p)
-    spark.dataSource.register(SnapshotCommitsDataSource)
-    q = _start(spark, path, str(tmp_path / "ck"), "ws_legacy")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.table("ws_legacy")
-    assert dict(got.dtypes)["trade_id"] == "bigint"
-    assert _signed_state(spark, "ws_legacy") == Counter(
-        {
-            ("AAA", 0, 1.5): 1,
-            ("BBB", 1, 1.5): 1,
-            ("AAA", 2, 1.5): 1,
-            ("AAA", 2**40, 1.5): 1,
-        }
-    )
-
-
 def test_decimal_growth_streams_under_the_wide_declared_type(spark, tmp_path):
     """The third widening family through the stream: decimal growth —
     pre-growth decimal(10,2) files upcast to the logged decimal(20,4)
