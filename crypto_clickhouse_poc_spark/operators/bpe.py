@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..localframe import local_frame
 from ..tables import load
 
 BPE_MERGES = 16  # learned merge count (fixture-sized; production: 30k+)
@@ -49,9 +50,14 @@ EOW = "</w>"  # end-of-word marker (Sennrich et al. §3.2)
 _MERGE_MEMO: dict[tuple, list] = {}
 
 
-def _vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents with text — each open is a schema-inference job, so
+    a caller that needs the corpus twice opens it once and shares this."""
+    return load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+
+
+def _vocab(d: DataFrame) -> DataFrame:
     """(word, freq): the one corpus-sized aggregation in the whole trainer."""
-    d = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = d.select(F.explode(T.tokens(F.col("text"))).alias("word"))
     return toks.where(F.length("word") > 0).groupBy("word").agg(
         F.count(F.lit(1)).alias("freq")
@@ -165,7 +171,7 @@ def _train_bpe(
         merges = _train_bpe_driver(vocab_rows, n_merges)
         _MERGE_MEMO[key] = merges
         return merges
-    vocab = _vocab(spark, sf_dir) if vocab is None else vocab
+    vocab = _vocab(_docs(spark, sf_dir)) if vocab is None else vocab
     if force_distributed:
         return _train_bpe_distributed(vocab, n_merges)
     # one bounded action probes size AND collects (r16 perf — the old
@@ -186,8 +192,8 @@ def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen. rank 1 is the most frequent adjacent symbol pair of the raw
     character corpus; later ranks merge progressively longer subwords."""
     merges = _train_bpe(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, freq bigint"
+    return local_frame(
+        spark, merges, "rank int, left string, right string, freq bigint"
     ).orderBy("rank")
 
 
@@ -212,7 +218,8 @@ def _encode_vocab(
     spark = vocab.sparkSession
     if vocab_rows is not None:
         return F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(w, len(encode_word_py(w, merges))) for w, _ in vocab_rows],
                 "word string, n_sub int",
             )
@@ -223,7 +230,8 @@ def _encode_vocab(
     if len(wpdf) <= BPE_DRIVER_VOCAB_MAX:
         words = [w for (w,) in wpdf.itertuples(index=False)]
         return F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(w, len(encode_word_py(w, merges))) for w in words],
                 "word string, n_sub int",
             )
@@ -247,7 +255,8 @@ def doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     is aggregated ONCE and shared between training and encoding; on the
     driver path it is also collected once and both stages work off the
     same rows (r8 review — no second corpus scan)."""
-    vocab = _vocab(spark, sf_dir)
+    d = _docs(spark, sf_dir)
+    vocab = _vocab(d)
     # ONE bounded action probes size AND collects (r16 perf — the old
     # limit().count() + toPandas() pair ran the vocabulary aggregation
     # twice); the cap+1 limit proves the collected set is complete
@@ -259,7 +268,6 @@ def doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         merges = _train_bpe(spark, sf_dir, vocab=vocab)
         enc = _encode_vocab(vocab, merges)
-    d = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("word")).where(
         F.length("word") > 0
     )

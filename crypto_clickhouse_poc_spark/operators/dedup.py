@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from ..caching import bounded_cache
 from ..functions import text as T
 from ..functions import vectors as V
+from ..localframe import local_frame
 from ..tables import load
 
 NUM_HASHES = 8
@@ -341,7 +342,8 @@ def _driver_components(docs: DataFrame, pdf) -> DataFrame:
     labels = [(x, find(x)) for x in list(parent)]
     labels = [(x, c) for x, c in labels if x != c]
     t = docs.schema["doc_id"].dataType
-    lbl = docs.sparkSession.createDataFrame(
+    lbl = local_frame(
+        docs.sparkSession,
         labels, StructType([StructField("doc_id", t), StructField("cluster", t)])
     )
     return docs.join(F.broadcast(lbl), "doc_id", "left").select(

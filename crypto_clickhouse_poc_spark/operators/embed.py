@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..localframe import local_frame
 from ..tables import load
 
 PCA_K = 16  # components kept by the fixture queries (d=64 → 4× reduction)
@@ -179,8 +180,8 @@ def emb_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, (ev, r) in enumerate(zip(model.eigvals, evr)):
         cum += r
         rows.append((i, round(ev, 6), round(r, 6), round(cum, 6)))
-    return spark.createDataFrame(
-        rows, "component int, eigval double, evr double, cum_evr double"
+    return local_frame(
+        spark, rows, "component int, eigval double, evr double, cum_evr double"
     )
 
 

@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from ..caching import bounded_cache
 from ..functions import vectors as V
+from ..localframe import local_frame
 from ..tables import load
 
 TOPK = 10
@@ -201,7 +202,8 @@ def _kmeans_centroids(
     rounds: int = KMEANS_ROUNDS,
 ) -> DataFrame:
     """Trained centroids as a DataFrame (cid, cv, cnrm) — see _train_kmeans."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _train_kmeans(spark, sf_dir, k, rounds),
         "cid long, cv array<double>, cnrm double",
     )
@@ -599,7 +601,8 @@ def _pq_query_side(
                 ]
             )
         )
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         qmeta, "query_id long, qv array<double>, qn double, qcluster long, qdotc double"
     )
     lut = F.element_at(

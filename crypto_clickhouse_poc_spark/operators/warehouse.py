@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localframe import local_frame
 from ..tables import load
 
 SCD2_T0 = "2024-01-01 00:00:00"  # initial-load effective_from
@@ -73,7 +74,7 @@ def ev_hourly_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     if None in seen:
         slots.append(("tnull", None))
     if not slots:  # empty table: no groups, deterministic empty result
-        return spark.createDataFrame([], "hour int, event_type string, n bigint")
+        return local_frame(spark, [], "hour int, event_type string, n bigint")
     wide = e.groupBy(F.hour("ts").alias("hour")).agg(
         *[
             F.count(

@@ -55,6 +55,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localframe import local_frame
 from ..operators.bloom import _word_bits, bloom_positions
 from . import snapshots as S
 
@@ -423,7 +424,7 @@ def _maybe_files(
         # per value — a multi-thousand-key probe (CDC bloom prune, a
         # scoped read's key set) builds its word filter as one local
         # broadcast semi-join instead
-        wdf = spark.createDataFrame([(w,) for w in words], "word long")
+        wdf = local_frame(spark, [(w,) for w in words], "word long")
         hit = idx.join(F.broadcast(wdf), "word", "left_semi")
     rows = hit.select("file", "word", "bits").collect()
     got: dict[str, dict[int, int]] = {}
@@ -672,7 +673,7 @@ def read_points(
             return df.where(F.col(key_col).cast("string").isin(*wanted))
         # r13 literal-tax rule: big probe sets filter through one local
         # broadcast semi-join, not thousands of py4j literal round trips
-        kdf = spark.createDataFrame([(w,) for w in wanted], "_probe string")
+        kdf = local_frame(spark, [(w,) for w in wanted], "_probe string")
         return df.join(
             F.broadcast(kdf),
             df[key_col].cast("string") == kdf["_probe"],

@@ -62,14 +62,18 @@ extension a user hits the day they ask for "the same bars, per sector".
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import TYPE_CHECKING, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localframe import local_frame
 from ..streaming.bars import partial_bars
 from . import bloomidx as B
 from . import snapshots as S
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # both log versions packed into one monotone watermark id; 2^32 commits
 # per log is far beyond any real table's life under checkpointed heads
@@ -124,15 +128,13 @@ _DIM_LOCAL_MAX_ROWS = 65_536
 
 def _collect_dim_local(
     dim: DataFrame, join_key: str, dim_cols: Sequence[str]
-) -> list | None:
-    """The projected dim's rows, or None when it exceeds
-    ``_DIM_LOCAL_MAX_ROWS`` (fall back to the distributed path)."""
-    rows = (
-        dim.select(join_key, *dim_cols)
-        .limit(_DIM_LOCAL_MAX_ROWS + 1)
-        .collect()
-    )
-    return None if len(rows) > _DIM_LOCAL_MAX_ROWS else rows
+) -> pa.Table | None:
+    """The projected dim's rows as an Arrow table — collected and handed
+    back to Spark as a local relation without a Python round trip — or
+    None when it exceeds ``_DIM_LOCAL_MAX_ROWS`` (fall back to the
+    distributed path)."""
+    rows = dim.select(join_key, *dim_cols).limit(_DIM_LOCAL_MAX_ROWS + 1).toArrow()
+    return None if rows.num_rows > _DIM_LOCAL_MAX_ROWS else rows
 
 
 def _read_fact_keys(
@@ -303,9 +305,7 @@ def refresh_enriched_rollup(
     if dim_local is None:
         dim = dim.localCheckpoint()
     else:
-        dim = spark.createDataFrame(
-            dim_local, schema=dim.select(join_key, *dim_cols).schema
-        )
+        dim = local_frame(spark, dim_local)
     if fact_head > fact_w:
         # overwrite ranges take the file-level CDC (see logmv: the
         # row-precise diff is a wide full-row shuffle over the whole
@@ -349,10 +349,15 @@ def refresh_enriched_rollup(
         # this path because the rows are counted AFTER dim_view applied.
         from collections import Counter
 
-        key_n = Counter(r[0] for r in dim_local)
-        rows = gdf.limit(max_scoped_keys + 1).collect()
+        # both key lists come from Arrow, so a timestamp key compares as
+        # the same aware UTC instant on either side
+        key_n = Counter(dim_local.column(0).to_pylist())
+        rows = [
+            (k,)
+            for k in gdf.limit(max_scoped_keys + 1).toArrow().column(0).to_pylist()
+        ]
         dup = next((r for r in rows if key_n.get(r[0], 0) > 1), None)
-        dim_rows = len(dim_local)
+        dim_rows = dim_local.num_rows
     else:
         # ONE action collects the affected keys AND each key's dim
         # multiplicity (the dup check); checking the AFFECTED keys
@@ -414,9 +419,7 @@ def refresh_enriched_rollup(
             parts, mv_path, ts_col=ts_col,
             txn_app=app, txn_id=_wm(fact_head, dim_head), txn_expect=consumed,
         )
-    key_rows = spark.createDataFrame(
-        [(k,) for k in keys], schema=gdf.schema
-    )
+    key_rows = local_frame(spark, [(k,) for k in keys], gdf.schema)
     scoped_fact = _read_fact_keys(
         spark, fact_path, fact_head, join_key, keys, key_rows=key_rows
     )
@@ -476,7 +479,7 @@ def rebuild_enriched(
     app: str = "joinmv",
     ts_col: str = "minute",
     dim_view: Callable[[DataFrame], DataFrame] | None = None,
-    _dim_local: tuple[int, list | None] | None = None,
+    _dim_local: tuple[int, pa.Table | None] | None = None,
 ) -> int:
     """Full recompute from both pinned heads in ONE manifest swap (the
     logmv rebuild contract, two logs). Fails loudly on a duplicate-key
@@ -508,11 +511,9 @@ def rebuild_enriched(
     if dim_local is not None:
         from collections import Counter
 
-        counts = Counter(r[0] for r in dim_local)
+        counts = Counter(dim_local.column(0).to_pylist())
         dup = [k for k, n in counts.items() if n > 1][:1]
-        dim = spark.createDataFrame(
-            dim_local, schema=dim.select(join_key, *dim_cols).schema
-        )
+        dim = local_frame(spark, dim_local)
     else:
         dup = [
             r[0]

@@ -57,6 +57,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localframe import local_frame
 from ..streaming.bars import partial_bars, reaggregate_bars
 from . import snapshots as S
 
@@ -401,16 +402,6 @@ def refresh_rollup(
     )
 
 
-def _collect_utc(v):
-    """A ``collect()``-ed TimestampType value (OS-local naive) as the
-    UTC-naive instant ``read_snapshot``'s ts_range bounds expect — the
-    exact inverse of PySpark's ``fromtimestamp`` conversion. Identity on
-    a UTC driver; non-timestamp group time values pass through."""
-    if isinstance(v, _dt.datetime) and v.tzinfo is None:
-        return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return v
-
-
 def _refresh_scoped(
     spark: SparkSession,
     base_path: str,
@@ -479,8 +470,11 @@ def _refresh_scoped(
     # base rows map to group keys, so aggregate the delete rows and keep
     # the keys. Driver-collected (bounded by max_scoped_groups) so the
     # CDC pipeline runs ONCE and the semi-joins below get a local frame.
+    # Collected as Arrow and handed back as Arrow: timestamps stay UTC
+    # instants end to end (no OS-local naive values, no Python worker).
     gdf = partial_fn(dels).select(*group_cols).distinct()
-    rows = gdf.limit(max_scoped_groups + 1).collect()
+    groups_t = gdf.limit(max_scoped_groups + 1).toArrow()
+    rows = list(zip(*(c.to_pylist() for c in groups_t.columns)))
     if len(rows) > max_scoped_groups:
         # too many groups for a scoped swap to beat one recompute
         return rebuild_rollup(
@@ -536,20 +530,15 @@ def _refresh_scoped(
             f"a {type(rows[0][0]).__name__} value {rows[0][0]!r}. Put "
             "the time bucket first in group_cols."
         )
-    groups = spark.createDataFrame(rows, schema=gdf.schema)
+    groups = local_frame(spark, groups_t)
     # pinned-head base scan pruned to the groups' time span (footer-stat
     # pruning; the semi-join makes the row set exact — pruning is an
     # optimization, never a semantics change), re-aggregated and narrowed
-    # to exactly the affected groups. collect() renders TimestampType as
-    # OS-local naive datetimes while read_snapshot's ts_range treats
-    # naive bounds as UTC — normalize through the local offset so the
-    # prune can't shift on a non-UTC driver (the r8 ADVICE error class)
-    t_lo = _collect_utc(min(r[0] for r in rows))
-    t_hi = (
-        _collect_utc(max(r[0] for r in rows))
-        + scope_bucket
-        - _dt.timedelta(microseconds=1)
-    )
+    # to exactly the affected groups. The Arrow values are aware UTC
+    # instants, which read_snapshot's ts_range takes as such on any
+    # driver timezone (the r8 ADVICE error class)
+    t_lo = min(r[0] for r in rows)
+    t_hi = max(r[0] for r in rows) + scope_bucket - _dt.timedelta(microseconds=1)
     # opt-in FILE-level key prune: when scope_key_col passes through
     # partial_fn unchanged from the same-named base column, the pinned
     # head only needs files whose key range can hold an affected group's
@@ -610,7 +599,7 @@ def _refresh_scoped(
         scoped.unionByName(fresh),
         mv_path,
         cols=group_cols,
-        keys=[tuple(r) for r in rows],
+        keys=rows,
         ts_col=ts_col,
         txn_app=app,
         txn_id=head,

@@ -22,6 +22,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
+from ..localframe import local_frame
 from ..schemas import MIGRATIONS
 
 _NAME_RE = re.compile(r"^V(\d+)__(.+)\.sql$")
@@ -72,7 +73,8 @@ def load_applied(spark: SparkSession, registry_path: str) -> dict[tuple[int, str
 
 
 def record(spark: SparkSession, registry_path: str, mg: Migration) -> None:
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(mg.version, mg.filename, mg.checksum)],
         schema=Ty.StructType(MIGRATIONS.fields[:3]),
     ).withColumn("applied_at", F.current_timestamp())

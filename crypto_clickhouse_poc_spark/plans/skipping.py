@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..localframe import local_frame
+
 MANIFEST_DIR_SUFFIX = ".skipidx"
 MANIFEST_NAME = "manifest.json"
 
@@ -376,6 +378,6 @@ def scan_skipped(
     survivors, _total = prune_files(spark, table_path, preds, manifest=m)
     schema = StructType.fromJson(m["schema"])
     if not survivors:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     reader = spark.read.schema(schema).option("basePath", table_path)
     return reader.parquet(*survivors).where(_pred_filter(preds))

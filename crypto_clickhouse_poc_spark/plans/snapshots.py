@@ -81,6 +81,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localframe import arrow_table, local_frame
 from .layout import PARTITION_COL, dedup_view, with_partition_col
 
 LOG_DIR = "_log"
@@ -1657,6 +1658,16 @@ def head_schema(path: str) -> dict:
     return sch
 
 
+def _table_columns(path: str) -> set[str]:
+    """The table's read column names — the head's logged schema plus the
+    txn and partition columns, as in :func:`_empty_like` — without
+    building a frame. Raises ValueError for a table never written."""
+    return {f["name"] for f in head_schema(path)["fields"]} | {
+        TXN_COL,
+        PARTITION_COL,
+    }
+
+
 def _empty_like(spark: SparkSession, path: str) -> DataFrame:
     """A zero-row frame with the table's exact read schema (incl. the txn
     and partition columns), built from the head's LOGGED schema as a pure
@@ -1672,7 +1683,7 @@ def _empty_like(spark: SparkSession, path: str) -> DataFrame:
         .add(TXN_COL, StringType())
         .add(PARTITION_COL, IntegerType())
     )
-    return spark.createDataFrame([], st)
+    return local_frame(spark, [], st)
 
 
 DV_DIR = "_dv"
@@ -1791,8 +1802,8 @@ def _join_eq_filter(
     joins), else from one broadcast files-frame join.
 
     Timestamps read tz-aware UTC (our writers produce TIMESTAMP_MICROS /
-    tz-stamped key files) convert through pandas into exact Spark
-    instants — no session-timezone re-entry (the r8 seam).
+    tz-stamped key files) reach Spark as Arrow ``timestamp[us, UTC]``:
+    exact instants, no session-timezone re-entry (the r8 seam).
 
     Fallback: past the key bound, the original distributed plan — one
     parquet scan + broadcast anti-join per entry."""
@@ -1802,7 +1813,8 @@ def _join_eq_filter(
             F.element_at(_added_v_map(m["files"]), tagged[_DV_FILE]), F.lit(0)
         )
     else:
-        added = spark.createDataFrame(
+        added = local_frame(
+            spark,
             [(f["path"], f["added_v"]) for f in m["files"]],
             f"{_DV_FILE} string, _added_v long",
         )
@@ -1830,9 +1842,9 @@ def _join_eq_filter(
                 # files); a naive field here is still physically UTC epoch
                 # micros/nanos, so attaching tz=UTC is a metadata-only
                 # reinterpretation — and unifying on [us, UTC] lets
-                # entries from different writers concat. Pandas then hands
-                # createDataFrame tz-aware values: exact instants, no
-                # session-timezone re-entry (the r8 seam).
+                # entries from different writers concat. The local frame
+                # then carries exact instants, no session-timezone
+                # re-entry (the r8 seam).
                 if pa.types.is_timestamp(f.type):
                     t = t.set_column(
                         i, f.name,
@@ -1848,8 +1860,9 @@ def _join_eq_filter(
                 # never through pandas, whose int64-with-nulls → float64
                 # upcast would silently mis-compare key values above 2^53
                 # against the stored long column (r13 advice)
-                kdf = spark.createDataFrame(
-                    pa.concat_tables(tables) if len(tables) > 1 else tables[0]
+                kdf = local_frame(
+                    spark,
+                    pa.concat_tables(tables) if len(tables) > 1 else tables[0],
                 )
             except Exception:
                 # same-col-set entries written with different physical
@@ -2003,33 +2016,20 @@ def _write_local_eq_keys(
     """Driver-side equality-delete key file (r13): the scoped-refresh
     swaps COLLECT their key sets before committing, so shipping them back
     through a distributed write job is ~0.5 s of scheduling for a KB
-    file. Deduped and written with pyarrow; column types come from the
-    commit frame's own schema so the file compares equal to the stored
-    key columns, and collected TimestampType values (OS-local naive, the
-    PySpark collect convention) are normalized to UTC instants and
-    written tz-adjusted — Spark reads them back as the same TimestampType
-    the distributed writer produced (the r8 timezone seam, handled once
-    here)."""
-    import pyarrow as pa
+    file. Deduped and written with pyarrow, typed by the commit frame's
+    own schema (:func:`arrow_table`) so the file compares equal to the
+    stored key columns: collected TimestampType values (OS-local naive,
+    the PySpark collect convention) become UTC instants written
+    tz-adjusted — Spark reads them back as the same TimestampType the
+    distributed writer produced (the r8 timezone seam)."""
     import pyarrow.parquet as pq
+
+    from pyspark.sql.types import StructType
 
     uniq = list({tuple(t) for t in tuples})
     if not uniq:
         return []
-    arrays = {}
-    for i, c in enumerate(cols):
-        vals = [t[i] for t in uniq]
-        if df.schema[c].dataType.typeName() == "timestamp":
-            vals = [
-                v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                if isinstance(v, _dt.datetime)
-                else v
-                for v in vals
-            ]
-            arrays[c] = pa.array(vals, type=pa.timestamp("us", tz="UTC"))
-        else:
-            arrays[c] = pa.array(vals)
-    table = pa.table(arrays)
+    table = arrow_table(uniq, StructType([df.schema[c] for c in cols]))
     dest = Path(path) / DV_DIR / f"eqdv-{uuid.uuid4().hex[:12]}"
     dest.mkdir(parents=True, exist_ok=True)
     f = dest / "part-00000-local.parquet"
@@ -2218,7 +2218,7 @@ def delete_by_keys(
         raise FileNotFoundError(f"no snapshots at {path}")
     cols = list(cols or keys.columns)
     try:
-        table_cols = set(_empty_like(spark, path).columns)
+        table_cols = _table_columns(path)
     except ValueError:
         return head  # no data files in any version — nothing to delete
     missing = [c for c in cols if c not in table_cols]
@@ -2239,9 +2239,11 @@ def delete_by_keys(
     # existing shape): one bounded collect replaces the distributed
     # distinct+coalesce(1) write job AND its footer-stat read, ~3 jobs
     # per erasure at fixture scale. Larger key sets keep the
-    # distributed write.
+    # distributed write. The probe reads the RAW keys (no shuffle):
+    # _write_local_eq_keys dedups, so the one distinct runs only on the
+    # over-bound path.
     kdf = keys.select(*cols)
-    probe = kdf.distinct().limit(_EQ_LOCAL_MAX_KEYS + 1).collect()
+    probe = kdf.limit(_EQ_LOCAL_MAX_KEYS + 1).collect()
     if len(probe) <= _EQ_LOCAL_MAX_KEYS:
         entries = _write_local_eq_keys(
             kdf, path, cols, [tuple(r) for r in probe]
@@ -2320,7 +2322,7 @@ def upsert_by_keys(
             return head  # replayed micro-batch — no-op
     cols = list(cols)
     try:
-        table_cols = set(_empty_like(df.sparkSession, path).columns)
+        table_cols = _table_columns(path)
     except ValueError:
         # no data files in any version: the append IS the first data, so
         # the key cols need only exist in what is being written
@@ -2337,12 +2339,13 @@ def upsert_by_keys(
         # refreshers' shape: write the key file driver-side, no job
         entries = _write_local_eq_keys(df, path, cols, keys)
     else:
-        key_rows = (keys if keys is not None else df).select(*cols).distinct()
+        key_rows = (keys if keys is not None else df).select(*cols)
         # r17: bounded key sets collect and write driver-side, like
         # delete_by_keys — one collect replaces the distributed
         # coalesce(1) write job + footer read; larger sets keep the
         # distributed ONE-part-file write (each entry costs every future
-        # read a broadcast anti-join until compaction materializes it)
+        # read a broadcast anti-join until compaction materializes it).
+        # Raw-key probe, distinct only past the bound (as delete_by_keys)
         probe = key_rows.limit(_EQ_LOCAL_MAX_KEYS + 1).collect()
         if len(probe) <= _EQ_LOCAL_MAX_KEYS:
             entries = _write_local_eq_keys(
@@ -2350,7 +2353,7 @@ def upsert_by_keys(
             )
         else:
             entries = _write_dv_entries(
-                key_rows.coalesce(1), path, "eqdv", {"cols": cols}
+                key_rows.distinct().coalesce(1), path, "eqdv", {"cols": cols}
             )
     new = _write_txn(df, path, ts_col=ts_col)
     txn = (txn_app, int(txn_id)) if txn_app is not None else None

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..localframe import local_frame
+
 MG_STREAM_K = 64
 
 
@@ -57,8 +59,8 @@ def mg_flush_partial(batch: DataFrame, key: str, k: int = MG_STREAM_K) -> DataFr
         .collect()
     )
     if not rows:  # empty batch: still append bookkeeping so n merges right
-        return spark.createDataFrame(
-            [(None, 0, 0, 0)], "key string, est long, d long, n long"
+        return local_frame(
+            spark, [(None, 0, 0, 0)], "key string, est long, d long, n long"
         )
     n = int(rows[0]["c"])  # rollup grand-total row (key IS NULL)
     top = rows[1:]
@@ -67,7 +69,7 @@ def mg_flush_partial(batch: DataFrame, key: str, k: int = MG_STREAM_K) -> DataFr
         (r["key"], int(r["c"] - sub), 0, 0) for r in top[:k] if r["c"] - sub > 0
     ]
     out = kept + [(None, 0, int(sub), n)]
-    return spark.createDataFrame(out, "key string, est long, d long, n long")
+    return local_frame(spark, out, "key string, est long, d long, n long")
 
 
 def merge_heavy_hitters(partials: DataFrame, top_n: int = 20) -> DataFrame:

@@ -121,3 +121,20 @@ def test_corpus_pack_bpe_matches_python_recompute(spark):
         for r in B.corpus_pack_bpe(spark, SF_SMOKE).collect()
     }
     assert got == dict(want)
+
+
+def test_doc_bpe_tokens_opens_the_corpus_once(spark, monkeypatch):
+    """Training and encoding share one filtered ``documents`` frame: each
+    open is a schema-inference job, so the corpus is opened once."""
+    opened, real = [], B.load
+
+    def spy(spark_, sf_dir, name):
+        opened.append(name)
+        return real(spark_, sf_dir, name)
+
+    monkeypatch.setattr(B, "load", spy)
+    monkeypatch.setattr(B, "_MERGE_MEMO", {})
+    B.doc_bpe_tokens(spark, SF_SMOKE).collect()
+    assert opened == ["documents"]
+    plan = B.corpus_bpe_merges(spark, SF_SMOKE)._jdf.queryExecution()
+    assert "LocalTableScan" in plan.executedPlan().toString()

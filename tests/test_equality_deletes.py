@@ -303,3 +303,47 @@ def test_local_join_width_mismatch_falls_back_to_distributed(spark, tmp_path, mo
         assert _ids(S.read_snapshot(spark, path)) == [0, 2, 3, 5]
     finally:
         monkeypatch.setattr(pa, "concat_tables", real_concat)
+
+
+def _probe_plans(spark, monkeypatch):
+    """Record the executed plan of every collect() — the key probe is the
+    only collect delete_by_keys/upsert_by_keys run."""
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    plans, real = [], frame.collect
+
+    def spy(self):
+        out = real(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(frame, "collect", spy)
+    return plans
+
+
+@pytest.mark.parametrize("bound", [3, 4, 16])
+def test_duplicate_heavy_keys_read_the_same_on_both_sides_of_the_bound(
+    spark, tmp_path, monkeypatch, bound
+):
+    """The key probe reads the RAW keys (no distinct shuffle) and the one
+    distinct runs only on the over-bound write. 4 distinct keys in 10 raw
+    rows: bound 3 is over on both counts, 4 is within the distinct count
+    but over the raw one, 16 is within both — every side must erase the
+    same rows, through delete_by_keys and upsert_by_keys alike."""
+    monkeypatch.setattr(S, "_EQ_LOCAL_MAX_KEYS", bound)
+    ids = [1, 1, 1, 4, 4, 7, 7, 7, 8, 8]
+    path, up = str(tmp_path / "d"), str(tmp_path / "u")
+    for p in (path, up):
+        S.append(_batch(spark, 1, range(10)), p)
+    plans = _probe_plans(spark, monkeypatch)
+    S.delete_by_keys(spark, path, _keys(spark, ids))
+    S.upsert_by_keys(
+        _batch(spark, 1, [100]), up, cols=["trade_id"], keys=_keys(spark, ids)
+    )
+    monkeypatch.undo()
+    assert _ids(S.read_snapshot(spark, path)) == [0, 2, 3, 5, 6, 9]
+    assert _ids(S.read_snapshot(spark, up)) == [0, 2, 3, 5, 6, 9, 100]
+    for p in (path, up):
+        assert S.manifest(p, S.latest_version(p))["eq_dvs"][0]["rows"] == 4
+    if bound >= len(ids):  # the local path: the probe never shuffles
+        assert len(plans) == 2
+        assert not [p for p in plans if "Exchange" in p]

@@ -6,6 +6,7 @@ atomic rebuild; partial-merge compaction is read-invisible."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -639,3 +640,36 @@ def test_unclustered_base_without_scope_key_col_stays_silent(spark, paths):
         W.simplefilter("always")
         M.refresh_rollup(spark, base, mv)
     assert not [w for w in rec if "scope_key_col" in str(w.message)]
+
+
+def test_scoped_erasure_refresh_under_non_utc_os_tz_equals_rebuild(
+    spark, tmp_path
+):
+    """The scoped swap's group keys travel collect -> prune bounds ->
+    local semi-join frame -> eq-delete key file. Collected as Arrow they
+    are UTC instants end to end; under an OS timezone five hours off UTC
+    a key re-read as OS-local would mis-prune the pinned-head scan by the
+    offset and leave the erased groups' surviving rows out (or keep the
+    stale partials). The refresh must stay scoped and equal a rebuild."""
+    import time as _time
+
+    base, mv, mv2 = (str(tmp_path / n) for n in ("base", "mv", "mv2"))
+    S.append(_batch(spark, range(60)), base)
+    M.refresh_rollup(spark, base, mv)
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    _time.tzset()
+    try:
+        S.delete_where(spark, base, "trade_id in (4, 7)")
+        v = M.refresh_rollup(spark, base, mv)
+        assert S.manifest(mv, v)["op"] == "upsert"
+        M.rebuild_rollup(spark, base, mv2)
+        got = _rows(M.read_rollup(spark, mv))
+        assert got == _rows(M.read_rollup(spark, mv2))
+        assert got == _rows(bars_batch(S.read_snapshot(spark, base)))
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        _time.tzset()

@@ -110,8 +110,12 @@ def test_empty_like_is_local_and_matches_read_schema(spark, tmp_path):
     empty = S._empty_like(spark, path)
     real = S.read_snapshot(spark, path, keep_txn=True)
     assert empty.dtypes == real.dtypes and empty.count() == 0
-    # jobless by construction: a local empty relation, not a file scan
-    assert "parquet" not in empty._jdf.queryExecution().executedPlan().toString()
+    # jobless by construction: a local empty relation, not a file scan —
+    # and a JVM-only one, not a pickled Python RDD whose count() forks
+    # Python workers
+    plan = empty._jdf.queryExecution().executedPlan().toString()
+    assert "parquet" not in plan
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
 def test_stream_schema_comes_from_the_log(spark, tmp_path):
