@@ -83,24 +83,6 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pair_jaccard(cand: DataFrame, toks: DataFrame) -> DataFrame:
-    """Join candidate (doc_a, doc_b) pairs back to shingle sets and compute
-    exact jaccard. Integer set sizes + one double division → bit-exact and
-    oracle-reproducible."""
-    out = (
-        cand.join(
-            toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a")), "doc_a"
-        )
-        .join(toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b")), "doc_b")
-        .withColumn("common", F.size(F.array_intersect("toks_a", "toks_b")))
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.size("toks_a") + F.size("toks_b") - F.col("common")),
-        )
-    )
-    return out.select("doc_a", "doc_b", "jaccard")
-
-
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group by content digest, keep min doc_id as canonical.
 

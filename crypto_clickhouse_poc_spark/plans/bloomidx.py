@@ -151,8 +151,7 @@ def build_bloom_index(spark: SparkSession, path: str, key_col: str) -> dict | No
     if not m["files"]:
         return None  # empty head (e.g. retention dropped every month)
     df = S._read_files(
-        spark, path, m["files"], merge_schema=True,
-        schema=m.get("schema"), renames=m.get("renames"),
+        spark, path, m["files"], schema=m["schema"], renames=m.get("renames"),
     )
     kind = df.schema[key_col].dataType.typeName()
     if kind not in ("integer", "long", "short", "byte", "string", "date"):
@@ -344,8 +343,7 @@ def extend_bloom_index(spark: SparkSession, path: str, key_col: str) -> dict | N
             # by full rebuild (reserved for exactly this and key changes)
             return build_bloom_index(spark, path, key_col)
         df = S._read_files(
-            spark, path, new_files, merge_schema=True,
-            schema=m.get("schema"), renames=m.get("renames"),
+            spark, path, new_files, schema=m["schema"], renames=m.get("renames"),
         )
         kind = df.schema[key_col].dataType.typeName()
         if kind not in ("integer", "long", "short", "byte", "string", "date"):
@@ -685,8 +683,7 @@ def read_points(
     df = S._apply_dvs(
         spark,
         S._read_files(
-            spark, path, files, merge_schema=True,
-            schema=m.get("schema"), renames=m.get("renames"),
+            spark, path, files, schema=m["schema"], renames=m.get("renames"),
         ),
         m,
         path,

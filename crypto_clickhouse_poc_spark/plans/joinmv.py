@@ -181,8 +181,7 @@ def _read_fact_keys(
     df = S._apply_dvs(
         spark,
         S._read_files(
-            spark, fact_path, files, merge_schema=True,
-            schema=m.get("schema"), renames=m.get("renames"),
+            spark, fact_path, files, schema=m["schema"], renames=m.get("renames"),
         ),
         m,
         fact_path,

@@ -76,13 +76,17 @@ import shutil
 import time as _time
 import uuid
 from pathlib import Path
-from typing import Sequence
+from typing import TYPE_CHECKING, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 
 from ..localframe import arrow_table, local_frame
 from .layout import PARTITION_COL, dedup_view, with_partition_col
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 LOG_DIR = "_log"
 FORMAT_VERSION = 1
@@ -150,17 +154,25 @@ def manifest(path: str, version: int, months: tuple[str, str] | None = None) -> 
     pruning one level up: a months-pruned read of a million-file table
     never even parses the other months' metadata)."""
     m = _version_body(path, version)
-    if "files" not in m:
-        refs = m["files_ref"]
-        if months is not None:
-            lo, hi = months
-            refs = [r for r in refs if lo <= r["p_month"] <= hi]
-        m["files"] = [
-            f
-            for r in refs
-            for f in json.loads((_log(path) / r["path"]).read_text())
-        ]
+    m["files"] = _body_files(path, m, months)
     return m
+
+
+def _body_files(
+    path: str, body: dict, months: tuple[str, str] | None = None
+) -> list[dict]:
+    """A version body's file entries: the inline list as it is, or the
+    month shards it references spliced back (only those in ``months``
+    when given)."""
+    if "files" in body:
+        return body["files"]
+    refs = body["files_ref"]
+    if months is not None:
+        lo, hi = months
+        refs = [r for r in refs if lo <= r["p_month"] <= hi]
+    return [
+        f for r in refs for f in json.loads((_log(path) / r["path"]).read_text())
+    ]
 
 
 def _version_body(path: str, version: int) -> dict:
@@ -484,7 +496,7 @@ def _widen_primitive(old: str, new: str) -> str | None:
 
 def _merge_types(old, new, path: str):
     """Recursive type merge for the logged schema — the StructType.merge
-    semantics Spark's own ``mergeSchema`` applies: nullability/
+    semantics Spark's Parquet schema union applies: nullability/
     containsNull UNION at every depth (``F.array(lits)`` gives
     containsNull=false where a parquet read-back gives true — both
     describe the same data), nested struct fields union additively
@@ -572,7 +584,7 @@ def _frame_schema(df: DataFrame) -> dict:
     }
 
 
-def _merge_schemas(parent: dict | None, new: dict | None) -> dict | None:
+def _evolve_schema(parent: dict | None, new: dict | None) -> dict | None:
     """The ADD COLUMN evolution rule for the logged schema: parent
     columns keep their positions, genuinely new columns append in frame
     order, and a same-name column must keep a merge-compatible type
@@ -802,12 +814,12 @@ def _commit(
             # (and the next compact would drop them). The winner's
             # chain already merged the append's columns: union them.
             schema = (
-                _merge_schemas(write_schema, head_m.get("schema"))
+                _evolve_schema(write_schema, head_m.get("schema"))
                 if rebased
                 else write_schema
             )
         elif schema_mode == "merge":
-            schema = _merge_schemas(head_m.get("schema"), write_schema)
+            schema = _evolve_schema(head_m.get("schema"), write_schema)
         elif schema_mode == "inherit":
             schema = head_m.get("schema")
         else:
@@ -1180,11 +1192,6 @@ def prune_files_by_values(
     return out
 
 
-def _current_files(path: str) -> list[dict]:
-    head = latest_version(path)
-    return [] if head is None else manifest(path, head)["files"]
-
-
 def last_txn(path: str, app: str) -> int | None:
     """The idempotent-writer watermark for ``app`` — highest batch id ever
     committed under it. Raw head body only: ``txns`` is always inline, so
@@ -1295,18 +1302,12 @@ def read_changes(
         # polling at the head with no new commits is the normal consumer
         # steady state — an empty delta, not an error
         return _empty_like(spark, path).drop(TXN_COL)
-    # change feeds must survive a schema-evolution boundary: with one
-    # arbitrary file's schema, an evolved column's values would be
-    # silently dropped from the delta. The range end's LOGGED schema
-    # covers every file added in the range (schemas only grow along an
-    # append range).
+    # change feeds must survive a schema-evolution boundary: the range
+    # end's LOGGED schema covers every file added in the range (schemas
+    # only grow along an append range)
+    body = _version_body(path, to)
     df = _read_files(
-        spark,
-        path,
-        added,
-        merge_schema=True,
-        schema=_version_body(path, to).get("schema"),
-        renames=_version_body(path, to).get("renames"),
+        spark, path, added, schema=body["schema"], renames=body.get("renames")
     )
     return df.drop(TXN_COL, _DV_FILE, _DV_POS)
 
@@ -1349,27 +1350,23 @@ _CDC_DELETING = (
 _CDC_COVERED = ("append",) + _CDC_DELETING
 
 
-# cap on driver-side key materialization for the CDC bloom prune: an
-# eq-delete's keys are small by delete_by_keys's contract (O(keys) is the
-# op's point); a pathological multi-million-key delete just skips pruning
+# cap on the recorded key count the CDC bloom prune reads driver-side:
+# an eq-delete's keys are small by delete_by_keys's contract (O(keys) is
+# the op's point); a pathological multi-million-key delete skips pruning
 _CDC_BLOOM_MAX_KEYS = 4096
 
 
 def _bloom_prune_files(
-    spark: SparkSession, path: str, key_col: str, kdf: DataFrame, files: list[dict]
+    spark: SparkSession, path: str, key_col: str, values: list, files: list[dict]
 ) -> list[dict]:
     """Prune a pre-delete scan's file list through the advisory per-file
-    Bloom sidecar, when one exists for ``key_col``. Deferred import:
-    bloomidx imports this module at its top level."""
+    Bloom sidecar, when one exists for ``key_col``, by the delete's key
+    ``values`` (a null key matches nothing, so it prunes nothing either).
+    Deferred import: bloomidx imports this module at its top level."""
     from . import bloomidx
 
-    if not bloomidx.index_exists(path, key_col):
-        return files
-    rows = kdf.select(key_col).limit(_CDC_BLOOM_MAX_KEYS + 1).collect()
-    if len(rows) > _CDC_BLOOM_MAX_KEYS:
-        return files
     return bloomidx.prune_file_list(
-        spark, path, key_col, [r[0] for r in rows], files
+        spark, path, key_col, [x for x in values if x is not None], files
     )
 
 
@@ -1466,10 +1463,9 @@ def read_changes_cdc(
             continue  # writer-declared layout-only commit
         added: list[dict] = []
         removed: list[dict] = []
-        # the commit's LOGGED schema reads both its added and its removed
-        # files exactly (removed files predate v, so v's schema is a
-        # superset and null-fills — the same semantics mergeSchema gave,
-        # without the footer union job)
+        # the commit's LOGGED schema reads every file a leg scans exactly
+        # (files that predate v null-fill the columns added since, and
+        # renamed/dropped columns follow v's column mapping)
         vbody = _version_body(path, v)
         vsch, vren = vbody.get("schema"), vbody.get("renames")
         if op in ("append", "merge", "retention", "upsert", "overwrite"):
@@ -1482,7 +1478,7 @@ def read_changes_cdc(
             # both sides (txn lineage excluded — a rewrite moves rows to
             # a new txn dir without changing them) and emit only the net
             new_rows = (
-                _read_files(spark, path, added, merge_schema=True, schema=vsch, renames=vren)
+                _read_files(spark, path, added, schema=vsch, renames=vren)
                 if added
                 else None
             )
@@ -1490,8 +1486,7 @@ def read_changes_cdc(
                 _apply_dvs(
                     spark,
                     _read_files(
-                        spark, path, removed, merge_schema=True,
-                        schema=vsch, renames=vren,
+                        spark, path, removed, schema=vsch, renames=vren
                     ),
                     _prev_like(v, removed),
                     path,
@@ -1523,8 +1518,7 @@ def read_changes_cdc(
             if op in ("append", "merge", "upsert", "overwrite") and added:
                 _tag(
                     _read_files(
-                        spark, path, added, merge_schema=True,
-                        schema=vsch, renames=vren,
+                        spark, path, added, schema=vsch, renames=vren
                     ),
                     "insert",
                     v,
@@ -1535,34 +1529,38 @@ def read_changes_cdc(
                 gone = _apply_dvs(
                     spark,
                     _read_files(
-                        spark, path, removed, merge_schema=True,
-                        schema=vsch, renames=vren,
+                        spark, path, removed, schema=vsch, renames=vren
                     ),
                     _prev_like(v, removed),
                     path,
                 )
                 _tag(gone, "delete", v)
         if op == "delete":
-            prev = (
-                set()
-                if v == 0
-                else {e["path"] for e in _version_body(path, v - 1).get("dvs", [])}
-            )
+            pb = {} if v == 0 else _version_body(path, v - 1)
+            prev = {e["path"] for e in pb.get("dvs", [])}
             new_dvs = [
                 e for e in _version_body(path, v)["dvs"] if e["path"] not in prev
             ]
             if new_dvs:
-                dv = spark.read.parquet(
-                    *[str(Path(path) / e["path"]) for e in new_dvs]
+                dv = _read_dvs(spark, path, new_dvs)
+                # the files the vectors name: one shuffle-free job (under
+                # AQE a distinct's exchange is a job of its own) moving
+                # the column as Arrow — O(deleted rows), the size the
+                # broadcast below gives the driver anyway
+                targets = set(
+                    dv.select(_DV_FILE).toArrow().column(0).unique().to_pylist()
                 )
-                # distinct target files: bounded by the table's FILE count
-                targets = [r[0] for r in dv.select(_DV_FILE).distinct().collect()]
-                scan = (
-                    spark.read.option("basePath", str(_data(path)))
-                    .option("mergeSchema", "true")
-                    .parquet(*[str(Path(path) / p) for p in targets])
-                    .withColumn(_DV_FILE, _dv_file_expr())
-                    .withColumn(_DV_POS, F.col("_metadata.row_index"))
+                # their v-1 entries, splicing only the targets' month
+                # shards (the `p_month=` directory each path names)
+                months = sorted(Path(t).parent.name.split("=", 1)[1] for t in targets)
+                files = [
+                    f
+                    for f in _body_files(path, pb, (months[0], months[-1]))
+                    if f["path"] in targets
+                ]
+                scan = _read_files(spark, path, files, schema=vsch, renames=vren)
+                scan = scan.withColumn(_DV_FILE, _file_expr_for(scan)).withColumn(
+                    _DV_POS, _pos_expr_for(scan)
                 )
                 hit = scan.join(
                     F.broadcast(dv), [_DV_FILE, _DV_POS], "left_semi"
@@ -1581,24 +1579,16 @@ def read_changes_cdc(
             ]
             if new_eq and v > 0:  # nothing is visible before v0
                 m_prev = manifest(path, v - 1)
+                vst = StructType.fromJson(vsch)
                 # one semi-join per key-column set; a commit's entries share
                 # cols (one delete_by_keys call), so this is one join in
-                # practice — union the key files first to keep it that way
+                # practice
                 by_cols: dict[tuple, list] = {}
                 for e in new_eq:
-                    by_cols.setdefault(tuple(e["cols"]), []).append(
-                        (e["path"], tuple(e.get("fcols", e["cols"])))
-                    )
-                for cols, entries2 in by_cols.items():
-                    kparts = []
-                    for kp, efc in entries2:
-                        kf = spark.read.parquet(str(Path(path) / kp))
-                        if efc != cols:
-                            kf = kf.withColumnsRenamed(dict(zip(efc, cols)))
-                        kparts.append(kf)
-                    kdf = kparts[0]
-                    for kf in kparts[1:]:
-                        kdf = kdf.unionByName(kf)
+                    by_cols.setdefault(tuple(e["cols"]), []).append(e)
+                for cols, entries in by_cols.items():
+                    # keys typed by the frame they filter: v's schema
+                    kst = StructType([vst[c] for c in cols])
                     # the pre-delete scan is this feed's one documented
                     # O(base) leg; a per-file Bloom sidecar on any key
                     # column (plans/bloomidx) prunes it to the files
@@ -1610,21 +1600,23 @@ def read_changes_cdc(
                     # provably lacks the composite row, so intersecting
                     # the per-column maybe-sets is sound (r11)
                     files = m_prev["files"]
-                    for c in cols:
-                        if not files:
-                            break
-                        files = _bloom_prune_files(spark, path, c, kdf, files)
+                    if sum(e["rows"] for e in entries) <= _CDC_BLOOM_MAX_KEYS:
+                        keys = _eq_keys_table(path, entries, kst)
+                        for c in cols:
+                            if not files:
+                                break
+                            files = _bloom_prune_files(
+                                spark, path, c, keys.column(c).to_pylist(), files
+                            )
                     if not files:
                         continue  # every file provably lacks every key
                     base = _apply_dvs(
                         spark,
-                        _read_files(
-                            spark, path, files, merge_schema=True,
-                            schema=vsch, renames=vren,
-                        ),
+                        _read_files(spark, path, files, schema=vsch, renames=vren),
                         m_prev,
                         path,
                     ).drop(TXN_COL)
+                    kdf = _eq_keys_frame(spark, path, entries, kst).drop("_eq_v")
                     _tag(
                         base.join(F.broadcast(kdf), list(cols), "left_semi"),
                         "delete",
@@ -1676,7 +1668,7 @@ def _empty_like(spark: SparkSession, path: str) -> DataFrame:
     appended with the types path inference gives a real read (txn
     string, p_month int). A table that has never been written has no
     schema and raises."""
-    from pyspark.sql.types import IntegerType, StringType, StructType
+    from pyspark.sql.types import IntegerType, StringType
 
     st = (
         StructType.fromJson(head_schema(path))
@@ -1731,19 +1723,20 @@ def _apply_dvs(spark: SparkSession, df: DataFrame, m: dict, path: str) -> DataFr
       vector holds KEY VALUES; a row is dropped when its keys match any
       delete row AND its file was added BEFORE the delete committed
       (``added_v < entry.v`` — the sequence rule that lets the same key
-      be re-inserted after the delete). One broadcast anti-join per
-      equality-delete commit; compaction materializes and clears both.
+      be re-inserted after the delete). One row filter, or one broadcast
+      anti-join per key-column set; compaction materializes and clears
+      both.
 
     Both sides are broadcast; rows from files no vector mentions pass
     through the hash lookups untouched; no data file is ever rewritten
-    by a delete."""
+    by a delete, and no delete file is opened for schema inference."""
     dvs, eq = m.get("dvs", []), m.get("eq_dvs", [])
     if not dvs and not eq:
         # drop is a no-op unless the era read materialized them
         return df.drop(_DV_FILE, _DV_POS)
     tagged = df.withColumn(_DV_FILE, _file_expr_for(df))
     if dvs:
-        dv = spark.read.parquet(*[str(Path(path) / e["path"]) for e in dvs])
+        dv = _read_dvs(spark, path, dvs)
         tagged = tagged.withColumn(_DV_POS, _pos_expr_for(tagged))
         cond = (tagged[_DV_FILE] == dv[_DV_FILE]) & (tagged[_DV_POS] == dv[_DV_POS])
         tagged = tagged.join(F.broadcast(dv), cond, "left_anti").drop(_DV_POS)
@@ -1756,11 +1749,116 @@ def _apply_dvs(spark: SparkSession, df: DataFrame, m: dict, path: str) -> DataFr
     return tagged.drop(_DV_FILE, _DV_POS)
 
 
-# driver-side key-read bound for the LOCAL join plan: the scoped-swap
-# entries (composite (minute, symbol) group keys) are bounded by the MV
-# modules' max_scoped_* caps at exactly this value, so the routine case
-# always qualifies; a genuinely huge key set keeps the distributed scans
+def _read_dvs(spark: SparkSession, path: str, dvs: list[dict]) -> DataFrame:
+    """The position-delete vectors ``dvs`` (manifest entries) as one scan
+    with their fixed schema — the one reader of DV files."""
+    return spark.read.schema(f"{_DV_FILE} string, {_DV_POS} long").parquet(
+        *[str(Path(path) / e["path"]) for e in dvs]
+    )
+
+
+# recorded-key bound for the LOCAL key frame: the scoped-swap entries
+# (composite (minute, symbol) group keys) are bounded by the MV modules'
+# max_scoped_* caps at exactly this value, so the routine case always
+# qualifies; a genuinely huge key set is scanned instead
 _EQ_LOCAL_MAX_KEYS = 65_536
+
+
+def _exact_cast(col: pa.ChunkedArray, typ: pa.DataType) -> pa.ChunkedArray:
+    """``col`` cast to ``typ``; a value ``typ`` cannot hold exactly (a long
+    past the int range, a sub-microsecond instant) becomes null — it
+    equals no value of the column the key filters, and a null key
+    matches nothing. A naive timestamp is read as a UTC instant: every
+    writer of key files stores UTC epoch values."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if col.type == typ:
+        return col
+    out = pc.cast(col, typ, safe=False)
+    same = pc.equal(pc.cast(out, col.type, safe=False), col)
+    return pc.if_else(same, out, pa.scalar(None, typ))
+
+
+def _eq_keys(path: str, e: dict, types: pa.Schema) -> pa.Table:
+    """One equality-delete entry's key rows — the one reader of key
+    files: its ``fcols`` (the names the file was written with, r14
+    column mapping) read driver-side with pyarrow, O(keys), named by the
+    entry's logical ``cols`` and typed by ``types``, the Arrow types of
+    those columns in the frame the keys filter (:func:`_exact_cast`). A
+    key file written before a type widening thus reads like one written
+    after it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fcols = e.get("fcols", e["cols"])
+    t = pq.read_table(str(Path(path) / e["path"]), columns=list(fcols))
+    return pa.Table.from_arrays(
+        [_exact_cast(t.column(fc), f.type) for fc, f in zip(fcols, types)],
+        names=types.names,
+    )
+
+
+def _eq_keys_table(path: str, entries: list[dict], key_schema: StructType) -> pa.Table:
+    """The keys of same-``cols`` ``entries`` as one Arrow table typed by
+    ``key_schema`` (the filtered frame's key columns; ``to_arrow_schema``
+    makes a TimestampType ``timestamp[us, UTC]``, an exact instant with
+    no session-timezone re-entry — the r8 seam), each row carrying its
+    entry's commit version as ``_eq_v``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    types = to_arrow_schema(key_schema)
+    parts = []
+    for e in entries:
+        t = _eq_keys(path, e, types)
+        parts.append(
+            t.append_column("_eq_v", pa.array([int(e["v"])] * t.num_rows, pa.int64()))
+        )
+    return pa.concat_tables(parts)
+
+
+def _eq_keys_frame(
+    spark: SparkSession, path: str, entries: list[dict], key_schema: StructType
+) -> DataFrame:
+    """The keys of same-``cols`` ``entries`` as one frame typed by
+    ``key_schema`` and carrying ``_eq_v``. Within ``_EQ_LOCAL_MAX_KEYS``
+    recorded keys it is a local relation over :func:`_eq_keys_table` —
+    the Arrow table goes to Spark directly (SPARK-44533), never through
+    pandas, whose int64-with-nulls → float64 upcast would mis-compare
+    keys above 2^53 (r13 advice). Past the bound it is one
+    explicit-schema scan per key file: an integral key reads as long
+    (Spark's Parquet reader widens a narrower file column but refuses to
+    narrow a wider one) and is try-cast to the frame's type, so a key
+    the type cannot hold becomes null, as in :func:`_exact_cast`."""
+    if sum(e["rows"] for e in entries) <= _EQ_LOCAL_MAX_KEYS:
+        return local_frame(spark, _eq_keys_table(path, entries, key_schema))
+    frames = []
+    for e in entries:
+        fcols = e.get("fcols", e["cols"])
+        read = StructType(
+            [
+                StructField(
+                    fc,
+                    LongType() if isinstance(f.dataType, IntegralType) else f.dataType,
+                )
+                for fc, f in zip(fcols, key_schema)
+            ]
+        )
+        kf = spark.read.schema(read).parquet(str(Path(path) / e["path"]))
+        frames.append(
+            kf.select(
+                *[
+                    kf[fc].try_cast(f.dataType).alias(f.name)
+                    for fc, f in zip(fcols, key_schema)
+                ],
+                F.lit(int(e["v"])).cast("long").alias("_eq_v"),
+            )
+        )
+    out = frames[0]
+    for fr in frames[1:]:
+        out = out.unionByName(fr)
+    return out
 
 
 def _sql_str(s: str) -> str:
@@ -1769,17 +1867,19 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _added_v_map(files: list[dict]) -> Column:
-    """The manifest's file→added_v lookup as ONE parsed SQL ``map(...)``
-    expression: the ``F.create_map(*[F.lit(..), F.lit(..)])`` build it
-    replaces costs 2 py4j round trips per manifest file (~0.5 ms each,
-    measured r13) — ~0.5 s of pure driver time per read of a 500-file
-    eq-carrying table; one ``F.expr`` parse is ~1 ms regardless of file
-    count (the same one-parse rule as ``functions/vectors.py``)."""
+def _added_v_sql(files: list[dict]) -> str:
+    """Each row's source-file ``added_v`` (0 for a file not listed) as ONE
+    SQL expression over ``_dv_target_file``: the manifest's file→added_v
+    lookup as a parsed literal ``map(...)``. The
+    ``F.create_map(*[F.lit(..), F.lit(..)])`` build it replaces costs 2
+    py4j round trips per manifest file (~0.5 ms each, measured r13) —
+    ~0.5 s of pure driver time per read of a 500-file eq-carrying table;
+    one parse is ~1 ms regardless of file count (the same one-parse rule
+    as ``functions/vectors.py``)."""
     entries = ",".join(
         f"{_sql_str(f['path'])},{int(f['added_v'])}L" for f in files
     )
-    return F.expr(f"map({entries})")
+    return f"coalesce(element_at(map({entries}), `{_DV_FILE}`), 0L)"
 
 
 def _join_eq_filter(
@@ -1789,29 +1889,16 @@ def _join_eq_filter(
     row filter (:func:`_inline_eq_filter`) declines — composite keys (a
     scoped MV swap's (minute, symbol) groups) and large key sets.
 
-    Cheap case (r13 — every read of a scoped-swapped MV was paying ~1.4 s
-    of fixed plan overhead): when the total recorded key count is bounded
-    (``_EQ_LOCAL_MAX_KEYS``), the key sets are read DRIVER-side (pyarrow,
-    O(keys)) and grouped by key-column tuple into ONE local broadcast
-    frame per col-set carrying its entry version as ``_eq_v`` — one
-    broadcast anti-join total per col-set (usually one), no per-entry
-    parquet scan jobs. The ``added_v < entry.v`` sequencing rides the
-    join condition row-wise, so merging entries of the same col-set is
+    ONE broadcast anti-join per key-column set (usually one) over
+    :func:`_eq_keys_frame`, whose rows carry their entry version as
+    ``_eq_v``: the ``added_v < entry.v`` sequencing rides the join
+    condition row-wise, so merging entries of the same col-set is
     exactly the OR of their per-entry conditions. ``added_v`` comes from
-    a literal file→version map when the manifest is small (zero extra
-    joins), else from one broadcast files-frame join.
-
-    Timestamps read tz-aware UTC (our writers produce TIMESTAMP_MICROS /
-    tz-stamped key files) reach Spark as Arrow ``timestamp[us, UTC]``:
-    exact instants, no session-timezone re-entry (the r8 seam).
-
-    Fallback: past the key bound, the original distributed plan — one
-    parquet scan + broadcast anti-join per entry."""
+    the literal file→version map when the manifest is small (zero extra
+    joins), else from one broadcast files-frame join."""
     files_small = len(m["files"]) <= _EQ_INLINE_MAX_FILES
     if files_small:
-        added_v = F.coalesce(
-            F.element_at(_added_v_map(m["files"]), tagged[_DV_FILE]), F.lit(0)
-        )
+        added_v = F.expr(_added_v_sql(m["files"]))
     else:
         added = local_frame(
             spark,
@@ -1820,87 +1907,24 @@ def _join_eq_filter(
         )
         tagged = tagged.join(F.broadcast(added), _DV_FILE, "left")
         added_v = F.coalesce(tagged["_added_v"], F.lit(0))
-    total_keys = sum(e.get("rows", 1 << 62) for e in eq)
-    if total_keys <= _EQ_LOCAL_MAX_KEYS:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        by_cols: dict[tuple, list] = {}
-        for e in eq:
-            cols = tuple(e["cols"])
-            # fcols (r14 column mapping): the key FILE keeps the names it
-            # was written with; a rename moves the logical cols only
-            fcols = tuple(e.get("fcols", e["cols"]))
-            t = pq.read_table(str(Path(path) / e["path"]), columns=list(fcols))
-            if fcols != cols:
-                t = t.rename_columns(
-                    [dict(zip(fcols, cols)).get(c, c) for c in t.column_names]
-                )
-            for i, f in enumerate(t.schema):
-                # all our writers produce UTC-epoch timestamps (TIMESTAMP_
-                # MICROS isAdjustedToUTC, or the driver-side tz="UTC"
-                # files); a naive field here is still physically UTC epoch
-                # micros/nanos, so attaching tz=UTC is a metadata-only
-                # reinterpretation — and unifying on [us, UTC] lets
-                # entries from different writers concat. The local frame
-                # then carries exact instants, no session-timezone
-                # re-entry (the r8 seam).
-                if pa.types.is_timestamp(f.type):
-                    t = t.set_column(
-                        i, f.name,
-                        t.column(i).cast(pa.timestamp("us", tz="UTC")),
-                    )
-            t = t.append_column(
-                "_eq_v", pa.array([int(e["v"])] * t.num_rows, pa.int64())
-            )
-            by_cols.setdefault(cols, []).append(t)
-        for cols, tables in by_cols.items():
-            try:
-                # the arrow table goes to Spark DIRECTLY (SPARK-44533) —
-                # never through pandas, whose int64-with-nulls → float64
-                # upcast would silently mis-compare key values above 2^53
-                # against the stored long column (r13 advice)
-                kdf = local_frame(
-                    spark,
-                    pa.concat_tables(tables) if len(tables) > 1 else tables[0],
-                )
-            except Exception:
-                # same-col-set entries written with different physical
-                # widths (ArrowInvalid on concat) or an arrow type the
-                # session can't map — fall back to the per-entry
-                # distributed plan for THIS col-set only
-                for e in eq:
-                    if tuple(e["cols"]) != cols:
-                        continue
-                    kdf = spark.read.parquet(str(Path(path) / e["path"]))
-                    efc = e.get("fcols", e["cols"])
-                    if list(efc) != list(e["cols"]):
-                        kdf = kdf.withColumnsRenamed(dict(zip(efc, e["cols"])))
-                    cond = added_v < F.lit(int(e["v"]))
-                    for c in cols:
-                        cond = cond & (tagged[c] == kdf[c])
-                    tagged = tagged.join(F.broadcast(kdf), cond, "left_anti")
-                continue
-            cond = added_v < kdf["_eq_v"]
-            for c in cols:
-                cond = cond & (tagged[c] == kdf[c])
-            tagged = tagged.join(F.broadcast(kdf), cond, "left_anti")
-    else:
-        for e in eq:
-            kdf = spark.read.parquet(str(Path(path) / e["path"]))
-            fcols = e.get("fcols", e["cols"])
-            if list(fcols) != list(e["cols"]):
-                kdf = kdf.withColumnsRenamed(dict(zip(fcols, e["cols"])))
-            cond = added_v < F.lit(e["v"])
-            for c in e["cols"]:
-                cond = cond & (tagged[c] == kdf[c])
-            tagged = tagged.join(F.broadcast(kdf), cond, "left_anti")
-    return tagged.drop("_added_v") if not files_small else tagged
+    by_cols: dict[tuple, list] = {}
+    for e in eq:
+        by_cols.setdefault(tuple(e["cols"]), []).append(e)
+    schema = tagged.schema
+    for cols, entries in by_cols.items():
+        kdf = _eq_keys_frame(
+            spark, path, entries, StructType([schema[c] for c in cols])
+        )
+        cond = added_v < kdf["_eq_v"]
+        for c in cols:
+            cond = cond & (tagged[c] == kdf[c])
+        tagged = tagged.join(F.broadcast(kdf), cond, "left_anti")
+    return tagged if files_small else tagged.drop("_added_v")
 
 
 # _inline_eq_filter bounds: past these the literal plan (an In over the
 # keys, a create_map over the files) stops beating the LOCAL broadcast
-# anti-join (_join_eq_filter's cheap case). The bound is NOT plan size —
+# anti-join (_join_eq_filter's local key frame). The bound is NOT plan size —
 # it's literal-construction cost: PySpark's Column.isin makes one py4j
 # round trip per value, measured ~0.55 s for a 1,031-key IN vs ~0.05 s
 # for the local-frame anti-join of the same keys (r13 re-measurement;
@@ -1917,69 +1941,51 @@ def _inline_eq_filter(tagged: DataFrame, m: dict, path: str, eq: list[dict]):
     of the files→added_v frame plus, per eq entry, a parquet scan and a
     broadcast anti-join — even for a 16-row dim with a 1-key delete.
     When every entry is single-column with a small recorded key count and
-    the manifest is small, read the keys DRIVER-side (pyarrow, O(keys))
-    and express the whole merge as ONE row filter: a typed literal IN per
-    entry, sequenced by a file→added_v literal map. Same semantics as
-    the join path (null keys never match; ``added_v < entry.v``), zero
-    extra jobs. TEMPORAL keys (r13) ride the same path as epoch INTEGERS:
-    the filter compares ``unix_micros(col)`` / ``unix_date(col)`` against
-    int literals cast straight from the arrow epoch values — both sides
+    the manifest is small, read the keys driver-side (:func:`_eq_keys`,
+    typed by ``tagged``'s column) and express the whole merge as ONE row
+    filter: a typed literal IN per entry, sequenced by the file→added_v
+    literal map (:func:`_added_v_sql`). Same semantics as the join path
+    (null keys never match; ``added_v < entry.v``), zero extra jobs.
+    TEMPORAL keys (r13) ride the same path as epoch INTEGERS: the filter
+    compares ``unix_micros(col)`` / ``unix_date(col)`` against int
+    literals cast straight from the arrow epoch values — both sides
     timezone-free, so the r8 session-timezone seam (a datetime literal
     re-entering through the session zone) never opens. Returns None when
-    the case is not small or the stored column's type doesn't match the
-    key file's temporal kind (the join path compares stored values)."""
+    the case is not small or a key type has no literal form here
+    (binary/decimal keys: the join path compares stored values)."""
     if len(m["files"]) > _EQ_INLINE_MAX_FILES:
         return None
     if not all(
-        len(e["cols"]) == 1 and 0 < e.get("rows", 1 << 62) <= _EQ_INLINE_MAX_KEYS
-        for e in eq
+        len(e["cols"]) == 1 and 0 < e["rows"] <= _EQ_INLINE_MAX_KEYS for e in eq
     ):
         return None
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    dtypes = dict(tagged.dtypes)
+    from ..functions.vectors import _dbl_sql
+
+    schema = tagged.schema
     key_sets = []  # (key SQL expr string, [value SQL literals], entry v)
     for e in eq:
         col = e["cols"][0]
-        fcol = e.get("fcols", e["cols"])[0]  # name as written in the key file
-        t = pq.read_table(str(Path(path) / e["path"]), columns=[fcol])
-        if fcol != col:
-            t = t.rename_columns([col])
-        ftype = t.schema.field(col).type
+        keys = _eq_keys(path, e, to_arrow_schema(StructType([schema[col]]))).column(0)
         qcol = "`" + col.replace("`", "``") + "`"
-        if pa.types.is_timestamp(ftype):
-            if dtypes.get(col) != "timestamp":
-                return None
-            vals = [
-                str(v)
-                for v in t.column(col)
-                .cast(pa.timestamp("us", tz="UTC"))
-                .cast(pa.int64())
-                .to_pylist()
-                if v is not None
-            ]
+        if pa.types.is_timestamp(keys.type):
+            vals = [str(v) for v in keys.cast(pa.int64()).to_pylist() if v is not None]
             key_sets.append((f"unix_micros({qcol})", vals, int(e["v"])))
-        elif pa.types.is_date(ftype):
-            if dtypes.get(col) != "date":
-                return None
-            vals = [
-                str(v)
-                for v in t.column(col).cast(pa.int32()).to_pylist()
-                if v is not None
-            ]
+        elif pa.types.is_date(keys.type):
+            vals = [str(v) for v in keys.cast(pa.int32()).to_pylist() if v is not None]
             key_sets.append((f"unix_date({qcol})", vals, int(e["v"])))
         else:
-            raw = [v for v in t.column(col).to_pylist() if v is not None]
             vals = []
-            for v in raw:
+            for v in keys.to_pylist():
+                if v is None:
+                    continue
                 if isinstance(v, bool):
                     vals.append("true" if v else "false")
                 elif isinstance(v, int):
                     vals.append(f"{v}L")
                 elif isinstance(v, float):
-                    from ..functions.vectors import _dbl_sql
-
                     vals.append(_dbl_sql(v))
                 elif isinstance(v, str):
                     vals.append(_sql_str(v))
@@ -1991,13 +1997,7 @@ def _inline_eq_filter(tagged: DataFrame, m: dict, path: str, eq: list[dict]):
     # key, ~0.55 ms each measured r13; one expr parse is flat in both
     # key count and file count). Null semantics match the join path:
     # a null key compares null -> the coalesce keeps the row.
-    entries = ",".join(
-        f"{_sql_str(f['path'])},{int(f['added_v'])}L"
-        for f in m["files"]
-    )
-    added_sql = (
-        f"coalesce(element_at(map({entries}), `{_DV_FILE}`), 0L)"
-    )
+    added_sql = _added_v_sql(m["files"])
     drops = [
         f"(({key_sql} IN ({','.join(vals)})) AND ({added_sql} < {v}L))"
         for key_sql, vals, v in key_sets
@@ -2023,8 +2023,6 @@ def _write_local_eq_keys(
     tz-adjusted — Spark reads them back as the same TimestampType the
     distributed writer produced (the r8 timezone seam)."""
     import pyarrow.parquet as pq
-
-    from pyspark.sql.types import StructType
 
     uniq = list({tuple(t) for t in tuples})
     if not uniq:
@@ -2142,8 +2140,7 @@ def delete_where(
     # check). Private aliases so they can't collide with _apply_dvs's own
     # working columns.
     base_scan = _read_files(
-        spark, path, files, merge_schema=True, schema=m.get("schema"),
-        renames=m.get("renames"),
+        spark, path, files, schema=m["schema"], renames=m.get("renames")
     )
     scan = base_scan.withColumn(
         "_hit_file", _file_expr_for(base_scan)
@@ -2392,22 +2389,21 @@ def _read_files(
     spark: SparkSession,
     path: str,
     files: list[dict],
-    merge_schema: bool | None = None,
-    schema: dict | None = None,
+    *,
+    schema: dict,
     renames: list[dict] | None = None,
 ) -> DataFrame:
     """Scan exactly ``files`` (manifest entries) under the table's
-    basePath — the shared reader of snapshot/merge paths. ``merge_schema``
-    None defers to the session conf.
+    basePath — the one reader of data files.
 
-    ``schema`` (r13 — the manifest's logged table schema): when given,
-    the scan is handed the schema EXPLICITLY and no parquet footer is
-    ever read for inference — the Delta metaData contract, and the
+    ``schema`` (r13 — the logged table schema of the version the files
+    are read at): the scan is handed it EXPLICITLY and no parquet footer
+    is ever read for inference — the Delta metaData contract, and the
     reason opening a 100k-file table costs one JSON read, not 100k
-    footer fetches. Files that predate an added column null-fill it
-    (the mergeSchema evolution semantics without the footer union job);
-    the txn/p_month partition columns keep their path-inferred types,
-    matching the inference read bit-for-bit.
+    footer fetches. Files that predate an added column null-fill it,
+    files that predate a type widening upcast to the logged type; the
+    txn/p_month partition columns keep their path-inferred types,
+    matching an inference read bit-for-bit.
 
     ``renames`` (r14 — the manifest's column-mapping era map, Delta
     column-mapping semantics without per-column UUIDs): files written
@@ -2418,7 +2414,7 @@ def _read_files(
     files keep serving forever, no rewrite. A DROPPED column needs no
     translation at all: the explicit logical schema simply never asks
     the scan for it (projection hides the physical bytes)."""
-    if schema is not None and renames:
+    if renames:
         logical = [f["name"] for f in schema["fields"]]
         groups: dict[tuple, list[dict]] = {}
         for f in files:
@@ -2453,14 +2449,11 @@ def _read_files(
             for fr in frames[1:]:
                 out = out.unionByName(fr)
             return out
-    reader = spark.read.option("basePath", str(_data(path)))
-    if schema is not None:
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(schema))
-    elif merge_schema is not None:
-        reader = reader.option("mergeSchema", str(merge_schema).lower())
-    return reader.parquet(*[str(Path(path) / f["path"]) for f in files])
+    return (
+        spark.read.option("basePath", str(_data(path)))
+        .schema(StructType.fromJson(schema))
+        .parquet(*[str(Path(path) / f["path"]) for f in files])
+    )
 
 
 def compact_snapshot(
@@ -2483,12 +2476,11 @@ def compact_snapshot(
     would silently drop the interleaver's rows otherwise) — re-run against
     the new head; the orphaned rewrite dir is swept by vacuum."""
     read_v = latest_version(path)
-    # merge_schema=True: a compaction must preserve EVERY column any live
-    # file carries — with one arbitrary file's schema, compacting a
-    # schema-evolved table would permanently drop the added columns
-    # (r8 third-review finding)
+    # the read's logged schema carries EVERY column of the table (files
+    # that predate an added column null-fill it), so the rewrite keeps
+    # them all (r8 third-review finding)
     df = dedup_view(
-        read_snapshot(spark, path, version=read_v, merge_schema=True),
+        read_snapshot(spark, path, version=read_v),
         keys,
         version_col,
     ).drop(PARTITION_COL)
@@ -2504,8 +2496,8 @@ def compact_snapshot(
         path, lambda _hf: new, "compact", expected_parent=read_v,
         dvs_fn=lambda _dvs: [],
         eq_dvs_fn=lambda _eq, _v: [],
-        # total rewrite: the written frame (the mergeSchema union of
-        # every live file, minus nothing) IS the table schema
+        # total rewrite: the written frame (the logged schema of the
+        # version read, minus nothing) IS the table schema
         write_schema=_frame_schema(df),
         schema_mode="replace",
         # an append-only interleave carries forward; its rows were not
@@ -2562,7 +2554,7 @@ def optimize_small_files(
         return read_v
     df = _apply_dvs(
         spark,
-        _read_files(spark, path, small, merge_schema=True, schema=m.get("schema"), renames=m.get("renames")),
+        _read_files(spark, path, small, schema=m["schema"], renames=m.get("renames")),
         m,
         path,
     ).drop(TXN_COL, PARTITION_COL)
@@ -2575,9 +2567,9 @@ def optimize_small_files(
     new_dvs: list[dict] = []
     if m.get("dvs"):
         rewritten = {f["path"] for f in small}
-        keep = spark.read.parquet(
-            *[str(Path(path) / e["path"]) for e in m["dvs"]]
-        ).where(~F.col(_DV_FILE).isin(rewritten))
+        keep = _read_dvs(spark, path, m["dvs"]).where(
+            ~F.col(_DV_FILE).isin(rewritten)
+        )
         new_dvs = _write_dv_entries(keep, path, "dv")
     return _commit(
         path,
@@ -3119,8 +3111,6 @@ def _apply_defaults(df: DataFrame, path: str, body: dict | None = None) -> DataF
             continue
         col = F.expr(expr)
         if c in types:
-            from pyspark.sql.types import StructType
-
             dt = StructType.fromJson(
                 {"type": "struct", "fields": [types[c]]}
             )[c].dataType
@@ -3214,8 +3204,6 @@ def _apply_generated(df: DataFrame, path: str, body: dict | None = None) -> Data
 
     def _typed(c, col):
         if c in types:
-            from pyspark.sql.types import StructType
-
             col = col.cast(
                 StructType.fromJson({"type": "struct", "fields": [types[c]]})[
                     c
@@ -3359,8 +3347,6 @@ def _enforce_constraints(df: DataFrame, path: str, body: dict | None = None) -> 
         types = (
             {f["name"]: f for f in sch["fields"]} if sch is not None else {}
         )
-        from pyspark.sql.types import StructType
-
         for c in sorted(need):
             col = F.lit(None)
             if c in types:
@@ -3526,7 +3512,6 @@ def read_snapshot(
     ts_range: tuple | None = None,
     ts_col: str = "ts",
     keep_txn: bool = False,
-    merge_schema: bool | None = None,
     col_ranges: dict | None = None,
     extra_prune=None,
 ) -> DataFrame:
@@ -3541,8 +3526,7 @@ def read_snapshot(
 
     Schema evolution: the scan is handed the version's LOGGED schema, so
     rows from pre-evolution files surface added columns as NULL — the
-    Delta ADD COLUMN semantics — and ``merge_schema`` changes nothing on
-    a written table.
+    Delta ADD COLUMN semantics — and no file footer is read.
 
     ``col_ranges={col: (lo, hi), ...}`` (r10) generalizes the ts pruning
     to ANY numeric column the commit recorded footer stats for (the
@@ -3603,8 +3587,7 @@ def read_snapshot(
         df = _apply_dvs(
             spark,
             _read_files(
-                spark, path, files, merge_schema, schema=m.get("schema"),
-                renames=m.get("renames"),
+                spark, path, files, schema=m["schema"], renames=m.get("renames")
             ),
             m,
             path,
@@ -3763,16 +3746,6 @@ def _merge_candidates(files: list[dict], keys: Sequence[str], src_rng: dict) -> 
     return out
 
 
-def _rel_path(uri: str, path: str) -> str:
-    """Manifest-relative form of a ``_metadata.file_path`` URI."""
-    p = uri
-    if p.startswith("file:"):
-        from urllib.parse import unquote, urlparse
-
-        p = unquote(urlparse(p).path)
-    return str(Path(p).resolve().relative_to(Path(path).resolve()))
-
-
 def merge_into(
     spark: SparkSession,
     path: str,
@@ -3843,7 +3816,7 @@ def merge_into(
     ):
         raise ValueError("duplicate keys in merge source — one row per key")
 
-    tgt_head = read_snapshot(spark, path, version=read_v, merge_schema=True)
+    tgt_head = read_snapshot(spark, path, version=read_v)
     data_cols = [
         c for c in tgt_head.columns if c not in keys and c != PARTITION_COL
     ]
@@ -3916,8 +3889,7 @@ def merge_into(
     if candidates:
         src_keys = source.select(*keys).distinct()
         cand_scan = _read_files(
-            spark, path, candidates, merge_schema=True,
-            schema=m.get("schema"), renames=m.get("renames"),
+            spark, path, candidates, schema=m["schema"], renames=m.get("renames")
         )
         # _file_expr_for already yields the table-RELATIVE path (the
         # data/txn=... form the manifest stores) on both the direct-scan
@@ -3946,8 +3918,7 @@ def merge_into(
         tgt = _apply_dvs(
             spark,
             _read_files(
-                spark, path, touched, merge_schema=True,
-                schema=m.get("schema"), renames=m.get("renames"),
+                spark, path, touched, schema=m["schema"], renames=m.get("renames")
             ),
             m,
             path,
@@ -4097,7 +4068,7 @@ def update_where(
     if not files:
         return read_v  # empty head — nothing to update
     table_cols = set(
-        read_snapshot(spark, path, version=read_v, merge_schema=True).columns
+        read_snapshot(spark, path, version=read_v).columns
     ) - {PARTITION_COL}
     unknown = sorted(set(assignments) - table_cols)
     if unknown:
@@ -4109,8 +4080,7 @@ def update_where(
     # predicate's columns + the file tag (materialized on the raw scan,
     # the _apply_dvs era rule); the collect is bounded by FILE count
     base_scan = _read_files(
-        spark, path, files, merge_schema=True, schema=m.get("schema"),
-        renames=m.get("renames"),
+        spark, path, files, schema=m["schema"], renames=m.get("renames")
     )
     scan = base_scan.withColumn("_upd_file", _file_expr_for(base_scan))
     vis = _apply_dvs(spark, scan, m, path)
@@ -4125,8 +4095,7 @@ def update_where(
     tgt = _apply_dvs(
         spark,
         _read_files(
-            spark, path, touched, merge_schema=True, schema=m.get("schema"),
-            renames=m.get("renames"),
+            spark, path, touched, schema=m["schema"], renames=m.get("renames")
         ),
         m,
         path,
@@ -4202,8 +4171,8 @@ def diff_versions(
     one key-partitioned shuffle of both snapshots — inherent to a
     value-level diff; for append-only ranges prefer :func:`read_changes`,
     which answers from the manifest alone."""
-    old = read_snapshot(spark, path, version=v_old, merge_schema=True)
-    new = read_snapshot(spark, path, version=v_new, merge_schema=True)
+    old = read_snapshot(spark, path, version=v_old)
+    new = read_snapshot(spark, path, version=v_new)
     if compare_cols is None:
         skip = set(keys) | {PARTITION_COL, TXN_COL}
         compare_cols = [

@@ -78,7 +78,7 @@ listing.
 Schema evolution mid-stream (the declared schema is pinned at stream
 start): RENAME/DROP COLUMN in the offset range fails the batch with
 restart instructions (``_refuse_schema_edits`` — Delta's metadata-change
-behavior); ADD COLUMN null-fills like mergeSchema; TYPE WIDENING (r16)
+behavior); ADD COLUMN null-fills, as the batch read does; TYPE WIDENING (r16)
 is ALLOWED like ADD COLUMN — every emitted column is cast to the
 stream's declared type (pre-widen narrow files upcast losslessly under
 a wide start-time schema; a widen made AFTER stream start keeps flowing
@@ -113,7 +113,7 @@ from pyspark.sql.datasource import (
 from ..plans.snapshots import CDC_TYPE, CDC_VERSION, PARTITION_COL, TXN_COL
 from ..plans.snapshots import manifest_delta, prune_files_by_values
 from ..plans.snapshots import head_schema, rename_map_for_file
-from ..plans.snapshots import _version_body
+from ..plans.snapshots import _eq_keys, _version_body
 from ..plans.snapshots import changed_meta as _changed_meta
 from ..plans.snapshots import latest_version as _head
 from ..plans.snapshots import manifest as _manifest
@@ -187,29 +187,28 @@ def _widen_ddl(a: str, b: str) -> str | None:
 
 
 def _eq_filters(
-    path: str, eq_dvs: list[dict]
+    path: str, eq_dvs: list[dict], columns: list[tuple[str, str]]
 ) -> list[tuple[tuple[str, ...], list, int]]:
     """[(key columns, key values, sequencing version)] from the
-    manifest's equality-delete entries — one driver-side pyarrow read of
-    the O(keys) key set per entry, at bootstrap only. Single-column
-    entries carry a plain value list (vectorized ``is_in`` anti-filter
-    per partition); composite entries (r13) carry a list of key TUPLES,
-    applied per partition through a pandas MultiIndex ``isin`` — still
-    one vectorized pass per Arrow batch, never a per-row Python loop."""
-    import pyarrow.parquet as pq
+    manifest's equality-delete entries — one driver-side read of the
+    O(keys) key set per entry (``snapshots._eq_keys``, typed by the
+    stream's declared ``columns``), at bootstrap only. Single-column
+    entries carry a plain list of the non-null values (a null key
+    matches nothing; vectorized ``is_in`` anti-filter per partition);
+    composite entries (r13) carry a list of key TUPLES, applied per
+    partition through a pandas MultiIndex ``isin`` — still one
+    vectorized pass per Arrow batch, never a per-row Python loop."""
+    import pyarrow as pa
 
+    declared = dict(columns)
     out = []
     for e in eq_dvs:
         cols = tuple(e["cols"])
-        # fcols (r14 column mapping): key files keep their written names
-        fcols = list(e.get("fcols", e["cols"]))
-        t = pq.read_table(str(Path(path) / e["path"]), columns=fcols)
-        if tuple(fcols) != cols:
-            t = t.rename_columns(
-                [dict(zip(fcols, cols)).get(c, c) for c in t.column_names]
-            )
+        t = _eq_keys(
+            path, e, pa.schema([(c, _arrow_type(declared[c])) for c in cols])
+        )
         if len(cols) == 1:
-            keys: list = t.column(cols[0]).to_pylist()
+            keys: list = [k for k in t.column(0).to_pylist() if k is not None]
         else:
             keys = list(zip(*(t.column(c).to_pylist() for c in cols)))
         out.append((cols, keys, e["v"]))
@@ -484,7 +483,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
             # is_in anti-filter for single-column keys, a MultiIndex
             # anti-isin for composite keys there, sequenced by the same
             # added_v-vs-entry-version rule _apply_dvs uses).
-            eq_specs = _eq_filters(self.path, m0.get("eq_dvs", []))
+            eq_specs = _eq_filters(self.path, m0.get("eq_dvs", []), self.columns)
             dv_pos = _dv_positions(self.path, m0.get("dvs", []))
             ren0 = m0.get("renames")
             return [
@@ -620,7 +619,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 # deletes = the dropped/rewritten files' rows as visible
                 # at v-1: earlier DVs and sequenced eq entries apply
                 dv_pos = _dv_positions(self.path, pb.get("dvs", []))
-                eq_specs = _eq_filters(self.path, pb.get("eq_dvs", []))
+                eq_specs = _eq_filters(self.path, pb.get("eq_dvs", []), self.columns)
                 for f in removed:
                     parts.append(
                         self._part(
@@ -670,8 +669,8 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 if new_eq and v > 0:
                     m_prev = _manifest(self.path, v - 1)
                     pre_dv = _dv_positions(self.path, pb.get("dvs", []))
-                    pre_eq = _eq_filters(self.path, pb.get("eq_dvs", []))
-                    for cols, keys, _ev in _eq_filters(self.path, new_eq):
+                    pre_eq = _eq_filters(self.path, pb.get("eq_dvs", []), self.columns)
+                    for cols, keys, _ev in _eq_filters(self.path, new_eq, self.columns):
                         files = m_prev["files"]
                         # advisory per-file prunes — key [min,max] stats
                         # (bite on a clustered layout) chained with the
@@ -824,8 +823,8 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 cols.append(pa.array([parts.get(PARTITION_COL, "")] * n, pa.string()))
             elif name not in table.column_names:
                 # declared column absent from this (pre-evolution) file:
-                # nulls of the declared type, the mergeSchema read
-                # semantics (r8 ADVICE — a KeyError here killed the
+                # nulls of the declared type, as the batch read gives
+                # (r8 ADVICE — a KeyError here killed the
                 # stream on any schema-evolved table)
                 cols.append(pa.nulls(n, type=_arrow_type(ddl)))
             else:

@@ -82,6 +82,30 @@ def test_cdc_append_then_position_delete_emits_exact_rows(spark, tmp_path):
     assert dels.select(S.CDC_VERSION).distinct().collect()[0][0] == 2
 
 
+def test_cdc_position_delete_rows_follow_renames_and_drops(spark, tmp_path):
+    """The position-delete leg scans its target files with the commit's
+    logged schema, like every other leg: after RENAME COLUMN its rows carry
+    the new name, and after DROP COLUMN the dropped one is gone."""
+    path = str(tmp_path / "t")
+    S.append(_batch(spark, range(10)), path)
+    S.rename_column(path, "price", "px")
+    v = S.delete_where(spark, path, "trade_id = 2")
+    dels = S.read_changes_cdc(spark, path, v - 1, v)
+    head = S.read_snapshot(spark, path).columns
+    assert dels.columns == head + [S.CDC_TYPE, S.CDC_VERSION]
+    [row] = dels.collect()
+    assert row["trade_id"] == 2 and row["px"] == float(100 + 14 % 31)
+    S.drop_column(path, "ingested_at")
+    v = S.delete_where(spark, path, "trade_id = 3")
+    dels = S.read_changes_cdc(spark, path, v - 1, v)
+    assert "ingested_at" not in dels.columns and "price" not in dels.columns
+    assert dels.columns == S.read_snapshot(spark, path).columns + [
+        S.CDC_TYPE,
+        S.CDC_VERSION,
+    ]
+    assert _ids(dels) == [3]
+
+
 def test_cdc_mid_range_consumption_sees_only_the_delta(spark, tmp_path):
     path = str(tmp_path / "t")
     S.append(_batch(spark, range(10)), path)  # v0
@@ -630,10 +654,10 @@ def test_scoped_refresh_never_reads_unaffected_months(spark, tmp_path):
     real = S._read_files
     base_reads: list[list[dict]] = []
 
-    def spy(spark_, path_, files, merge_schema=None, **kw):
+    def spy(spark_, path_, files, **kw):
         if path_ == base:
             base_reads.append(files)
-        return real(spark_, path_, files, merge_schema, **kw)
+        return real(spark_, path_, files, **kw)
 
     import pytest as _pytest
 

@@ -280,29 +280,68 @@ def test_local_join_int64_keys_exact_above_2_53_even_with_nulls(spark, tmp_path)
     assert _ids(S.read_snapshot(spark, path)) == [7, nbr]
 
 
-def test_local_join_width_mismatch_falls_back_to_distributed(spark, tmp_path, monkeypatch):
-    """Same-col-set entries written with different physical widths make
-    pyarrow's concat raise; the read must fall back to the per-entry
-    distributed plan for that col-set, not crash."""
-    import pyarrow as pa
+def _ids_on_every_plan(spark, path, monkeypatch):
+    """The live ids read through the inline filter, the anti-join over a
+    local key frame and the anti-join over the scanned key files, each
+    checked to have taken its plan."""
+    def read():
+        df = S.read_snapshot(spark, path)
+        return _ids(df), df._jdf.queryExecution().optimizedPlan().toString()
+
+    ids, plan = read()
+    assert "Join" not in plan
+    out = [ids]
+    monkeypatch.setattr(S, "_EQ_INLINE_MAX_KEYS", 0)
+    ids, plan = read()
+    assert "LocalRelation" in plan
+    out.append(ids)
+    monkeypatch.setattr(S, "_EQ_LOCAL_MAX_KEYS", 0)
+    ids, plan = read()
+    assert "Join" in plan and "LocalRelation" not in plan
+    out.append(ids)
+    monkeypatch.undo()
+    return out
+
+
+def _int_table(spark, path, ids):
+    from pyspark.sql import functions as F
+
+    S.append(
+        _batch(spark, 1, ids).withColumn("trade_id", F.col("trade_id").cast("int")),
+        path,
+    )
+
+
+def test_key_files_of_two_widths_read_alike_on_every_plan(
+    spark, tmp_path, monkeypatch
+):
+    """An equality delete before and after widening ``trade_id`` int→long
+    leaves an int32 and an int64 key file under one col-set. Keys are read
+    typed by the frame they filter, so the inline filter, the local join
+    and the scanned join read the same rows."""
+    import pyarrow.parquet as pq
 
     path = str(tmp_path / "widths")
-    S.append(_batch(spark, 1, range(6)), path)
-    S.delete_by_keys(spark, path, _keys(spark, [1]))
-    S.delete_by_keys(spark, path, _keys(spark, [4]))
-    # two single-col entries would ride the inline filter — push them to
-    # the local-join plan and sabotage concat to hit the fallback
-    monkeypatch.setattr(S, "_EQ_INLINE_MAX_KEYS", 0)
-    real_concat = pa.concat_tables
+    _int_table(spark, path, range(6))
+    S.delete_by_keys(spark, path, spark.createDataFrame([(1,)], "trade_id int"))
+    S.widen_column_type(path, "trade_id", "long")
+    S.append(_batch(spark, 2, range(6, 10)), path)
+    S.delete_by_keys(spark, path, _keys(spark, [4, 7]))
+    entries = S.manifest(path, S.latest_version(path))["eq_dvs"]
+    assert [
+        str(pq.read_schema(str(Path(path) / e["path"])).field("trade_id").type)
+        for e in sorted(entries, key=lambda e: e["v"])
+    ] == ["int32", "int64"]
+    assert _ids_on_every_plan(spark, path, monkeypatch) == [[0, 2, 3, 5, 6, 8, 9]] * 3
 
-    def boom(tables, *a, **k):
-        raise pa.lib.ArrowInvalid("simulated width mismatch")
 
-    monkeypatch.setattr(pa, "concat_tables", boom)
-    try:
-        assert _ids(S.read_snapshot(spark, path)) == [0, 2, 3, 5]
-    finally:
-        monkeypatch.setattr(pa, "concat_tables", real_concat)
+def test_keys_wider_than_the_column_read_on_every_plan(spark, tmp_path, monkeypatch):
+    """Long keys on an int column: a key the column's type cannot hold
+    matches nothing, and every plan still reads the table."""
+    path = str(tmp_path / "narrow")
+    _int_table(spark, path, range(6))
+    S.delete_by_keys(spark, path, _keys(spark, [2, 2**40]))
+    assert _ids_on_every_plan(spark, path, monkeypatch) == [[0, 1, 3, 4, 5]] * 3
 
 
 def _probe_plans(spark, monkeypatch):

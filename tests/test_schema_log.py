@@ -375,3 +375,56 @@ def test_table_details_unifies_the_metadata(spark, tmp_path):
     assert d0["renames"] == [] and "symbol" in [
         f["name"] for f in d0["schema"]["fields"]
     ]
+
+
+def _plan_jobs(spark, build) -> int:
+    """Spark jobs run while ``build()`` only builds a plan."""
+    sc = spark.sparkContext
+    group = f"plan-build-{id(build)}"
+    sc.setJobGroup(group, "plan build only")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_plan_builds_infer_no_file_schema(spark, tmp_path):
+    """Data files are scanned with the logged schema and delete files with
+    their fixed or frame-derived schema, so no plan build opens a Parquet
+    footer for inference. The one job left is the position-delete leg's
+    collect of the files its vectors name."""
+    path = str(tmp_path / "t")
+    S.append(_batch(spark, range(20)), path)
+    v_pos = S.delete_where(spark, path, "trade_id = 3")
+    v_eq = S.delete_by_keys(
+        spark, path, spark.createDataFrame([(5,)], "trade_id long")
+    )
+
+    def cdc(v):
+        return lambda: S.read_changes_cdc(spark, path, v - 1, v)
+
+    assert _plan_jobs(spark, lambda: S.read_snapshot(spark, path)) == 0
+    assert _plan_jobs(spark, cdc(v_eq)) == 0
+    assert _plan_jobs(spark, cdc(v_pos)) <= 1
+    live = sorted(r.trade_id for r in S.read_snapshot(spark, path).collect())
+    assert live == [i for i in range(20) if i not in (3, 5)]
+    assert [r.trade_id for r in cdc(v_eq)().collect()] == [5]
+    assert [r.trade_id for r in cdc(v_pos)().collect()] == [3]
+
+
+def test_spark_reads_only_in_the_file_readers():
+    """``spark.read`` appears in plans/snapshots.py only in the data-file
+    reader and the two delete-file readers (position vectors; the
+    equality-key frame's scan side), so every scan gets its schema from
+    the log or from the delete file's kind."""
+    import ast
+
+    src = Path(S.__file__).read_text()
+    readers = {
+        node.name
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.FunctionDef)
+        and "spark.read" in ast.get_source_segment(src, node)
+    }
+    assert readers == {"_read_files", "_read_dvs", "_eq_keys_frame"}

@@ -590,7 +590,7 @@ def test_schema_evolution_merge_read(spark, tmp_path):
 
     evolved = _batch(spark, 2, range(3, 5)).withColumn("venue", F.lit("X"))
     S.append(evolved, path)
-    df = S.read_snapshot(spark, path, merge_schema=True)
+    df = S.read_snapshot(spark, path)
     assert "venue" in df.columns
     got = {r.trade_id: r.venue for r in df.collect()}
     assert got == {0: None, 1: None, 2: None, 3: "X", 4: "X"}
@@ -653,7 +653,7 @@ def test_compacting_an_evolved_table_preserves_added_columns(spark, tmp_path):
     S.append(_batch(spark, 1, range(3)), path)
     S.append(_batch(spark, 2, range(3, 5)).withColumn("venue", F.lit("X")), path)
     S.compact_snapshot(spark, path)
-    df = S.read_snapshot(spark, path, merge_schema=True)
+    df = S.read_snapshot(spark, path)
     assert "venue" in df.columns
     got = {r.trade_id: r.venue for r in df.collect()}
     assert got == {0: None, 1: None, 2: None, 3: "X", 4: "X"}

@@ -441,6 +441,32 @@ def test_bootstrap_applies_single_column_equality_deletes(spark, table, tmp_path
         q2.stop()
 
 
+def test_bootstrap_keeps_null_key_rows_like_the_batch_read(spark, table, tmp_path):
+    """A null key matches nothing: a key file holding a null beside a real
+    key erases the real key's rows only. A row whose key is null stays,
+    in the stream bootstrap as in the batch read."""
+    S.append(
+        spark.createDataFrame(
+            [(datetime(2024, 3, 1), "BTC", None, 1.0, 0)],
+            "ts timestamp, symbol string, trade_id long, price double,"
+            " ingested_at long",
+        ),
+        table,
+    )
+    S.delete_by_keys(
+        spark, table, spark.createDataFrame([(2,), (None,)], "trade_id long")
+    )
+    q = _start(spark, table, str(tmp_path / "ck_null"), "ss_null")
+    try:
+        q.processAllAvailable()
+        got = [r.trade_id for r in spark.sql("select trade_id from ss_null").collect()]
+    finally:
+        q.stop()
+    batch = [r.trade_id for r in S.read_snapshot(spark, table).collect()]
+    assert sorted(got, key=str) == sorted(batch, key=str)
+    assert None in got and 2 not in got
+
+
 def test_starting_version_latest_tails_only_new_commits(spark, table, tmp_path):
     """Delta parity: startingVersion=latest skips the bootstrap snapshot
     and emits only commits made AFTER the stream started."""

@@ -4,7 +4,7 @@ Times the plan-BUILD cost of the manifest file→version lookup that every
 read of an eq-carrying table constructs, old way vs new:
 
   old: F.create_map(*[F.lit(path), F.lit(v), ...])  — 2 py4j trips/file
-  new: snapshots._added_v_map(files)                — ONE F.expr parse
+  new: snapshots._added_v_sql(files)                — ONE F.expr parse
 
 Run: python tools/microbench_eqmap.py
 """
@@ -40,9 +40,7 @@ def main() -> None:
         t_old = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        col_new = F.coalesce(
-            F.element_at(S._added_v_map(files), F.col(S._DV_FILE)), F.lit(0)
-        )
+        col_new = F.expr(S._added_v_sql(files))
         base.where(col_new >= 0).schema
         t_new = time.perf_counter() - t0
 
