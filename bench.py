@@ -38,10 +38,18 @@ Methodology (round 3 — attributable numbers):
   11/16/20, dedup_*) read memoised intermediates instead of computing
   them. With the cache cleared per repetition, intra-plan caches
   repopulate INSIDE the timed region (keeping their legitimate §2.4
-  benefit) and pure cross-invocation memoisation stops counting.
-  Numbers for those entries read HIGHER than r16's as a result — that
-  is the honest baseline, not a regression (r16 VERDICT "What's wrong"
-  #1 documents the flattered values).
+  benefit). Numbers for those entries read HIGHER than r16's as a
+  result — that is the honest baseline, not a regression (r16 VERDICT
+  "What's wrong" #1 documents the flattered values).
+- clearing the Spark cache does NOT clear fitted models: k-means
+  centroids, PQ/OPQ codebooks, BPE merges and the TPC-H supplier count
+  are fitted once per set of source bytes (``caching.fitted``), in the
+  untimed warmup, and the z-order/layout/PQ-index tables are built once
+  and kept on disk across runs (``caching.derived_dir``). The timed runs
+  of ann_ivf_*, dedup_semantic, doc_bpe_tokens, tpch_q2/9/11/16/20,
+  ev_layout_pruned and ev_skip_pruned therefore time serving against an
+  already-fitted model or built table, not the fit or build; the
+  artifact stamps `fits_memoized: true` beside `cache_cleared`.
 - (round 17) the artifact line no longer carries `queries_normalized`
   (derivable: divide each `queries` entry by `host_speed_vs_r11`) — the
   r15 round-over-round comparison was lost to driver-side tail
@@ -251,11 +259,12 @@ def main() -> None:
         qs[name](spark, sf_dir).collect()  # warmup: JIT/codegen, untimed
         runs, n = [], 0
         for _ in range(3):
-            # every timed repetition starts cache-cold (r17): the warmup
-            # materialized bounded_cache entries that otherwise serve
-            # memoised intermediates to the timed runs — intra-plan
+            # every timed repetition starts Spark-cache-cold (r17): the
+            # warmup materialized bounded_cache entries that otherwise
+            # serve memoised intermediates to the timed runs — intra-plan
             # caches repopulate inside the timed region and keep their
-            # benefit; cross-invocation memoisation stops counting
+            # benefit. Fitted models and derived tables stay (the warmup
+            # fitted/built them; see fits_memoized in the docstring)
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             n = len(qs[name](spark, sf_dir).collect())
@@ -356,6 +365,7 @@ def main() -> None:
             {
                 "queries": timings,
                 "cache_cleared": True,
+                "fits_memoized": True,
                 "metric": "headline_queries_total",
                 "value": total,
                 "value_normalized": round(total / speed, 3),

@@ -16,9 +16,9 @@ Like the connected-components operator (``dedup.min_label_clusters``),
 training is ADAPTIVE: a vocabulary within ``BPE_DRIVER_VOCAB_MAX`` rows is
 collected (bounded, 2-column Arrow transfer) and trained in-process — the
 fixture's ~30-word vocab makes 30 Spark jobs per merge pointless — while a
-larger vocabulary runs the distributed loop (forced in tests, identical
-output: both paths implement the same argmax-merge recursion, bit-equal by
-the shared tie-break).
+larger vocabulary runs the distributed loop (driven in tests by a zero
+driver bound; identical output: both paths implement the same
+argmax-merge recursion, bit-equal by the shared tie-break).
 
 Encoding (``doc_bpe_tokens``) follows the same vocabulary trick: segment
 each DISTINCT word once with the learned merges, then broadcast-join the
@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import fitted
 from ..functions import text as T
 from ..localframe import local_frame
 from ..tables import load
@@ -46,8 +47,6 @@ from ..tables import load
 BPE_MERGES = 16  # learned merge count (fixture-sized; production: 30k+)
 BPE_DRIVER_VOCAB_MAX = 100_000  # vocab rows the driver path may collect
 EOW = "</w>"  # end-of-word marker (Sennrich et al. §3.2)
-
-_MERGE_MEMO: dict[tuple, list] = {}
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,34 +155,27 @@ def _train_bpe(
     spark: SparkSession,
     sf_dir: str,
     n_merges: int = BPE_MERGES,
-    force_distributed: bool = False,
     vocab: DataFrame | None = None,
     vocab_rows: list[tuple] | None = None,
 ) -> list[tuple]:
-    """``vocab`` / ``vocab_rows`` let a caller that already built (or
-    collected) the vocabulary share it — ``doc_bpe_tokens`` trains AND
-    encodes off one vocabulary aggregation instead of re-scanning the
-    corpus (r8 review)."""
-    key = (sf_dir, n_merges)
-    if not force_distributed and key in _MERGE_MEMO:
-        return _MERGE_MEMO[key]
-    if vocab_rows is not None:
-        merges = _train_bpe_driver(vocab_rows, n_merges)
-        _MERGE_MEMO[key] = merges
-        return merges
-    vocab = _vocab(_docs(spark, sf_dir)) if vocab is None else vocab
-    if force_distributed:
-        return _train_bpe_distributed(vocab, n_merges)
-    # one bounded action probes size AND collects (r16 perf — the old
-    # limit().count() + toPandas() pair ran the vocabulary agg twice)
-    pdf = vocab.limit(BPE_DRIVER_VOCAB_MAX + 1).toPandas()
-    if len(pdf) <= BPE_DRIVER_VOCAB_MAX:
-        rows = list(zip(pdf["word"], pdf["freq"]))
-        merges = _train_bpe_driver(rows, n_merges)
-    else:
-        merges = _train_bpe_distributed(vocab, n_merges)
-    _MERGE_MEMO[key] = merges
-    return merges
+    """The learned merges, fitted once per set of ``documents`` bytes
+    (``caching.fitted``). ``vocab`` / ``vocab_rows`` let a caller that
+    already built (or collected) the vocabulary share it —
+    ``doc_bpe_tokens`` trains AND encodes off one vocabulary aggregation
+    instead of re-scanning the corpus (r8 review)."""
+
+    def fit() -> list[tuple]:
+        if vocab_rows is not None:
+            return _train_bpe_driver(vocab_rows, n_merges)
+        v = _vocab(_docs(spark, sf_dir)) if vocab is None else vocab
+        # one bounded action probes size AND collects (r16 perf — the old
+        # limit().count() + toPandas() pair ran the vocabulary agg twice)
+        pdf = v.limit(BPE_DRIVER_VOCAB_MAX + 1).toPandas()
+        if len(pdf) <= BPE_DRIVER_VOCAB_MAX:
+            return _train_bpe_driver(list(zip(pdf["word"], pdf["freq"])), n_merges)
+        return _train_bpe_distributed(v, n_merges)
+
+    return fitted(sf_dir, ("documents",), ("bpe", n_merges), fit)
 
 
 def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

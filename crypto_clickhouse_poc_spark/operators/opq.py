@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import fitted
 from ..functions import vectors as V
 from .embed import pca_fit
 from .similarity import (
@@ -68,9 +69,6 @@ from .similarity import (
     _train_pq,
     _vectors,
 )
-
-_ROT_MEMO: dict[tuple[str, int], list[list[float]]] = {}
-_NP_MEMO: dict[tuple[str, int], tuple[list[list[float]], list[list[list[float]]]]] = {}
 
 
 def _residuals(e: DataFrame, coarse: list[tuple]) -> DataFrame:
@@ -140,19 +138,19 @@ def _train_opq_rotation(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The [d, d] OPQ rotation for this corpus: eigenbasis of the coarse
     RESIDUAL covariance (what PQ actually quantizes — rotating by the raw
     vectors' basis would decorrelate the wrong distribution), rows
-    permuted by eigenvalue allocation."""
-    key = (sf_dir, PQ_M)
-    if key in _ROT_MEMO:
-        return _ROT_MEMO[key]
-    coarse = _train_kmeans(spark, sf_dir)
-    res = _residuals(_vectors(spark, sf_dir), coarse)
-    # full-basis PCA of the residuals: k = d keeps every direction, and
-    # pca_fit's sign convention makes the rotation deterministic
-    model = pca_fit(res, "r", k=V.EMB_DIM)
-    perm = eigenvalue_allocation(list(model.eigvals), PQ_M)
-    rot = [list(model.components[i]) for i in perm]
-    _ROT_MEMO[key] = rot
-    return rot
+    permuted by eigenvalue allocation. Fitted once per set of embeddings
+    bytes (``caching.fitted``)."""
+
+    def fit() -> list[list[float]]:
+        coarse = _train_kmeans(spark, sf_dir)
+        res = _residuals(_vectors(spark, sf_dir), coarse)
+        # full-basis PCA of the residuals: k = d keeps every direction, and
+        # pca_fit's sign convention makes the rotation deterministic
+        model = pca_fit(res, "r", k=V.EMB_DIM)
+        perm = eigenvalue_allocation(list(model.eigvals), PQ_M)
+        return [list(model.components[i]) for i in perm]
+
+    return fitted(sf_dir, ("embeddings",), ("opq_rot", PQ_M), fit)
 
 
 OPQ_NP_ITERS = 3  # alternating-minimization iterations (fixed, replayable)
@@ -220,23 +218,23 @@ def _train_opq_np(
     parametric solution's objective (each step is a non-increasing move;
     test-gated with a rounding epsilon — codebook means are rounded to
     6dp for cross-run determinism). Per iteration: one d×d cross-cov
-    pass + a driver SVD + the usual Lloyd rounds — O(iters) scans."""
+    pass + a driver SVD + the usual Lloyd rounds — O(iters) scans.
+    Fitted once per set of embeddings bytes (``caching.fitted``)."""
     import numpy as np
 
-    key = (sf_dir, iters)
-    if key in _NP_MEMO:
-        return _NP_MEMO[key]
-    coarse = _train_kmeans(spark, sf_dir)
-    rot = _train_opq_rotation(spark, sf_dir)
-    books = _train_pq(spark, sf_dir, rotation=rot)
-    e = _vectors(spark, sf_dir)
-    for _ in range(iters):
-        M = _cross_cov(e, coarse, books, rot)
-        U, _s, Vh = np.linalg.svd(M)
-        rot = (Vh.T @ U.T).tolist()
-        books = _lloyd_rounds(e, coarse, books, PQ_ROUNDS, rotation=rot)
-    _NP_MEMO[key] = (rot, books)
-    return rot, books
+    def fit() -> tuple[list[list[float]], list[list[list[float]]]]:
+        coarse = _train_kmeans(spark, sf_dir)
+        rot = _train_opq_rotation(spark, sf_dir)
+        books = _train_pq(spark, sf_dir, rotation=rot)
+        e = _vectors(spark, sf_dir)
+        for _ in range(iters):
+            M = _cross_cov(e, coarse, books, rot)
+            U, _s, Vh = np.linalg.svd(M)
+            rot = (Vh.T @ U.T).tolist()
+            books = _lloyd_rounds(e, coarse, books, PQ_ROUNDS, rotation=rot)
+        return rot, books
+
+    return fitted(sf_dir, ("embeddings",), ("opq_np", iters), fit)
 
 
 def ann_ivf_opq_np_search(spark: SparkSession, sf_dir: str) -> DataFrame:

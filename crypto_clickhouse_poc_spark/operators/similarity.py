@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import bounded_cache
+from ..caching import bounded_cache, derived_dir, fitted
 from ..functions import vectors as V
 from ..localframe import local_frame
 from ..tables import load
@@ -121,9 +121,6 @@ def ann_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMEANS_K = 8  # centroid count (fixture: 500-5k vectors, 10 latent labels)
 KMEANS_ROUNDS = 3  # FIXED round count — the oracle replays the same training
 
-# trained-index store: (sf_dir, k, rounds) → [(cid, cv, cnrm), ...]
-_CENTROID_MEMO: dict[tuple[str, int, int], list[tuple]] = {}
-
 
 def _train_kmeans(
     spark: SparkSession,
@@ -153,13 +150,9 @@ def _train_kmeans(
     recomputed driver-side with the same sequential left-fold + IEEE sqrt
     the engines use, so the literal matches what ``V.norm`` would produce.
     A cluster that loses all members drops out (deterministically, in both
-    engines).
+    engines). Fitted once per set of embeddings bytes (``caching.fitted``).
     """
     import math
-
-    key = (sf_dir, k, rounds)
-    if key in _CENTROID_MEMO:
-        return _CENTROID_MEMO[key]
 
     def _nrm(cv: list[float]) -> float:
         acc = 0.0
@@ -167,32 +160,37 @@ def _train_kmeans(
             acc += x * x
         return math.sqrt(acc)
 
-    e = _vectors(spark, sf_dir).select("vec_id", "v", "nrm")
-    seeds = (
-        e.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(k)  # TakeOrderedAndProject — no global sort materialized
-        .select("v")
-        .collect()
-    )
-    rows = [(cid, list(r["v"]), _nrm(r["v"])) for cid, r in enumerate(seeds)]
-    for _ in range(rounds):
-        rk = V.centroid_ranking(F.col("v"), F.col("nrm"), V.centroid_literal(rows))
-        per_dim = (
-            e.select(rk[0]["cid"].alias("cid"), F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg("x"), 6).alias("c"))
+    def fit() -> list[tuple]:
+        e = _vectors(spark, sf_dir).select("vec_id", "v", "nrm")
+        seeds = (
+            e.withColumn("h", F.md5(F.col("vec_id").cast("string")))
+            .orderBy("h", "vec_id")
+            .limit(k)  # TakeOrderedAndProject — no global sort materialized
+            .select("v")
+            .collect()
         )
-        byc: dict[int, dict[int, float]] = {}
-        for r in per_dim.collect():
-            byc.setdefault(int(r["cid"]), {})[int(r["pos"])] = float(r["c"])
-        rows = [
-            (cid, cv, _nrm(cv))
-            for cid, dims in sorted(byc.items())
-            for cv in [[dims[p] for p in sorted(dims)]]
-        ]
-    _CENTROID_MEMO[key] = rows
-    return rows
+        rows = [(cid, list(r["v"]), _nrm(r["v"])) for cid, r in enumerate(seeds)]
+        for _ in range(rounds):
+            lit = V.centroid_literal(rows)
+            rk = V.centroid_ranking(F.col("v"), F.col("nrm"), lit)
+            per_dim = (
+                e.select(
+                    rk[0]["cid"].alias("cid"), F.posexplode("v").alias("pos", "x")
+                )
+                .groupBy("cid", "pos")
+                .agg(F.round(F.avg("x"), 6).alias("c"))
+            )
+            byc: dict[int, dict[int, float]] = {}
+            for r in per_dim.collect():
+                byc.setdefault(int(r["cid"]), {})[int(r["pos"])] = float(r["c"])
+            rows = [
+                (cid, cv, _nrm(cv))
+                for cid, dims in sorted(byc.items())
+                for cv in [[dims[p] for p in sorted(dims)]]
+            ]
+        return rows
+
+    return fitted(sf_dir, ("embeddings",), ("kmeans", k, rounds), fit)
 
 
 def _kmeans_centroids(
@@ -325,9 +323,6 @@ PQ_KS = 16  # codebook entries per subspace (a code is a nibble)
 PQ_ROUNDS = 2  # FIXED Lloyd rounds per sub-codebook, deterministic
 PQ_RERANK = 50  # ADC-ranked candidates that get the exact cosine rerank
 
-# (sf_dir, M, ks, rounds) → books[m][j] = sub-codebook entry (list of floats)
-_PQ_MEMO: dict[tuple, list[list[list[float]]]] = {}
-
 
 def _pq_encode(
     e: DataFrame,
@@ -439,7 +434,7 @@ def _train_pq(
     entry that loses all members keeps its previous value (codes are
     positional indexes, so entries must never be renumbered mid-training).
     """
-    # the memo key carries the rotation's VALUE, not just its presence:
+    # the fit's params carry the rotation's VALUE, not just its presence:
     # books trained under one basis must never be served for a
     # numerically different one (stale-basis codes would silently
     # mis-score every ADC lookup). The rounded tuple is the key itself —
@@ -450,34 +445,33 @@ def _train_pq(
         if rotation is None
         else tuple(round(x, 12) for row in rotation for x in row)
     )
-    key = (sf_dir, PQ_M, PQ_KS, rounds, rot_key)
-    if key in _PQ_MEMO:
-        return _PQ_MEMO[key]
-    sub_d = V.EMB_DIM // PQ_M
-    coarse = _train_kmeans(spark, sf_dir)
-    cmap = {cid: cv for cid, cv, _ in coarse}
 
-    e = _vectors(spark, sf_dir)
-    seeds = (
-        e.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(PQ_KS)
-        .select("v")
-        .collect()
-    )
-    books: list[list[list[float]]] = [[] for _ in range(PQ_M)]
-    for row in seeds:
-        v = list(row["v"])
-        cv = cmap[_nearest_cid_py(v, coarse)]
-        res = [a - c for a, c in zip(v, cv)]
-        if rotation is not None:
-            res = [sum(r * x for r, x in zip(rrow, res)) for rrow in rotation]
-        for m in range(PQ_M):
-            books[m].append(res[m * sub_d : (m + 1) * sub_d])
+    def fit() -> list[list[list[float]]]:
+        sub_d = V.EMB_DIM // PQ_M
+        coarse = _train_kmeans(spark, sf_dir)
+        cmap = {cid: cv for cid, cv, _ in coarse}
 
-    books = _lloyd_rounds(e, coarse, books, rounds, rotation)
-    _PQ_MEMO[key] = books
-    return books
+        e = _vectors(spark, sf_dir)
+        seeds = (
+            e.withColumn("h", F.md5(F.col("vec_id").cast("string")))
+            .orderBy("h", "vec_id")
+            .limit(PQ_KS)
+            .select("v")
+            .collect()
+        )
+        books: list[list[list[float]]] = [[] for _ in range(PQ_M)]
+        for row in seeds:
+            v = list(row["v"])
+            cv = cmap[_nearest_cid_py(v, coarse)]
+            res = [a - c for a, c in zip(v, cv)]
+            if rotation is not None:
+                res = [sum(r * x for r, x in zip(rrow, res)) for rrow in rotation]
+            for m in range(PQ_M):
+                books[m].append(res[m * sub_d : (m + 1) * sub_d])
+
+        return _lloyd_rounds(e, coarse, books, rounds, rotation)
+
+    return fitted(sf_dir, ("embeddings",), ("pq", PQ_M, PQ_KS, rounds, rot_key), fit)
 
 
 def _lloyd_rounds(
@@ -673,9 +667,6 @@ def ann_ivf_pq_search_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_adc_rerank(spark, sf_dir, encoded, nprobe=NPROBE)
 
 
-_PQ_TABLE_BUILT: set[str] = set()
-
-
 def _pq_table(
     spark: SparkSession,
     sf_dir: str,
@@ -689,42 +680,25 @@ def _pq_table(
     in this module points at: a probe reads ONLY its cluster's directory
     (Catalyst partition pruning), ~n/k of the index.
 
-    Build is once per fixture (mtime-keyed path, pid/uuid temp dir +
-    atomic rename — same concurrency-safe recipe as
-    ``trades._layout_table``). The OPQ tier persists through this SAME
-    writer by passing its rotated codebooks + rotation and a distinct
-    ``tag`` (the tag keys the path, so PQ and OPQ codes never alias)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
+    Built once per set of embeddings bytes (``caching.derived_dir``); the
+    path also carries the index parameters, so changing K/M/ks/rounds
+    never reuses an index built with the old ones. The OPQ tier persists
+    through this SAME writer by passing its rotated codebooks + rotation
+    and a distinct ``tag`` (the tag keys the path, so PQ and OPQ codes
+    never alias)."""
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stamp = str(int(os.path.getmtime(src)))
-    # path carries the index parameters too: changing K/M/ks/rounds across
-    # processes must never silently reuse an index built with old params
-    params = f"k{KMEANS_K}r{KMEANS_ROUNDS}-m{PQ_M}x{PQ_KS}r{PQ_ROUNDS}-{tag}"
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "ccps_pq_index",
-        f"{sf_dir.strip('/').replace('/', '_')}-{stamp}-{params}",
-    )
-    if dest not in _PQ_TABLE_BUILT:
-        if not os.path.isdir(dest):
-            coarse = _train_kmeans(spark, sf_dir)
-            if books is None:
-                books = _train_pq(spark, sf_dir)
-            enc = _pq_encode(
-                _vectors(spark, sf_dir), coarse, books, rotation=rotation
-            ).withColumn("p_cluster", F.col("cluster"))
-            tmp = f"{dest}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-            enc.write.mode("overwrite").partitionBy("p_cluster").parquet(tmp)
-            try:
-                os.rename(tmp, dest)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-        _PQ_TABLE_BUILT.add(dest)
-    return spark.read.parquet(dest)
+    def build(tmp: str) -> None:
+        coarse = _train_kmeans(spark, sf_dir)
+        enc = _pq_encode(
+            _vectors(spark, sf_dir),
+            coarse,
+            _train_pq(spark, sf_dir) if books is None else books,
+            rotation=rotation,
+        ).withColumn("p_cluster", F.col("cluster"))
+        enc.write.mode("overwrite").partitionBy("p_cluster").parquet(tmp)
+
+    params = (KMEANS_K, KMEANS_ROUNDS, PQ_M, PQ_KS, PQ_ROUNDS, tag)
+    return spark.read.parquet(derived_dir(sf_dir, ("embeddings",), params, build))
 
 
 def ann_ivf_pq_probe_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,14 +15,10 @@ read-path optimization and must never change results.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import derived_dir, fitted
 from ..plans import skipping, zorder
 from ..tables import load
 
@@ -35,47 +31,41 @@ N_FILES = 32
 #: cached build from an older code version is never served
 _LAYOUT_VERSION = "v2"
 
-_BUILT: set[str] = set()
+
+def _indexed(spark: SparkSession, dest: str, minmax_cols: tuple[str, ...]) -> str:
+    """``dest`` with its skip index checked (or built) once per process.
+    The manifest lives beside the table (``<dest>.skipidx``), so it cannot
+    ride the table's rename; racing processes may both build it, and its
+    publish is an atomic replace of identical content."""
+
+    def check_or_build() -> None:
+        try:
+            skipping.load_manifest(dest)
+        except (FileNotFoundError, skipping.StaleSkipIndexError):
+            skipping.build_skip_index(
+                spark,
+                dest,
+                minmax_cols=minmax_cols,
+                set_cols=("event_type",),
+                bloom_cols=("user_id",),
+            )
+
+    fitted(dest, (), ("skipidx",), check_or_build)
+    return dest
 
 
 def zordered_events(spark: SparkSession, sf_dir: str) -> str:
     """events rewritten z-clustered on (ts, value) with a skip index built
-    on top; returns the table path. Built once per process per fixture
-    (path keyed by fixture mtime; racing builders resolve by atomic rename,
-    same pattern as ``trades._layout_table``).
-    """
-    src = os.path.join(sf_dir, "events.parquet")
-    stamp = str(int(os.path.getmtime(src)))
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "ccps_zorder",
-        f"{sf_dir.strip('/').replace('/', '_')}-{stamp}-{_LAYOUT_VERSION}",
-    )
-    if dest not in _BUILT:
-        if not os.path.isdir(dest):
-            tmp = f"{dest}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-            zorder.write_zordered(
-                load(spark, sf_dir, "events"), tmp, cols=("ts", "value"), num_files=N_FILES
-            )
-            try:
-                os.rename(tmp, dest)
-            except OSError:
-                # concurrent builder won — its table is byte-equivalent
-                shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            skipping.load_manifest(dest)
-        except (FileNotFoundError, skipping.StaleSkipIndexError):
-            # racing processes may both build; publish is an atomic replace
-            # of identical content, so last-writer-wins is harmless
-            skipping.build_skip_index(
-                spark,
-                dest,
-                minmax_cols=("ts", "value"),
-                set_cols=("event_type",),
-                bloom_cols=("user_id",),
-            )
-        _BUILT.add(dest)
-    return dest
+    on top; returns the table path. Built once per set of fixture bytes
+    (``caching.derived_dir``)."""
+
+    def build(tmp: str) -> None:
+        zorder.write_zordered(
+            load(spark, sf_dir, "events"), tmp, cols=("ts", "value"), num_files=N_FILES
+        )
+
+    dest = derived_dir(sf_dir, ("events",), ("zorder", _LAYOUT_VERSION), build)
+    return _indexed(spark, dest, ("ts", "value"))
 
 
 def user_projection(spark: SparkSession, sf_dir: str) -> str:
@@ -89,39 +79,18 @@ def user_projection(spark: SparkSession, sf_dir: str) -> str:
     projection clusters users contiguously (~150/16 ≈ 10 users per file at
     sf0.01), so an IN probe keeps only the files holding those users.
     """
-    src = os.path.join(sf_dir, "events.parquet")
-    stamp = str(int(os.path.getmtime(src)))
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "ccps_zorder",
-        f"{sf_dir.strip('/').replace('/', '_')}-{stamp}-{_LAYOUT_VERSION}-userproj",
-    )
-    if dest not in _BUILT:
-        if not os.path.isdir(dest):
-            tmp = f"{dest}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-            (
-                load(spark, sf_dir, "events")
-                .repartitionByRange(16, F.col("user_id"))
-                .sortWithinPartitions("user_id", "ts")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            try:
-                os.rename(tmp, dest)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            skipping.load_manifest(dest)
-        except (FileNotFoundError, skipping.StaleSkipIndexError):
-            skipping.build_skip_index(
-                spark,
-                dest,
-                minmax_cols=("user_id", "ts"),
-                set_cols=("event_type",),
-                bloom_cols=("user_id",),
-            )
-        _BUILT.add(dest)
-    return dest
+
+    def build(tmp: str) -> None:
+        (
+            load(spark, sf_dir, "events")
+            .repartitionByRange(16, F.col("user_id"))
+            .sortWithinPartitions("user_id", "ts")
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+
+    dest = derived_dir(sf_dir, ("events",), ("userproj", _LAYOUT_VERSION), build)
+    return _indexed(spark, dest, ("user_id", "ts"))
 
 
 def ev_skip_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,12 +32,10 @@ tie-break intent, survey §2.4 A5/A6).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import bounded_cache
+from ..caching import bounded_cache, derived_dir
 from ..tables import load
 
 # "now()" for these queries: the deterministic anchor expression (oracle form).
@@ -808,65 +806,42 @@ def ev_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # through the production table layout instead of the raw fixture parquet
 # --------------------------------------------------------------------------
 
-_LAYOUT_BUILT: set[str] = set()
-
-
 def _layout_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events rewritten with the production trades layout, then read back.
 
-    Build (once per process per sf_dir): month-partitioned (``p_month``),
-    sorted-within-files parquet via ``plans.layout.write_table`` — the
-    reference's ``PARTITION BY toYYYYMM(ts) ORDER BY (ts, symbol, trade_id)``
+    Build: month-partitioned (``p_month``), sorted-within-files parquet
+    via ``plans.layout.write_table`` — the reference's ``PARTITION BY
+    toYYYYMM(ts) ORDER BY (ts, symbol, trade_id)``
     (sql/V1__create_trades_table.sql:14-15). A deterministic subset
     (event_id % 97 == 0) is written twice with a later ``ingested_at`` to
     model WebSocket-reconnect replays; the read side must collapse them
     (ReplacingMergeTree semantics, sql/V1__create_trades_table.sql:13).
 
-    Concurrency-safe across processes: the shared path is keyed by the
-    fixture's mtime (a regenerated fixture gets a fresh path, never a
-    rebuild-in-place), and a builder writes into a pid/uuid-suffixed temp
-    dir then atomically renames it in — so no process ever overwrites a
-    directory another process is mid-read on. If two processes race, the
-    rename loser discards its build and reads the winner's (byte-equivalent
-    by construction).
+    Built once per set of fixture bytes and shared across processes
+    (``caching.derived_dir``): a rewritten fixture gets a fresh path,
+    never a rebuild-in-place, so no process overwrites a directory
+    another is mid-read on.
     """
-    import tempfile
-    import uuid
-
     from ..plans import layout
 
-    src = os.path.join(sf_dir, "events.parquet")
-    stamp = str(int(os.path.getmtime(src)))
-    dest = os.path.join(
-        tempfile.gettempdir(),
-        "ccps_layout",
-        f"{sf_dir.strip('/').replace('/', '_')}-{stamp}",
-    )
-    if dest not in _LAYOUT_BUILT:
-        if not os.path.isdir(dest):
-            tmp = f"{dest}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-            e = load(spark, sf_dir, "events")
-            orig = e.withColumn(
-                "ingested_at", F.lit("2024-02-01 00:00:00").cast("timestamp")
-            )
-            dups = e.where(F.col("event_id") % 97 == 0).withColumn(
-                "ingested_at", F.lit("2024-02-02 00:00:00").cast("timestamp")
-            )
-            layout.write_table(
-                orig.unionByName(dups),
-                tmp,
-                sort_cols=("ts", "event_type", "event_id"),
-                mode="overwrite",
-            )
-            try:
-                os.rename(tmp, dest)
-            except OSError:
-                # concurrent builder won the rename — use theirs
-                import shutil
+    def build(tmp: str) -> None:
+        e = load(spark, sf_dir, "events")
+        orig = e.withColumn(
+            "ingested_at", F.lit("2024-02-01 00:00:00").cast("timestamp")
+        )
+        dups = e.where(F.col("event_id") % 97 == 0).withColumn(
+            "ingested_at", F.lit("2024-02-02 00:00:00").cast("timestamp")
+        )
+        layout.write_table(
+            orig.unionByName(dups),
+            tmp,
+            sort_cols=("ts", "event_type", "event_id"),
+            mode="overwrite",
+        )
 
-                shutil.rmtree(tmp, ignore_errors=True)
-        _LAYOUT_BUILT.add(dest)
-    return layout.read_table(spark, dest)
+    return layout.read_table(
+        spark, derived_dir(sf_dir, ("events",), ("layout",), build)
+    )
 
 
 def ev_layout_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from crypto_clickhouse_poc_spark import caching
 from crypto_clickhouse_poc_spark.operators import bpe as B
 from crypto_clickhouse_poc_spark.tables import load
 from tests.conftest import SF_SMOKE
@@ -33,9 +34,14 @@ def test_greedy_merge_is_left_to_right_non_overlapping():
     assert B._merge_seq_py(["x"], "a", "b") == ["x"]
 
 
-def test_distributed_loop_equals_python_reference(spark):
-    dist = B._train_bpe(spark, SF_SMOKE, n_merges=8, force_distributed=True)
+def test_distributed_loop_equals_python_reference(spark, monkeypatch):
+    """A zero driver bound sends the real size dispatch down the
+    distributed loop; each side fits into an emptied store."""
+    monkeypatch.setattr(caching, "_FITTED", {})
     ref = B._train_bpe(spark, SF_SMOKE, n_merges=8)
+    monkeypatch.setattr(caching, "_FITTED", {})
+    monkeypatch.setattr(B, "BPE_DRIVER_VOCAB_MAX", 0)
+    dist = B._train_bpe(spark, SF_SMOKE, n_merges=8)
     assert len(ref) == 8
     assert dist == ref
 
@@ -133,7 +139,7 @@ def test_doc_bpe_tokens_opens_the_corpus_once(spark, monkeypatch):
         return real(spark_, sf_dir, name)
 
     monkeypatch.setattr(B, "load", spy)
-    monkeypatch.setattr(B, "_MERGE_MEMO", {})
+    monkeypatch.setattr(caching, "_FITTED", {})
     B.doc_bpe_tokens(spark, SF_SMOKE).collect()
     assert opened == ["documents"]
     plan = B.corpus_bpe_merges(spark, SF_SMOKE)._jdf.queryExecution()

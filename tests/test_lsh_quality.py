@@ -310,15 +310,51 @@ def test_ivf_pq_rerank_is_exact_and_recalls_probed_topk(spark):
     assert r2 >= r1, f"multi-probe recall {r2:.2f} below single-probe {r1:.2f}"
 
 
-def test_kmeans_memo_is_deterministic(spark):
-    """The memoized trained index rebuilds byte-identically to a fresh
-    training run (memo cleared between the two)."""
+def test_kmeans_memo_is_deterministic(spark, monkeypatch):
+    """The stored trained index rebuilds byte-identically to a fresh
+    training run (store emptied between the two)."""
+    from crypto_clickhouse_poc_spark import caching
     from crypto_clickhouse_poc_spark.operators import similarity as S
     from tests.conftest import SF_SMOKE as _SF
 
-    S._CENTROID_MEMO.clear()
+    monkeypatch.setattr(caching, "_FITTED", {})
     first = sorted(map(tuple, S._kmeans_centroids(spark, _SF).collect()))
     memod = sorted(map(tuple, S._kmeans_centroids(spark, _SF).collect()))
-    S._CENTROID_MEMO.clear()
+    monkeypatch.setattr(caching, "_FITTED", {})
     retrained = sorted(map(tuple, S._kmeans_centroids(spark, _SF).collect()))
     assert first == memod == retrained
+
+
+def _write_embeddings(sf: str, seed: int) -> None:
+    """A labelled embeddings table (10 planted clusters, 300 vectors of
+    64 float32 dims) as ``<sf>/embeddings.parquet``, rewritten in place."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((10, 64))
+    labels = np.arange(300) % 10
+    x = (centers[labels] + 0.4 * rng.standard_normal((300, 64))).astype(np.float32)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(300), pa.int64()),
+                "embedding": pa.array(x.tolist(), pa.list_(pa.float32())),
+                "label": pa.array(labels, pa.int32()),
+            }
+        ),
+        f"{sf}/embeddings.parquet",
+    )
+
+
+@pytest.mark.parametrize("name", ["ann_ivf_assign", "ann_ivf_search"])
+def test_ivf_query_refits_when_the_corpus_is_rewritten(spark, tmp_path, name):
+    """The trained centroids belong to the corpus bytes, not to its
+    directory: rewriting the table in place (same path, same process)
+    must retrain, so the IVF query still equals its oracle."""
+    from tests.conftest import assert_matches_oracle
+
+    for seed in (3, 4):
+        _write_embeddings(str(tmp_path), seed)
+        assert_matches_oracle(spark, str(tmp_path), name, ("embeddings",))

@@ -19,6 +19,7 @@ import math
 import numpy as np
 import pytest
 
+from crypto_clickhouse_poc_spark import caching
 from crypto_clickhouse_poc_spark.operators import opq as O
 from crypto_clickhouse_poc_spark.operators import similarity as S
 
@@ -221,9 +222,9 @@ def test_opq_np_search_recall_and_exactness(spark, opq_sf, monkeypatch):
     assert recall(npq, probed) >= recall(pq, probed)
 
 
-def test_opq_np_training_is_deterministic(spark, opq_sf):
+def test_opq_np_training_is_deterministic(spark, opq_sf, monkeypatch):
     rot1, books1 = O._train_opq_np(spark, opq_sf)
-    O._NP_MEMO.clear()
+    monkeypatch.setattr(caching, "_FITTED", {})
     rot2, books2 = O._train_opq_np(spark, opq_sf)
     assert np.allclose(np.array(rot1), np.array(rot2), atol=1e-9)
     assert np.allclose(
@@ -231,9 +232,9 @@ def test_opq_np_training_is_deterministic(spark, opq_sf):
     )
 
 
-def test_opq_rotation_memo_is_deterministic(spark, opq_sf):
+def test_opq_rotation_memo_is_deterministic(spark, opq_sf, monkeypatch):
     first = O._train_opq_rotation(spark, opq_sf)
-    O._ROT_MEMO.clear()
+    monkeypatch.setattr(caching, "_FITTED", {})
     retrained = O._train_opq_rotation(spark, opq_sf)
     assert np.allclose(np.array(first), np.array(retrained), atol=1e-9)
 

@@ -4,12 +4,10 @@ exact values (columns sorted by name, rows sorted canonically)."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from crypto_clickhouse_poc_spark import operators
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, rows_canonical
 
 import __spark_entry__ as entrymod
 
@@ -26,23 +24,6 @@ def test_declared_surface_is_driver_window_sized():
     assert len(declared) == 50
     missing = [n for n in declared if n not in oracles]
     assert not missing, f"declared queries without an oracle: {missing}"
-
-
-def _canon(val):
-    if val is None:
-        return ("\x00null",)
-    if isinstance(val, float):
-        if math.isnan(val):
-            return ("nan",)
-        return (f"{val:.9g}",)
-    return (str(val),)
-
-
-def _rows_canonical(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_canon(r[i])[0] for i in idx) for r in rows]
-    out.sort()
-    return out
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -76,8 +57,8 @@ def test_query_matches_oracle(name, spark, duck):
 
     assert sorted(scols) == sorted(dcols), f"{name}: column names differ"
     assert len(srows) == len(drows), f"{name}: row count {len(srows)} != {len(drows)}"
-    sc = _rows_canonical(scols, srows)
-    dc = _rows_canonical(dcols, drows)
+    sc = rows_canonical(scols, srows)
+    dc = rows_canonical(dcols, drows)
     mismatches = [i for i, (x, y) in enumerate(zip(sc, dc)) if x != y]
     assert not mismatches, (
         f"{name}: {len(mismatches)} mismatched rows; first: "

@@ -16,6 +16,7 @@ Three claims under test (plans/skipping.py, plans/zorder.py):
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -273,3 +274,32 @@ def test_zorder_key_rejects_bad_shapes(spark):
         zorder.zorder_key(df, ["x"])
     with pytest.raises(ValueError):
         zorder.zorder_key(df, ["x", "y"], bits=32)
+
+
+@pytest.mark.parametrize("name", ["ev_layout_pruned", "ev_skip_pruned"])
+def test_derived_table_rebuilds_when_events_are_rewritten(
+    spark, tmp_path, monkeypatch, name
+):
+    """The layout and z-order rewrites belong to the events bytes: a
+    rewrite with other rows whose mtime falls in the same whole second
+    must get a fresh table, so the query still equals its oracle."""
+    import tempfile
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.conftest import assert_matches_oracle
+
+    # derived tables land under tmp_path and go with it
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    events = pq.read_table(f"{SF_CORRECT}/events.parquet")
+    path = str(tmp_path / "events.parquet")
+    sec = None
+    for parity in (0, 1):
+        rows = events.filter(pc.equal(pc.bit_wise_and(events["event_id"], 1), parity))
+        pq.write_table(rows, path)
+        sec = sec if sec is not None else os.stat(path).st_mtime_ns // 10**9
+        # both writes stamped inside the same whole second
+        stamp = sec * 10**9 + parity * 500_000_000
+        os.utime(path, ns=(stamp, stamp))
+        assert_matches_oracle(spark, str(tmp_path), name, ("events",))
