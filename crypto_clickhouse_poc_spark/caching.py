@@ -12,7 +12,8 @@ executor storage without bound.
 the new cache unpersists the previous invocation's. Unpersisting a
 DataFrame a consumer still holds is always safe in Spark — the plan simply
 recomputes — so the bound trades at worst one recompute of a stale handle
-for a hard O(#call-sites) storage ceiling.
+for a hard O(#call-sites) storage ceiling. ``bounded_checkpoint`` holds
+eager local checkpoints to the same one-per-site bound.
 
 Fitted models (``fitted``) and derived tables (``derived_dir``) are built
 once per set of source bytes: keyed on ``(relpath, st_mtime_ns, st_size)``
@@ -59,6 +60,29 @@ def bounded_cache(key: str, df: DataFrame) -> DataFrame:
     if prev is not None and prev is not cached and not prev.sameSemantics(cached):
         prev.unpersist()
     return cached
+
+
+_CHECKPOINTS: dict[str, DataFrame] = {}
+
+
+def bounded_checkpoint(key: str, df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` under a call-site key, releasing
+    the key's previous checkpoint RDD, so a session holds at most one
+    live checkpoint per site (the bound ``bounded_cache`` keeps for
+    caches). Unlike a cache, a local checkpoint cannot recompute: a frame
+    built over an earlier invocation of the same site must be consumed
+    before the next invocation, or its read fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. The query functions that use
+    it return frames that callers collect at once."""
+    cp = df.localCheckpoint(eager=True)
+    with _LOCK:
+        prev = _CHECKPOINTS.get(key)
+        _CHECKPOINTS[key] = cp
+    if prev is not None:
+        # the checkpointed frame's plan is a LogicalRDD over the persisted
+        # RDD; unpersisting it frees the blocks
+        prev._jdf.queryExecution().logical().rdd().unpersist(False)
+    return cp
 
 
 def live_cache_count() -> int:

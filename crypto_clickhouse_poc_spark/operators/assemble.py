@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import bounded_cache
+from ..caching import bounded_checkpoint
 from ..functions import text as T
 from ..tables import load
 from .curation import (
@@ -94,7 +94,7 @@ def assembled_docs(
     input three times (bounds collect, full leg, boundary leg), and
     without the cache each evaluation re-runs the ENTIRE upstream chain
     — LSH band joins and the cluster fixpoint included (measured 13.5 s
-    → 4.9 s at sf0.1). ``bounded_cache`` keeps at most one live copy.
+    → 4.9 s at sf0.1). ``bounded_checkpoint`` keeps one live copy per site.
     Pass False to inspect the un-truncated plan (tests do)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     toks = T.tokens(F.col("text"))
@@ -111,8 +111,9 @@ def assembled_docs(
         # per invocation (job-profile gap receipt, plans/r17). The
         # checkpoint truncates the plan at the materialization boundary
         # (guide §3.3); fault tolerance of this intermediate is
-        # irrelevant inside one query invocation.
-        canonical = canonical.localCheckpoint(eager=True)
+        # irrelevant inside one query invocation. One live checkpoint per
+        # site: the next invocation releases this one.
+        canonical = bounded_checkpoint("assemble.canonical", canonical)
 
     # token arrays materialized as their own column before every n-gram
     # pass — shingles_from_tokens' hot-path contract (slicing an attribute,
@@ -143,7 +144,7 @@ def assembled_docs(
         # same plan-truncation rule as `canonical` above: the mix's four
         # references (bounds collect, full leg, boundary leg, pack) each
         # re-planned the whole gates→LSH→decontaminate chain
-        mix_in = mix_in.localCheckpoint(eager=True)
+        mix_in = bounded_checkpoint("assemble.mix_in", mix_in)
     return _mix_kept_from(mix_in, extra_cols=("n_tok",)).select(
         "doc_id", "lang", "n_tok"
     )

@@ -55,7 +55,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..localframe import local_frame
+from .. import localframe as L
 from ..operators.bloom import _word_bits, bloom_positions
 from . import snapshots as S
 
@@ -414,17 +414,10 @@ def _maybe_files(
     idx = spark.read.parquet(
         *[str(Path(path) / IDX_DIR / d) for d in _dirs_of(meta)]
     )
-    words = [int(w) for w in all_words]
-    if len(words) <= 128:
-        hit = idx.where(F.col("word").isin(*words))
-    else:
-        # the r13 literal-tax rule: F.lit/isin cost one py4j round trip
-        # per value — a multi-thousand-key probe (CDC bloom prune, a
-        # scoped read's key set) builds its word filter as one local
-        # broadcast semi-join instead
-        wdf = local_frame(spark, [(w,) for w in words], "word long")
-        hit = idx.join(F.broadcast(wdf), "word", "left_semi")
-    rows = hit.select("file", "word", "bits").collect()
+    import pyarrow as pa
+
+    words = pa.table({"word": pa.array(sorted(all_words), pa.int32())})
+    rows = L.in_keys(spark, idx, words).select("file", "word", "bits").collect()
     got: dict[str, dict[int, int]] = {}
     for r in rows:
         got.setdefault(r.file, {})[r.word] = r.bits
@@ -664,22 +657,10 @@ def read_points(
     # files not in the indexed version's manifest (post-build append,
     # rollback re-exposure) are kept: the index knows nothing about them
     files = prune_file_list(spark, path, key_col, values, m["files"])
-    wanted = [str(v) for v in values]
-
-    def _residual(df):
-        if len(wanted) <= 128:
-            return df.where(F.col(key_col).cast("string").isin(*wanted))
-        # r13 literal-tax rule: big probe sets filter through one local
-        # broadcast semi-join, not thousands of py4j literal round trips
-        kdf = local_frame(spark, [(w,) for w in wanted], "_probe string")
-        return df.join(
-            F.broadcast(kdf),
-            df[key_col].cast("string") == kdf["_probe"],
-            "left_semi",
-        )
-
     if not files:
-        return _residual(S._empty_like(spark, path).drop(S.TXN_COL))
+        return S._empty_like(spark, path).drop(S.TXN_COL)
+    import pyarrow as pa
+
     df = S._apply_dvs(
         spark,
         S._read_files(
@@ -688,7 +669,10 @@ def read_points(
         m,
         path,
     ).drop(S.TXN_COL)
-    return _residual(df)
+    # probe values match the key column's string form
+    wanted = pa.table({"_probe": pa.array([str(v) for v in values], pa.string())})
+    probe = df.withColumn("_probe", F.col(key_col).cast("string"))
+    return L.in_keys(spark, probe, wanted).drop("_probe")
 
 
 def read_point(spark: SparkSession, path: str, key_col: str, value) -> DataFrame:

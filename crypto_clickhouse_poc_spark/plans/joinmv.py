@@ -67,10 +67,12 @@ from typing import TYPE_CHECKING, Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..localframe import local_frame
+from .. import localframe as L
+from ..localframe import arrow_table, local_frame
 from ..streaming.bars import partial_bars
 from . import bloomidx as B
 from . import snapshots as S
+from .logmv import MAX_SCOPED_FRAC
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -101,40 +103,24 @@ def enriched_status(mv_path: str, app: str = "joinmv") -> dict | None:
     return {"fact_version": f, "dim_version": d}
 
 
-# Above this many affected keys the residual predicate switches from a
-# pushed IN-filter to a broadcast semi-join (r12 ADVICE: a 65k-literal
-# In blows up Catalyst long before the max_scoped_keys fallback).
-# r13 re-measurement moved the bound way down: PySpark's isin costs one
-# py4j round trip PER literal (~0.5 ms each), so by ~1k keys the IN's
-# construction alone dwarfs the broadcast semi-join it was avoiding.
-# Below it, the native-typed IN is strictly better — it reaches the
-# parquet scan.
-_MAX_ISIN_KEYS = 128
-
-# r17: bound for materializing the PROJECTED dim on the driver. The dim
-# is broadcast-sized by contract (every enrich ships it through a
-# BroadcastExchange, whose build is itself a driver-side collect), so a
-# driver copy of (join_key, *dim_cols) is the same memory class the
-# plan already pays — and it turns the merge-on-read dim plan that the
-# scoped path used to localCheckpoint (r13) into a LocalTableScan: the
-# dup check becomes a Python count (zero jobs), the enrich joins build
-# their broadcast from local rows (zero scan stages), and the fraction
-# fallback's denominator becomes the EXACT live dim row count — closing
-# the r16 ADVICE gap where the manifest-row proxy over-counts a
-# dim_view'd (SCD2) dim so badly the fallback never fires. A dim larger
-# than this keeps the r13 localCheckpoint + distributed-count path.
-_DIM_LOCAL_MAX_ROWS = 65_536
-
-
 def _collect_dim_local(
     dim: DataFrame, join_key: str, dim_cols: Sequence[str]
 ) -> pa.Table | None:
     """The projected dim's rows as an Arrow table — collected and handed
     back to Spark as a local relation without a Python round trip — or
-    None when it exceeds ``_DIM_LOCAL_MAX_ROWS`` (fall back to the
-    distributed path)."""
-    rows = dim.select(join_key, *dim_cols).limit(_DIM_LOCAL_MAX_ROWS + 1).toArrow()
-    return None if rows.num_rows > _DIM_LOCAL_MAX_ROWS else rows
+    None past ``localframe.LOCAL_MAX`` rows (the distributed path).
+
+    r17: the dim is broadcast-sized by contract (every enrich ships it
+    through a BroadcastExchange, whose build is itself a driver-side
+    collect), so a driver copy of (join_key, *dim_cols) is the memory
+    class the plan already pays. It turns the merge-on-read dim plan the
+    scoped path used to localCheckpoint (r13) into a LocalTableScan: the
+    dup check becomes a Python count (zero jobs), the enrich joins build
+    their broadcast from local rows, and the fraction fallback's
+    denominator is the EXACT live dim row count (the r16 ADVICE gap: the
+    manifest-row proxy over-counts a dim_view'd SCD2 dim)."""
+    rows = dim.select(join_key, *dim_cols).limit(L.LOCAL_MAX + 1).toArrow()
+    return None if rows.num_rows > L.LOCAL_MAX else rows
 
 
 def _read_fact_keys(
@@ -142,38 +128,25 @@ def _read_fact_keys(
     fact_path: str,
     version: int,
     key_col: str,
-    keys: list,
-    key_rows: DataFrame | None = None,
+    keys: pa.Table,
 ) -> DataFrame:
-    """The pinned-version fact rows whose ``key_col`` is in ``keys`` —
-    manifest-level Bloom pruning when a sidecar covers the key (advisory:
-    files the index can't rule out are read and the predicate re-applied,
-    the repo-wide pruning contract), merge-on-read deletes applied.
-    ``key_rows`` (single-column frame of the same keys) carries the
-    residual predicate as a broadcast left-semi join when the set is too
-    large for a literal IN."""
+    """The pinned-version fact rows whose ``key_col`` value is a row of
+    ``keys`` (one column, named ``key_col``) — manifest-level Bloom
+    pruning when a sidecar covers the key (advisory: files the index
+    can't rule out are read and the key filter re-applied, the repo-wide
+    pruning contract), merge-on-read deletes applied."""
     m = S.manifest(fact_path, version)
+    vals = keys.column(0).to_pylist()
     # manifest-stats key prune first (pure metadata, bites on a
     # cluster_cols layout where each file covers a contiguous key range;
     # era-aware: pre-rename files' stats probe under their written name),
     # then the Bloom sidecar over the survivors
     files = S.prune_files_by_values(
-        m["files"], key_col, keys, renames=m.get("renames")
+        m["files"], key_col, vals, renames=m.get("renames")
     )
-    files = B.prune_file_list(spark, fact_path, key_col, keys, files)
-
-    def _residual(df: DataFrame) -> DataFrame:
-        if len(keys) <= _MAX_ISIN_KEYS or key_rows is None:
-            # native-typed IN: pushes to the parquet scan (a
-            # cast-to-string comparison would not), re-applying the
-            # predicate the Bloom prune only approximated
-            return df.where(F.col(key_col).isin(*keys))
-        return df.join(
-            F.broadcast(key_rows.select(key_col)), key_col, "left_semi"
-        )
-
+    files = B.prune_file_list(spark, fact_path, key_col, vals, files)
     if not files:
-        return _residual(S._empty_like(spark, fact_path).drop(S.TXN_COL))
+        return S._empty_like(spark, fact_path).drop(S.TXN_COL)
     # schema + renames from the pinned manifest: a column-mapped fact
     # (RENAME COLUMN somewhere in its history) must translate each era's
     # written names here exactly like read_snapshot does — without them
@@ -186,7 +159,7 @@ def _read_fact_keys(
         m,
         fact_path,
     ).drop(S.TXN_COL)
-    return _residual(df)
+    return L.in_keys(spark, df, keys)
 
 
 def _enrich(
@@ -210,8 +183,7 @@ def refresh_enriched_rollup(
     partial_fn: Callable[[DataFrame], DataFrame] = partial_bars,
     app: str = "joinmv",
     ts_col: str = "minute",
-    max_scoped_keys: int = 65_536,
-    max_scoped_frac: float = 0.5,
+    max_scoped_keys: int = L.LOCAL_MAX,
     dim_view: Callable[[DataFrame], DataFrame] | None = None,
 ) -> int | None:
     """Fold both logs' new commits into the enriched rollup.
@@ -298,7 +270,7 @@ def refresh_enriched_rollup(
     # (upserts leave equality-delete anti-joins on the read) is NOT free
     # — and the scoped path consumes it three times (dup check, scoped
     # enrich, fresh enrich). Materialize the PROJECTED dim on the driver
-    # once (r17 — see _DIM_LOCAL_MAX_ROWS); past the bound, keep the r13
+    # once (r17 — see _collect_dim_local); past the bound, keep the r13
     # localCheckpoint so each consumer at least reads a materialized plan
     dim_local = _collect_dim_local(dim, join_key, dim_cols)
     if dim_local is None:
@@ -403,7 +375,7 @@ def refresh_enriched_rollup(
     # the dim approximates the affected row fraction under roughly
     # uniform keys; a skewed key that slips through still lands inside
     # the probe-verified scoped costs.
-    if rows and len(rows) > max_scoped_frac * max(dim_rows, 1):
+    if rows and len(rows) > MAX_SCOPED_FRAC * max(dim_rows, 1):
         return rebuild_enriched(
             spark, fact_path, dim_path, mv_path,
             join_key=join_key, dim_cols=dim_cols,
@@ -418,15 +390,13 @@ def refresh_enriched_rollup(
             parts, mv_path, ts_col=ts_col,
             txn_app=app, txn_id=_wm(fact_head, dim_head), txn_expect=consumed,
         )
-    key_rows = local_frame(spark, [(k,) for k in keys], gdf.schema)
-    scoped_fact = _read_fact_keys(
-        spark, fact_path, fact_head, join_key, keys, key_rows=key_rows
-    )
+    keys_t = arrow_table([(k,) for k in keys], gdf.schema)
+    scoped_fact = _read_fact_keys(spark, fact_path, fact_head, join_key, keys_t)
     scoped = _enrich(partial_fn(scoped_fact), dim, join_key, dim_cols)
     # inserts OUTSIDE the affected keys are plain new enriched partials
     # (inserts inside them are already in the pinned-head scan above)
     fresh = _enrich(
-        partial_fn(ins).join(F.broadcast(key_rows), join_key, "left_anti"),
+        L.in_keys(spark, partial_fn(ins), keys_t, anti=True),
         dim,
         join_key,
         dim_cols,

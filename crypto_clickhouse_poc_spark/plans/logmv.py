@@ -57,7 +57,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..localframe import local_frame
+from .. import localframe as L
 from ..streaming.bars import partial_bars, reaggregate_bars
 from . import snapshots as S
 
@@ -82,17 +82,16 @@ def _warn_scope_key_once(base_path: str, cols: list[str]) -> None:
         stacklevel=3,
     )
 
-# fall back to rebuild when a delete touches more groups than this: the
-# affected-key set is driver-collected (for the scope bounds and the
-# eq-delete key file) and broadcast into the scoped semi-joins, and past
-# this size a pruned re-aggregation stops being meaningfully cheaper than
-# one full recompute anyway
-MAX_SCOPED_GROUPS = 65_536
+# fall back to rebuild when a scoped swap would touch more than this
+# fraction of the MV's groups (joinmv: of the dim's keys): the swap then
+# re-aggregates nearly everything AND leaves an eq-delete entry taxing
+# every read until compaction, where a rebuild is one clean swap
+MAX_SCOPED_FRAC = 0.5
 
 # how much base-row time one group time value spans (a "minute" group
 # folds rows with ts in [minute, minute + 1min)): the scoped recompute
 # prunes the base scan to [min group, max group + bucket), then the
-# group semi-join makes the row set exact — the bucket only has to be an
+# group filter makes the row set exact — the bucket only has to be an
 # UPPER bound on the span for pruning to stay a pure optimization
 _MINUTE = _dt.timedelta(minutes=1)
 
@@ -250,9 +249,7 @@ def refresh_rollup(
     group_cols: Sequence[str] | None = None,
     scope_ts_col: str = "ts",
     scope_bucket: _dt.timedelta = _MINUTE,
-    max_scoped_groups: int = MAX_SCOPED_GROUPS,
     scope_key_col: str | None = None,
-    max_scoped_frac: float = 0.5,
 ) -> int | None:
     """Fold the base table's new commits into the rollup MV.
 
@@ -287,13 +284,13 @@ def refresh_rollup(
       cannot retract) → the GROUP-SCOPED path (r12): the CDC delete rows
       name exactly which ``group_cols`` groups changed, so re-aggregate
       ONLY those groups from the pinned base head (scan pruned to the
-      groups' time span via footer stats, then an exact group semi-join)
+      groups' time span via footer stats, then an exact group filter)
       and swap their stale partials in ONE atomic
       :func:`snapshots.upsert_by_keys` commit — erasure on a bars MV
       costs O(deleted groups' rows), not O(base). Falls back to
-      :func:`rebuild_rollup` past ``max_scoped_groups`` (the key set is
-      driver-collected and broadcast; beyond that a pruned re-aggregation
-      stops beating one recompute). The merge leg rides the row-precise
+      :func:`rebuild_rollup` past ``localframe.LOCAL_MAX`` groups (the
+      key set is driver-collected) or past ``MAX_SCOPED_FRAC`` of the
+      MV's partial rows. The merge leg rides the row-precise
       CDC diff (``precise_merge=True``), so a ``merge_into`` that
       logically changed k rows scopes to those rows' groups — a
       layout-only rewrite scopes to zero and degenerates to an append;
@@ -316,7 +313,10 @@ def refresh_rollup(
     affected groups' key values via the manifest stats a
     ``cluster_cols`` write records — on a key-clustered base, an
     erasure touching one symbol reads that symbol's files only, not the
-    full width of the time slice."""
+    full width of the time slice. The scoped path's bounds are fixed, not
+    knobs: ``localframe.LOCAL_MAX`` groups and ``MAX_SCOPED_FRAC`` of
+    the MV's rows; up to ``localframe.LITERAL_MAX`` groups the group
+    filters are one literal ``IN`` (:func:`localframe.in_keys`)."""
     head = S.latest_version(base_path)
     if head is None:
         raise FileNotFoundError(f"no snapshots at {base_path}")
@@ -361,9 +361,7 @@ def refresh_rollup(
             group_cols=tuple(group_cols or (ts_col, "symbol")),
             scope_ts_col=scope_ts_col,
             scope_bucket=scope_bucket,
-            max_scoped_groups=max_scoped_groups,
             scope_key_col=scope_key_col,
-            max_scoped_frac=max_scoped_frac,
             # r13: ranges containing a partition OVERWRITE derive the
             # affected groups from the FILE-level CDC — the row-precise
             # multiset diff is a WIDE full-row shuffle over the whole
@@ -414,9 +412,7 @@ def _refresh_scoped(
     group_cols: tuple,
     scope_ts_col: str,
     scope_bucket: _dt.timedelta,
-    max_scoped_groups: int,
     scope_key_col: str | None = None,
-    max_scoped_frac: float = 0.5,
     precise: bool = True,
 ) -> int:
     """The non-invertible delete leg: recompute ONLY the groups the CDC
@@ -451,7 +447,7 @@ def _refresh_scoped(
             "rows" in f for f in removed + head_m["files"]
         ):
             base_rows = sum(f["rows"] for f in head_m["files"])
-            if sum(f["rows"] for f in removed) > max_scoped_frac * max(
+            if sum(f["rows"] for f in removed) > MAX_SCOPED_FRAC * max(
                 base_rows, 1
             ):
                 return rebuild_rollup(
@@ -468,14 +464,14 @@ def _refresh_scoped(
     )
     # the affected-group set: partial_fn is the one thing that knows how
     # base rows map to group keys, so aggregate the delete rows and keep
-    # the keys. Driver-collected (bounded by max_scoped_groups) so the
-    # CDC pipeline runs ONCE and the semi-joins below get a local frame.
+    # the keys. Driver-collected (bounded by localframe.LOCAL_MAX) so the
+    # CDC pipeline runs ONCE and the group filters below hold the keys.
     # Collected as Arrow and handed back as Arrow: timestamps stay UTC
     # instants end to end (no OS-local naive values, no Python worker).
     gdf = partial_fn(dels).select(*group_cols).distinct()
-    groups_t = gdf.limit(max_scoped_groups + 1).toArrow()
+    groups_t = gdf.limit(L.LOCAL_MAX + 1).toArrow()
     rows = list(zip(*(c.to_pylist() for c in groups_t.columns)))
-    if len(rows) > max_scoped_groups:
+    if len(rows) > L.LOCAL_MAX:
         # too many groups for a scoped swap to beat one recompute
         return rebuild_rollup(
             spark, base_path, mv_path, partial_fn, app, ts_col=ts_col
@@ -502,7 +498,7 @@ def _refresh_scoped(
         if mv_ents and all("rows" in f for f in mv_ents)
         else 0
     )
-    if mv_rows and len(rows) > max_scoped_frac * mv_rows:
+    if mv_rows and len(rows) > MAX_SCOPED_FRAC * mv_rows:
         return rebuild_rollup(
             spark, base_path, mv_path, partial_fn, app, ts_col=ts_col
         )
@@ -530,9 +526,8 @@ def _refresh_scoped(
             f"a {type(rows[0][0]).__name__} value {rows[0][0]!r}. Put "
             "the time bucket first in group_cols."
         )
-    groups = local_frame(spark, groups_t)
     # pinned-head base scan pruned to the groups' time span (footer-stat
-    # pruning; the semi-join makes the row set exact — pruning is an
+    # pruning; the group filter makes the row set exact — pruning is an
     # optimization, never a semantics change), re-aggregated and narrowed
     # to exactly the affected groups. The Arrow values are aware UTC
     # instants, which read_snapshot's ts_range takes as such on any
@@ -542,7 +537,7 @@ def _refresh_scoped(
     # opt-in FILE-level key prune: when scope_key_col passes through
     # partial_fn unchanged from the same-named base column, the pinned
     # head only needs files whose key range can hold an affected group's
-    # key. Advisory — the group semi-join below keeps the row set exact —
+    # key. Advisory — the group filter below keeps the row set exact —
     # and it bites only on a cluster_cols-written base (unclustered files
     # carry no string key stats and are never pruned).
     extra_prune = None
@@ -581,14 +576,10 @@ def _refresh_scoped(
         ts_col=scope_ts_col,
         extra_prune=extra_prune,
     )
-    scoped = partial_fn(base).join(
-        F.broadcast(groups), list(group_cols), "left_semi"
-    )
+    scoped = L.in_keys(spark, partial_fn(base), groups_t)
     # inserts landing OUTSIDE the affected groups are plain new partials
     # (inserts INSIDE them are already part of the head scan above)
-    fresh = partial_fn(ins).join(
-        F.broadcast(groups), list(group_cols), "left_anti"
-    )
+    fresh = L.in_keys(spark, partial_fn(ins), groups_t, anti=True)
     # one atomic commit: append the replacement + fresh partials and
     # equality-delete every PRIOR partial row of the affected groups
     # (keys=groups, a superset of the replacement rows' keys: a fully

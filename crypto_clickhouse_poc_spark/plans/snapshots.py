@@ -82,7 +82,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 
-from ..localframe import arrow_table, local_frame
+from .. import localframe
+from ..localframe import arrow_table, local_frame, sql_str
 from .layout import PARTITION_COL, dedup_view, with_partition_col
 
 if TYPE_CHECKING:
@@ -1350,9 +1351,9 @@ _CDC_DELETING = (
 _CDC_COVERED = ("append",) + _CDC_DELETING
 
 
-# cap on the recorded key count the CDC bloom prune reads driver-side:
-# an eq-delete's keys are small by delete_by_keys's contract (O(keys) is
-# the op's point); a pathological multi-million-key delete skips pruning
+# cap on the key count the CDC eq leg probes the Bloom sidecars with: an
+# eq-delete's keys are small by delete_by_keys's contract (O(keys) is
+# the op's point); a larger key set reads the files unpruned
 _CDC_BLOOM_MAX_KEYS = 4096
 
 
@@ -1599,9 +1600,16 @@ def read_changes_cdc(
                     # prune: a file provably lacking ANY component value
                     # provably lacks the composite row, so intersecting
                     # the per-column maybe-sets is sound (r11)
+                    # the key table is read once, for the prune and the
+                    # filter; past LOCAL_MAX the keys stay in their files
                     files = m_prev["files"]
-                    if sum(e["rows"] for e in entries) <= _CDC_BLOOM_MAX_KEYS:
-                        keys = _eq_keys_table(path, entries, kst)
+                    n_keys = sum(e["rows"] for e in entries)
+                    keys = (
+                        _eq_keys_table(path, entries, kst).drop_columns("_eq_v")
+                        if n_keys <= localframe.LOCAL_MAX
+                        else None
+                    )
+                    if keys is not None and n_keys <= _CDC_BLOOM_MAX_KEYS:
                         for c in cols:
                             if not files:
                                 break
@@ -1616,12 +1624,14 @@ def read_changes_cdc(
                         m_prev,
                         path,
                     ).drop(TXN_COL)
-                    kdf = _eq_keys_frame(spark, path, entries, kst).drop("_eq_v")
-                    _tag(
-                        base.join(F.broadcast(kdf), list(cols), "left_semi"),
-                        "delete",
-                        v,
-                    )
+                    if keys is not None:
+                        hit = localframe.in_keys(spark, base, keys)
+                    else:
+                        kdf = _eq_keys_frame(spark, path, entries, kst)
+                        hit = base.join(
+                            F.broadcast(kdf.drop("_eq_v")), list(cols), "left_semi"
+                        )
+                    _tag(hit, "delete", v)
     if not pieces:
         return (
             _empty_like(spark, path)
@@ -1723,9 +1733,13 @@ def _apply_dvs(spark: SparkSession, df: DataFrame, m: dict, path: str) -> DataFr
       vector holds KEY VALUES; a row is dropped when its keys match any
       delete row AND its file was added BEFORE the delete committed
       (``added_v < entry.v`` — the sequence rule that lets the same key
-      be re-inserted after the delete). One row filter, or one broadcast
-      anti-join per key-column set; compaction materializes and clears
-      both.
+      be re-inserted after the delete). Small key sets of any width are
+      one row filter (a literal ``IN`` per entry, rendered by
+      :func:`localframe.in_sql`); past ``localframe.LITERAL_MAX`` keys it
+      is one broadcast anti-join per key-column set, over a local key
+      relation up to ``localframe.LOCAL_MAX`` recorded keys and over the
+      scanned key files past that. Compaction materializes and clears
+      both kinds.
 
     Both sides are broadcast; rows from files no vector mentions pass
     through the hash lookups untouched; no data file is ever rewritten
@@ -1755,13 +1769,6 @@ def _read_dvs(spark: SparkSession, path: str, dvs: list[dict]) -> DataFrame:
     return spark.read.schema(f"{_DV_FILE} string, {_DV_POS} long").parquet(
         *[str(Path(path) / e["path"]) for e in dvs]
     )
-
-
-# recorded-key bound for the LOCAL key frame: the scoped-swap entries
-# (composite (minute, symbol) group keys) are bounded by the MV modules'
-# max_scoped_* caps at exactly this value, so the routine case always
-# qualifies; a genuinely huge key set is scanned instead
-_EQ_LOCAL_MAX_KEYS = 65_536
 
 
 def _exact_cast(col: pa.ChunkedArray, typ: pa.DataType) -> pa.ChunkedArray:
@@ -1822,7 +1829,7 @@ def _eq_keys_frame(
     spark: SparkSession, path: str, entries: list[dict], key_schema: StructType
 ) -> DataFrame:
     """The keys of same-``cols`` ``entries`` as one frame typed by
-    ``key_schema`` and carrying ``_eq_v``. Within ``_EQ_LOCAL_MAX_KEYS``
+    ``key_schema`` and carrying ``_eq_v``. Within ``localframe.LOCAL_MAX``
     recorded keys it is a local relation over :func:`_eq_keys_table` —
     the Arrow table goes to Spark directly (SPARK-44533), never through
     pandas, whose int64-with-nulls → float64 upcast would mis-compare
@@ -1831,7 +1838,7 @@ def _eq_keys_frame(
     (Spark's Parquet reader widens a narrower file column but refuses to
     narrow a wider one) and is try-cast to the frame's type, so a key
     the type cannot hold becomes null, as in :func:`_exact_cast`."""
-    if sum(e["rows"] for e in entries) <= _EQ_LOCAL_MAX_KEYS:
+    if sum(e["rows"] for e in entries) <= localframe.LOCAL_MAX:
         return local_frame(spark, _eq_keys_table(path, entries, key_schema))
     frames = []
     for e in entries:
@@ -1861,12 +1868,6 @@ def _eq_keys_frame(
     return out
 
 
-def _sql_str(s: str) -> str:
-    """A Spark-SQL single-quoted string literal (backslash escapes are
-    on by default in the parser)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _added_v_sql(files: list[dict]) -> str:
     """Each row's source-file ``added_v`` (0 for a file not listed) as ONE
     SQL expression over ``_dv_target_file``: the manifest's file→added_v
@@ -1877,7 +1878,7 @@ def _added_v_sql(files: list[dict]) -> str:
     one parse is ~1 ms regardless of file count (the same one-parse rule
     as ``functions/vectors.py``)."""
     entries = ",".join(
-        f"{_sql_str(f['path'])},{int(f['added_v'])}L" for f in files
+        f"{sql_str(f['path'])},{int(f['added_v'])}L" for f in files
     )
     return f"coalesce(element_at(map({entries}), `{_DV_FILE}`), 0L)"
 
@@ -1886,8 +1887,8 @@ def _join_eq_filter(
     spark: SparkSession, tagged: DataFrame, m: dict, path: str, eq: list[dict]
 ) -> DataFrame:
     """The equality-delete merge-on-read JOIN plan, for entries the pure
-    row filter (:func:`_inline_eq_filter`) declines — composite keys (a
-    scoped MV swap's (minute, symbol) groups) and large key sets.
+    row filter (:func:`_inline_eq_filter`) declines — key sets past
+    ``localframe.LITERAL_MAX``, large manifests, binary/decimal keys.
 
     ONE broadcast anti-join per key-column set (usually one) over
     :func:`_eq_keys_frame`, whose rows carry their entry version as
@@ -1922,92 +1923,40 @@ def _join_eq_filter(
     return tagged if files_small else tagged.drop("_added_v")
 
 
-# _inline_eq_filter bounds: past these the literal plan (an In over the
-# keys, a create_map over the files) stops beating the LOCAL broadcast
-# anti-join (_join_eq_filter's local key frame). The bound is NOT plan size —
-# it's literal-construction cost: PySpark's Column.isin makes one py4j
-# round trip per value, measured ~0.55 s for a 1,031-key IN vs ~0.05 s
-# for the local-frame anti-join of the same keys (r13 re-measurement;
-# the old 8192 bound predated the local join path and was calibrated
-# against the far costlier per-entry-scan join plan). Small key sets
-# keep the pure filter: zero joins and the IN reaches the scan.
-_EQ_INLINE_MAX_KEYS = 128
+# past this many manifest files the literal file→added_v map stops
+# beating one broadcast files-frame join
 _EQ_INLINE_MAX_FILES = 512
 
 
 def _inline_eq_filter(tagged: DataFrame, m: dict, path: str, eq: list[dict]):
-    """The SMALL-case equality-delete plan (r13): every read of an
-    upsert-carrying table was paying ~2 s of fixed overhead — a broadcast
-    of the files→added_v frame plus, per eq entry, a parquet scan and a
-    broadcast anti-join — even for a 16-row dim with a 1-key delete.
-    When every entry is single-column with a small recorded key count and
-    the manifest is small, read the keys driver-side (:func:`_eq_keys`,
-    typed by ``tagged``'s column) and express the whole merge as ONE row
-    filter: a typed literal IN per entry, sequenced by the file→added_v
-    literal map (:func:`_added_v_sql`). Same semantics as the join path
-    (null keys never match; ``added_v < entry.v``), zero extra jobs.
-    TEMPORAL keys (r13) ride the same path as epoch INTEGERS: the filter
-    compares ``unix_micros(col)`` / ``unix_date(col)`` against int
-    literals cast straight from the arrow epoch values — both sides
-    timezone-free, so the r8 session-timezone seam (a datetime literal
-    re-entering through the session zone) never opens. Returns None when
-    the case is not small or a key type has no literal form here
+    """The SMALL-case equality-delete plan (r13): the whole merge as ONE
+    row filter, zero joins and zero extra jobs. Each entry's keys are
+    read driver-side (:func:`_eq_keys`, typed by ``tagged``'s columns)
+    and rendered as one literal ``IN`` over any number of key columns
+    (:func:`localframe.in_sql`: temporal keys as epoch integers), then
+    sequenced by the file→added_v literal map (:func:`_added_v_sql`).
+    Same semantics as the join path: null keys never match, and
+    ``added_v < entry.v``. Returns None when the manifest or an entry
+    is past the literal bounds, or a key type has no literal form
     (binary/decimal keys: the join path compares stored values)."""
     if len(m["files"]) > _EQ_INLINE_MAX_FILES:
         return None
-    if not all(
-        len(e["cols"]) == 1 and 0 < e["rows"] <= _EQ_INLINE_MAX_KEYS for e in eq
-    ):
-        return None
-    import pyarrow as pa
+    if any(e["rows"] > localframe.LITERAL_MAX for e in eq):
+        return None  # decided before any key file is read
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from ..functions.vectors import _dbl_sql
-
     schema = tagged.schema
-    key_sets = []  # (key SQL expr string, [value SQL literals], entry v)
-    for e in eq:
-        col = e["cols"][0]
-        keys = _eq_keys(path, e, to_arrow_schema(StructType([schema[col]]))).column(0)
-        qcol = "`" + col.replace("`", "``") + "`"
-        if pa.types.is_timestamp(keys.type):
-            vals = [str(v) for v in keys.cast(pa.int64()).to_pylist() if v is not None]
-            key_sets.append((f"unix_micros({qcol})", vals, int(e["v"])))
-        elif pa.types.is_date(keys.type):
-            vals = [str(v) for v in keys.cast(pa.int32()).to_pylist() if v is not None]
-            key_sets.append((f"unix_date({qcol})", vals, int(e["v"])))
-        else:
-            vals = []
-            for v in keys.to_pylist():
-                if v is None:
-                    continue
-                if isinstance(v, bool):
-                    vals.append("true" if v else "false")
-                elif isinstance(v, int):
-                    vals.append(f"{v}L")
-                elif isinstance(v, float):
-                    vals.append(_dbl_sql(v))
-                elif isinstance(v, str):
-                    vals.append(_sql_str(v))
-                else:
-                    return None  # binary/decimal keys: the join path
-            key_sets.append((qcol, vals, int(e["v"])))
-    # the whole merge as ONE parsed row filter (r14 — the last per-value
-    # py4j site in the read path: Column.isin costs one round trip per
-    # key, ~0.55 ms each measured r13; one expr parse is flat in both
-    # key count and file count). Null semantics match the join path:
-    # a null key compares null -> the coalesce keeps the row.
     added_sql = _added_v_sql(m["files"])
-    drops = [
-        f"(({key_sql} IN ({','.join(vals)})) AND ({added_sql} < {v}L))"
-        for key_sql, vals, v in key_sets
-        if vals
-    ]
-    if not drops:
-        return tagged
-    return tagged.where(
-        F.expr(f"NOT coalesce({' OR '.join(drops)}, false)")
-    )
+    drops = []
+    for e in eq:
+        types = to_arrow_schema(StructType([schema[c] for c in e["cols"]]))
+        key_sql = localframe.in_sql(_eq_keys(path, e, types))
+        if key_sql is None:
+            return None
+        drops.append(f"(({key_sql}) AND ({added_sql} < {int(e['v'])}L))")
+    # one parsed filter: a null key compares null, which the coalesce
+    # keeps, as the anti-join keeps it
+    return tagged.where(F.expr(f"NOT coalesce({' OR '.join(drops)}, false)"))
 
 
 def _write_local_eq_keys(
@@ -2240,8 +2189,8 @@ def delete_by_keys(
     # _write_local_eq_keys dedups, so the one distinct runs only on the
     # over-bound path.
     kdf = keys.select(*cols)
-    probe = kdf.limit(_EQ_LOCAL_MAX_KEYS + 1).collect()
-    if len(probe) <= _EQ_LOCAL_MAX_KEYS:
+    probe = kdf.limit(localframe.LOCAL_MAX + 1).collect()
+    if len(probe) <= localframe.LOCAL_MAX:
         entries = _write_local_eq_keys(
             kdf, path, cols, [tuple(r) for r in probe]
         )
@@ -2343,8 +2292,8 @@ def upsert_by_keys(
         # distributed ONE-part-file write (each entry costs every future
         # read a broadcast anti-join until compaction materializes it).
         # Raw-key probe, distinct only past the bound (as delete_by_keys)
-        probe = key_rows.limit(_EQ_LOCAL_MAX_KEYS + 1).collect()
-        if len(probe) <= _EQ_LOCAL_MAX_KEYS:
+        probe = key_rows.limit(localframe.LOCAL_MAX + 1).collect()
+        if len(probe) <= localframe.LOCAL_MAX:
             entries = _write_local_eq_keys(
                 df, path, cols, [tuple(r) for r in probe]
             )

@@ -29,10 +29,9 @@ Semantics and scale shape:
   reader — the bootstrap equals ``read_snapshot``'s merge-on-read view.
   EQUALITY deletes boot as well (r12 single-column, r13 composite —
   upserts make them routine): the O(keys) key sets are read driver-side
-  and each partition anti-filters its key column(s) with a vectorized
-  ``is_in`` (one column) or a pandas MultiIndex anti-``isin`` (composite
-  keys), sequenced by the same added_v-vs-entry-version rule
-  ``_apply_dvs`` uses.
+  and each partition drops the matching rows with one Arrow anti join
+  over the key column(s), sequenced by the same added_v-vs-entry-version
+  rule ``_apply_dvs`` uses.
 - AFTER bootstrap, the stream dispatches on what each commit MEANS
   (r10): WRITER-FLAGGED layout-only commits (``data_change=False`` —
   bin-packing optimize, MV partial compaction) are SKIPPED, exactly
@@ -103,6 +102,7 @@ operationally with ``startingVersion``.
 from __future__ import annotations
 
 from pathlib import Path
+from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -117,6 +117,9 @@ from ..plans.snapshots import _eq_keys, _version_body
 from ..plans.snapshots import changed_meta as _changed_meta
 from ..plans.snapshots import latest_version as _head
 from ..plans.snapshots import manifest as _manifest
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 _ARROW_TO_DDL = {
     "int64": "bigint",
@@ -188,31 +191,27 @@ def _widen_ddl(a: str, b: str) -> str | None:
 
 def _eq_filters(
     path: str, eq_dvs: list[dict], columns: list[tuple[str, str]]
-) -> list[tuple[tuple[str, ...], list, int]]:
-    """[(key columns, key values, sequencing version)] from the
-    manifest's equality-delete entries — one driver-side read of the
-    O(keys) key set per entry (``snapshots._eq_keys``, typed by the
-    stream's declared ``columns``), at bootstrap only. Single-column
-    entries carry a plain list of the non-null values (a null key
-    matches nothing; vectorized ``is_in`` anti-filter per partition);
-    composite entries (r13) carry a list of key TUPLES, applied per
-    partition through a pandas MultiIndex ``isin`` — still one
-    vectorized pass per Arrow batch, never a per-row Python loop."""
+) -> list[tuple[tuple[str, ...], pa.Table, int]]:
+    """[(key columns, key table, sequencing version)] from the manifest's
+    equality-delete entries — one driver-side read of the O(keys) key set
+    per entry (``snapshots._eq_keys``, typed by the stream's declared
+    ``columns``), at bootstrap only. Each partition matches its rows
+    against the table with one Arrow hash join (:func:`_match_keys`)."""
     import pyarrow as pa
 
     declared = dict(columns)
-    out = []
-    for e in eq_dvs:
-        cols = tuple(e["cols"])
-        t = _eq_keys(
-            path, e, pa.schema([(c, _arrow_type(declared[c])) for c in cols])
+    return [
+        (
+            tuple(e["cols"]),
+            _eq_keys(
+                path,
+                e,
+                pa.schema([(c, _arrow_type(declared[c])) for c in e["cols"]]),
+            ),
+            e["v"],
         )
-        if len(cols) == 1:
-            keys: list = [k for k in t.column(0).to_pylist() if k is not None]
-        else:
-            keys = list(zip(*(t.column(c).to_pylist() for c in cols)))
-        out.append((cols, keys, e["v"]))
-    return out
+        for e in eq_dvs
+    ]
 
 
 def _dv_positions(path: str, dvs: list[dict]) -> dict[str, list[int]]:
@@ -404,24 +403,39 @@ def _arrow_type(ddl: str):
 
 
 def _align_keys(col, keys):
-    """(probe column, value set) on a common Arrow type for the
-    eq-delete legs. Keys cast DOWN to the file column's type when every
-    value fits (pyarrow's safe cast — exact or it refuses); otherwise
-    the FILE column casts UP to the key type (r16, the widen seam: an
-    erasure key that only fits the WIDENED type, probed against a
-    pre-widen narrow-era file, must match nothing — the old key-set
-    downcast raised ArrowInvalid mid-partition instead). Both directions
-    are value-exact, so the membership test is unchanged whenever the
-    old path worked at all."""
+    """(file column, key column) on a common Arrow type for the eq-delete
+    legs. Keys cast DOWN to the file column's type when every value fits
+    (pyarrow's safe cast — exact or it refuses); otherwise the FILE
+    column casts UP to the key type (r16, the widen seam: an erasure key
+    that only fits the WIDENED type, probed against a pre-widen
+    narrow-era file, must match nothing — the old key-set downcast
+    raised ArrowInvalid mid-partition instead). Both directions are
+    value-exact."""
     import pyarrow as pa
 
-    vals = pa.array(keys)
-    if vals.type == col.type:
-        return col, vals
+    if keys.type == col.type:
+        return col, keys
     try:
-        return col, vals.cast(col.type)
+        return col, keys.cast(col.type)
     except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-        return col.cast(vals.type), vals
+        return col.cast(keys.type), keys
+
+
+def _match_keys(table: pa.Table, keys: pa.Table, join_type: str) -> pa.Table:
+    """The rows of ``table`` whose ``keys.column_names`` values match a
+    key row (``"left semi"``) or match none (``"left anti"``), in file
+    row order: one Arrow hash join of the key columns, aligned by
+    :func:`_align_keys`, against ``keys``. A null never matches, on
+    either side — an equality delete compares with SQL equality."""
+    import numpy as np
+    import pyarrow as pa
+
+    left, right = {}, {}
+    for c in keys.column_names:
+        left[c], right[c] = _align_keys(table.column(c), keys.column(c))
+    left["_row"] = pa.array(np.arange(table.num_rows, dtype=np.int64))
+    hit = pa.table(left).join(pa.table(right), keys=keys.column_names, join_type=join_type)
+    return table.take(np.sort(hit.column("_row").to_numpy()))
 
 
 class SnapshotStreamReader(DataSourceStreamReader):
@@ -479,9 +493,8 @@ class SnapshotStreamReader(DataSourceStreamReader):
             m0 = _manifest(self.path, to)
             # equality deletes (r12/r13 — upserts make them routine):
             # entries are applied in each partition's Arrow reader (one
-            # driver-side read of the O(keys) key file here; a vectorized
-            # is_in anti-filter for single-column keys, a MultiIndex
-            # anti-isin for composite keys there, sequenced by the same
+            # driver-side read of the O(keys) key file here; one Arrow
+            # anti join there, sequenced by the same
             # added_v-vs-entry-version rule _apply_dvs uses).
             eq_specs = _eq_filters(self.path, m0.get("eq_dvs", []), self.columns)
             dv_pos = _dv_positions(self.path, m0.get("dvs", []))
@@ -589,7 +602,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         position-DVs name (a take() of the recorded positions), or
         (c) the pre-commit snapshot's rows matching a new eq-delete's
         key set (candidate files manifest-key-stat-pruned, then an exact
-        vectorized IN per partition). Metadata cost is O(changed month
+        Arrow semi join per partition). Metadata cost is O(changed month
         shards) per commit via manifest_delta; only the eq leg scans
         beyond the commit's own files — the documented CDC exception."""
         parts: list[InputPartition] = []
@@ -679,12 +692,9 @@ class SnapshotStreamReader(DataSourceStreamReader):
                         # re-applied below, so both are semantics-free
                         from ..plans import bloomidx as _bidx
 
-                        for ci, c in enumerate(cols):
+                        for c in cols:
                             vals = [
-                                x
-                                for k in keys
-                                for x in [(k if len(cols) == 1 else k[ci])]
-                                if x is not None
+                                x for x in keys.column(c).to_pylist() if x is not None
                             ]
                             files = prune_files_by_values(
                                 files, c, vals,
@@ -742,70 +752,20 @@ class SnapshotStreamReader(DataSourceStreamReader):
             mask[np.asarray(dv_positions, dtype=np.int64)] = False
             table = table.filter(pa.array(mask))
         for cols, keys in eq_filters:
-            # merge-on-read for sequenced equality deletes: vectorized
-            # anti-IN over the key column(s). Null keys can't match an
-            # equality delete (SQL equality), so null rows are always
-            # kept and null-carrying delete tuples match nothing.
-            import pyarrow.compute as pc
-
+            # merge-on-read for sequenced equality deletes: drop the rows
+            # matching the entry's keys
             if any(c not in table.column_names for c in cols):
                 # a pre-evolution file lacking a key column: every row's
                 # key is null there — nothing can match
                 continue
-            if len(cols) == 1:
-                kcol, vals = _align_keys(table.column(cols[0]), keys)
-                table = table.filter(
-                    pc.invert(
-                        pc.is_in(kcol, value_set=vals)
-                    ).fill_null(True)
-                )
-            else:
-                # composite key (r13): one vectorized MultiIndex anti-isin
-                # per batch — pandas' hash join, never a per-row loop
-                import numpy as np
-                import pandas as pd
-
-                kdf = table.select(list(cols)).to_pandas()
-                victims = [
-                    k for k in keys if all(x is not None for x in k)
-                ]
-                if not victims:
-                    continue
-                hit = pd.MultiIndex.from_frame(kdf).isin(
-                    pd.MultiIndex.from_tuples(victims, names=list(cols))
-                )
-                null_any = kdf.isnull().any(axis=1).to_numpy()
-                table = table.filter(pa.array(np.asarray(~hit) | null_any))
+            table = _match_keys(table, keys, "left anti")
         if select is not None and select[0] == "eq":
             # change-feed eq-delete leg: KEEP only rows matching the new
-            # key set (the inverse of the anti filters above). Null keys
-            # never match an equality delete, on either side.
-            import pyarrow.compute as pc
-
+            # key set (the inverse of the anti filters above)
             scols, skeys = select[1], select[2]
             if any(c not in table.column_names for c in scols):
                 return  # pre-evolution file: key column is all-null there
-            if len(scols) == 1:
-                victims1 = [k for k in skeys if k is not None]
-                if not victims1:
-                    return
-                kcol, vals = _align_keys(table.column(scols[0]), victims1)
-                table = table.filter(
-                    pc.is_in(kcol, value_set=vals).fill_null(False)
-                )
-            else:
-                import numpy as np
-                import pandas as pd
-
-                victims = [k for k in skeys if all(x is not None for x in k)]
-                if not victims:
-                    return
-                kdf = table.select(list(scols)).to_pandas()
-                hit = pd.MultiIndex.from_frame(kdf).isin(
-                    pd.MultiIndex.from_tuples(victims, names=list(scols))
-                )
-                null_any = kdf.isnull().any(axis=1).to_numpy()
-                table = table.filter(pa.array(np.asarray(hit) & ~null_any))
+            table = _match_keys(table, skeys, "left semi")
         n = table.num_rows
         cols, names = [], []
         for name, ddl in self.columns:

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .caching import fitted
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -75,6 +77,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    # Spark's cache matches a frame to a cached one by plan, and the plan
+    # names the path, not the bytes: once per new file identity, drop
+    # what Spark holds for the path, so a rewritten fixture reads fresh
+    fitted(sf_dir, (name,), ("spark-cache",), lambda: spark.catalog.refreshByPath(path))
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType

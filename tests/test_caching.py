@@ -165,3 +165,31 @@ def test_no_reuse_policy_left_in_operators():
                 offenders.append(f"{p.name}:{node.lineno} {names}")
         offenders += [f"{p.name} {w}" for w in ("getmtime", "os.rename") if w in src]
     assert offenders == []
+
+
+def test_cached_frame_over_a_rewritten_fixture_reads_the_new_rows(spark, store):
+    """A bounded-cached frame over fixture files (``tpch._partsupp``:
+    four suppliers per part) sees a ``part.parquet`` rewritten in place:
+    ``tables.load`` refreshes Spark's cache for the path once per new
+    file identity, where the cache alone matches the old plan by path."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from crypto_clickhouse_poc_spark.operators import tpch
+    from tests.conftest import SF_CORRECT
+
+    for t in ("part", "supplier"):
+        shutil.copy(f"{SF_CORRECT}/{t}.parquet", store / f"{t}.parquet")
+    part = store / "part.parquet"
+    n = pq.read_metadata(part).num_rows
+    key = f"tpch_partsupp:{store}"
+    try:
+        assert tpch._partsupp(spark, str(store)).count() == 4 * n
+        pq.write_table(pq.read_table(part).slice(0, n // 2), part)
+        _restamp(part, 1)
+        assert tpch._partsupp(spark, str(store)).count() == 4 * (n // 2)
+    finally:
+        live = caching._LIVE.pop(key, None)
+        if live is not None:
+            live.unpersist()

@@ -17,6 +17,7 @@ from pathlib import Path
 
 import pytest
 
+from crypto_clickhouse_poc_spark import localframe
 from crypto_clickhouse_poc_spark.plans import snapshots as S
 
 SCHEMA = "ts timestamp, symbol string, trade_id long, price double, ingested_at long"
@@ -222,12 +223,14 @@ def test_timestamp_key_delete_rides_the_inline_filter(spark, table):
         spark.conf.set("spark.sql.session.timeZone", saved)
 
 
-def test_composite_entries_fold_into_one_local_anti_join(spark, table):
+def test_composite_entries_fold_into_one_local_anti_join(spark, table, monkeypatch):
     """r13: composite-key entries no longer pay one parquet-scan +
     anti-join per entry plus a files-frame join — all same-cols entries
     are read driver-side and folded into ONE local broadcast frame
     (entry version riding as a column), so the read plan carries exactly
-    one anti-join and scans no _dv files."""
+    one anti-join and scans no _dv files. ``LITERAL_MAX = 0`` forces the
+    join plan (a small composite delete is a row filter)."""
+    monkeypatch.setattr(localframe, "LITERAL_MAX", 0)
     k1 = spark.createDataFrame([("BTC", 4)], "symbol string, trade_id long")
     k2 = spark.createDataFrame([("BTC", 7)], "symbol string, trade_id long")
     S.delete_by_keys(spark, table, k1)
@@ -257,13 +260,15 @@ def test_composite_timestamp_keys_survive_session_tz_shift(spark, table):
         spark.conf.set("spark.sql.session.timeZone", saved)
 
 
-def test_local_join_int64_keys_exact_above_2_53_even_with_nulls(spark, tmp_path):
+def test_local_join_int64_keys_exact_above_2_53_even_with_nulls(
+    spark, tmp_path, monkeypatch
+):
     """The local broadcast key frame goes to Spark as the ARROW table
     (never through pandas): a pandas round trip upcasts an
     int64-with-null key column to float64, where 2^53 and 2^53+1
     collide — the delete would silently also drop the neighboring row.
-    Composite cols force the local-join plan (inline handles only
-    single-col entries)."""
+    ``LITERAL_MAX = 0`` forces the local-join plan."""
+    monkeypatch.setattr(localframe, "LITERAL_MAX", 0)
     path = str(tmp_path / "bigkeys")
     big, nbr = (1 << 53), (1 << 53) + 1
     rows = [
@@ -291,11 +296,11 @@ def _ids_on_every_plan(spark, path, monkeypatch):
     ids, plan = read()
     assert "Join" not in plan
     out = [ids]
-    monkeypatch.setattr(S, "_EQ_INLINE_MAX_KEYS", 0)
+    monkeypatch.setattr(localframe, "LITERAL_MAX", 0)
     ids, plan = read()
     assert "LocalRelation" in plan
     out.append(ids)
-    monkeypatch.setattr(S, "_EQ_LOCAL_MAX_KEYS", 0)
+    monkeypatch.setattr(localframe, "LOCAL_MAX", 0)
     ids, plan = read()
     assert "Join" in plan and "LocalRelation" not in plan
     out.append(ids)
@@ -344,6 +349,39 @@ def test_keys_wider_than_the_column_read_on_every_plan(spark, tmp_path, monkeypa
     assert _ids_on_every_plan(spark, path, monkeypatch) == [[0, 1, 3, 4, 5]] * 3
 
 
+def test_composite_keys_read_alike_on_every_plan(spark, tmp_path, monkeypatch):
+    """A (symbol, trade_id) delete, with a null-component key and a
+    re-inserted key after it, reads the same rows through the inline
+    filter, the local join and the scanned join."""
+    path = str(tmp_path / "composite")
+    S.append(_batch(spark, 1, range(8)), path)
+    S.delete_by_keys(
+        spark,
+        path,
+        spark.createDataFrame(
+            [("BTC", 1), ("BTC", 5), ("ETH", 2), (None, 3)],
+            "symbol string, trade_id long",
+        ),
+    )
+    S.append(_batch(spark, 2, [5]), path)
+    assert _ids_on_every_plan(spark, path, monkeypatch) == [
+        [0, 2, 3, 4, 5, 6, 7]
+    ] * 3
+
+
+def test_small_composite_delete_reads_with_no_join(spark, table):
+    """A (symbol, trade_id) delete of 128 keys (``localframe.LITERAL_MAX``)
+    reads as one row filter — a tuple IN — with no join in the plan."""
+    keys = [("BTC", i) for i in range(2, 130)]
+    S.delete_by_keys(
+        spark, table, spark.createDataFrame(keys, "symbol string, trade_id long")
+    )
+    df = S.read_snapshot(spark, table)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan and "LocalRelation" not in plan
+    assert _ids(df) == [0, 1]
+
+
 def _probe_plans(spark, monkeypatch):
     """Record the executed plan of every collect() — the key probe is the
     only collect delete_by_keys/upsert_by_keys run."""
@@ -368,7 +406,7 @@ def test_duplicate_heavy_keys_read_the_same_on_both_sides_of_the_bound(
     rows: bound 3 is over on both counts, 4 is within the distinct count
     but over the raw one, 16 is within both — every side must erase the
     same rows, through delete_by_keys and upsert_by_keys alike."""
-    monkeypatch.setattr(S, "_EQ_LOCAL_MAX_KEYS", bound)
+    monkeypatch.setattr(localframe, "LOCAL_MAX", bound)
     ids = [1, 1, 1, 4, 4, 7, 7, 7, 8, 8]
     path, up = str(tmp_path / "d"), str(tmp_path / "u")
     for p in (path, up):

@@ -13,6 +13,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from crypto_clickhouse_poc_spark import localframe
 from crypto_clickhouse_poc_spark.plans import joinmv as J
 from crypto_clickhouse_poc_spark.plans import logmv as M
 from crypto_clickhouse_poc_spark.plans import snapshots as S
@@ -411,17 +412,18 @@ def test_large_key_set_takes_broadcast_semi_join_not_giant_isin(
 ):
     """r13 (ADVICE): near the 65k key cap a literal IN blows up Catalyst
     plan size/compile time before the rebuild fallback engages — above
-    ``_MAX_ISIN_KEYS`` the residual predicate rides a broadcast left-semi
-    join instead. Gate: force the threshold to 1, check the plan carries
-    no In/InSet on the key while results still equal the recompute."""
+    ``localframe.LITERAL_MAX`` the residual predicate rides a broadcast
+    left-semi join instead. Gate: force the threshold to 1, check the
+    plan carries no In/InSet on the key while results still equal the
+    recompute."""
     fact, dim, mv = paths
     J.refresh_enriched_rollup(spark, fact, dim, mv)
-    monkeypatch.setattr(J, "_MAX_ISIN_KEYS", 1)
+    monkeypatch.setattr(localframe, "LITERAL_MAX", 1)
     captured = {}
     orig = J._read_fact_keys
 
-    def spy(spark_, fact_path, version, key_col, keys, key_rows=None):
-        df = orig(spark_, fact_path, version, key_col, keys, key_rows=key_rows)
+    def spy(spark_, fact_path, version, key_col, keys):
+        df = orig(spark_, fact_path, version, key_col, keys)
         captured["plan"] = df._jdf.queryExecution().toString()
         captured["n_keys"] = len(keys)
         return df

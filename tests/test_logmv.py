@@ -11,6 +11,7 @@ from datetime import datetime, timedelta
 
 import pytest
 
+from crypto_clickhouse_poc_spark import localframe
 from crypto_clickhouse_poc_spark.plans import logmv as M
 from crypto_clickhouse_poc_spark.plans import snapshots as S
 from crypto_clickhouse_poc_spark.streaming.bars import bars_batch
@@ -103,15 +104,20 @@ def test_delete_on_bars_mv_takes_group_scoped_swap_not_rebuild(spark, paths):
     )
 
 
-def test_scoped_refresh_over_group_cap_falls_back_to_rebuild(spark, paths):
-    """Past ``max_scoped_groups`` the affected-key set stops being cheap
-    to collect/broadcast and a pruned re-aggregation stops beating one
-    recompute — the dispatch falls back to the atomic rebuild."""
+def test_scoped_refresh_over_group_cap_falls_back_to_rebuild(
+    spark, paths, monkeypatch
+):
+    """Past ``localframe.LOCAL_MAX`` groups the affected-key set stops
+    being cheap to collect/broadcast and a pruned re-aggregation stops
+    beating one recompute — the dispatch falls back to the atomic
+    rebuild."""
     base, mv = paths
     S.append(_batch(spark, range(60)), base)
     M.refresh_rollup(spark, base, mv)
     S.delete_where(spark, base, "trade_id in (1, 2, 3, 4)")
-    v = M.refresh_rollup(spark, base, mv, max_scoped_groups=1)
+    monkeypatch.setattr(localframe, "LOCAL_MAX", 1)
+    v = M.refresh_rollup(spark, base, mv)
+    monkeypatch.undo()
     m = S.manifest(mv, v)
     assert m["op"] == "rebuild"
     assert m["txns"]["logmv"] == S.latest_version(base)
