@@ -23,8 +23,9 @@ read under the same hash verdict every ``ev_*`` query gets.
 Scale shape (the part the fixture can't show): the erasure refresh costs
 O(affected groups' rows) — manifest-level ts pruning to the victim
 groups' span, one broadcast group semi-join, one bounded upsert commit —
-never O(base); `tools/scale_probe_scoped.py` pins the flat-at-10× curve
-and `tests/test_cdc_feed.py` the Jan-erasure-reads-zero-Feb-files gate.
+never O(base); `tools/scale_probe_scoped.py` (at commit 01c1715) pinned
+the flat-at-10× curve and `tests/test_cdc_feed.py` pins the
+Jan-erasure-reads-zero-Feb-files gate.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from pyspark.sql import functions as F
 from ..caching import bounded_cache
 from ..plans import logmv as M
 from ..plans import snapshots as S
+from ..streaming.bars import final_bars
 from .trades import _events
 
 _VICTIM_MOD = 97  # deterministic erasure set: event_id % 97 == 0
@@ -183,26 +185,10 @@ def mv_enriched_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             t.where(F.col("trade_id") % 113 == 0).select("trade_id"),
         )
         J.refresh_enriched_rollup(spark, fact, dim, mv)  # fact-scoped swap
-        merged = (
-            S.read_snapshot(spark, mv)
-            .groupBy("minute", "sector")
-            .agg(
-                F.min_by("open", F.col("open_key")).alias("open"),
-                F.max("high").alias("high"),
-                F.min("low").alias("low"),
-                F.max_by("close", F.col("close_key")).alias("close"),
-                F.sum("volume").alias("volume"),
-                F.sum("trades").alias("trades"),
-            )
-        )
-        return (
-            merged.select(
-                "minute", "sector", "open", "high", "low", "close",
-                "volume", "trades",
-            )
-            # no presentation sort (r16 perf — order-insensitive hash)
-            .localCheckpoint()
-        )
+        # no presentation sort (r16 perf — order-insensitive hash)
+        return final_bars(
+            S.read_snapshot(spark, mv), "minute", "sector"
+        ).localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -219,8 +205,8 @@ def mv_backfill_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     refreshed. The refresh scopes to the overwritten MONTHS' groups via
     the file-level CDC (one narrow map-side-combined pass — probe-driven
     r13 rule: the row-precise wide diff over a wholly-rewritten month
-    costs more than it saves; ``tools/scale_probe_overwrite.py`` pins
-    refresh FLAT at 10x history vs rebuild 4x). On THIS fixture the
+    costs more than it saves; ``tools/scale_probe_overwrite.py``, at commit
+    01c1715, pinned refresh FLAT at 10x history vs rebuild 4x). On THIS fixture the
     backfilled month is the whole table, so the fraction dispatch
     correctly picks one clean rebuild — the same physical-choice rule
     the erasure replay exercises — and the result equals the one-shot

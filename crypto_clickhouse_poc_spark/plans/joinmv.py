@@ -69,13 +69,16 @@ from pyspark.sql import functions as F
 
 from .. import localframe as L
 from ..localframe import arrow_table, local_frame
-from ..streaming.bars import partial_bars
+from ..streaming.bars import merge_bars, partial_bars
 from . import bloomidx as B
 from . import snapshots as S
 from .logmv import MAX_SCOPED_FRAC
 
 if TYPE_CHECKING:
     import pyarrow as pa
+
+# the enriched MV is bars partials by construction: its time bucket
+TS_COL = "minute"
 
 # both log versions packed into one monotone watermark id; 2^32 commits
 # per log is far beyond any real table's life under checkpointed heads
@@ -180,9 +183,7 @@ def refresh_enriched_rollup(
     mv_path: str,
     join_key: str = "symbol",
     dim_cols: Sequence[str] = ("sector",),
-    partial_fn: Callable[[DataFrame], DataFrame] = partial_bars,
     app: str = "joinmv",
-    ts_col: str = "minute",
     max_scoped_keys: int = L.LOCAL_MAX,
     dim_view: Callable[[DataFrame], DataFrame] | None = None,
 ) -> int | None:
@@ -227,9 +228,7 @@ def refresh_enriched_rollup(
     if consumed is None:
         return rebuild_enriched(
             spark, fact_path, dim_path, mv_path,
-            join_key=join_key, dim_cols=dim_cols,
-            partial_fn=partial_fn, app=app, ts_col=ts_col,
-            dim_view=dim_view,
+            join_key=join_key, dim_cols=dim_cols, app=app, dim_view=dim_view,
         )
     fact_w, dim_w = _unwm(consumed)
     if fact_head <= fact_w and dim_head <= dim_w:
@@ -242,9 +241,7 @@ def refresh_enriched_rollup(
     if not (fact_ops <= covered and dim_ops <= covered):
         return rebuild_enriched(
             spark, fact_path, dim_path, mv_path,
-            join_key=join_key, dim_cols=dim_cols,
-            partial_fn=partial_fn, app=app, ts_col=ts_col,
-            dim_view=dim_view,
+            join_key=join_key, dim_cols=dim_cols, app=app, dim_view=dim_view,
         )
     dim = S.read_snapshot(spark, dim_path, version=dim_head)
     if dim_view is not None:
@@ -260,9 +257,9 @@ def refresh_enriched_rollup(
             delta = cdc.where(F.col(S.CDC_TYPE) == "insert").drop(
                 S.CDC_TYPE, S.CDC_VERSION
             )
-        parts = _enrich(partial_fn(delta), dim, join_key, dim_cols)
+        parts = _enrich(partial_bars(delta), dim, join_key, dim_cols)
         return S.append(
-            parts, mv_path, ts_col=ts_col,
+            parts, mv_path, ts_col=TS_COL,
             txn_app=app, txn_id=_wm(fact_head, dim_head), txn_expect=consumed,
         )
     # --- key-scoped swap ---
@@ -357,8 +354,7 @@ def refresh_enriched_rollup(
     if len(rows) > max_scoped_keys:
         return rebuild_enriched(
             spark, fact_path, dim_path, mv_path,
-            join_key=join_key, dim_cols=dim_cols,
-            partial_fn=partial_fn, app=app, ts_col=ts_col,
+            join_key=join_key, dim_cols=dim_cols, app=app,
             dim_view=dim_view, _dim_local=(dim_head, dim_local),
         )
     if dup is not None:
@@ -378,25 +374,24 @@ def refresh_enriched_rollup(
     if rows and len(rows) > MAX_SCOPED_FRAC * max(dim_rows, 1):
         return rebuild_enriched(
             spark, fact_path, dim_path, mv_path,
-            join_key=join_key, dim_cols=dim_cols,
-            partial_fn=partial_fn, app=app, ts_col=ts_col,
+            join_key=join_key, dim_cols=dim_cols, app=app,
             dim_view=dim_view, _dim_local=(dim_head, dim_local),
         )
     keys = [r[0] for r in rows]
     if not keys:
         # e.g. a precise-merge range that only moved rows between files
-        parts = _enrich(partial_fn(ins), dim, join_key, dim_cols)
+        parts = _enrich(partial_bars(ins), dim, join_key, dim_cols)
         return S.append(
-            parts, mv_path, ts_col=ts_col,
+            parts, mv_path, ts_col=TS_COL,
             txn_app=app, txn_id=_wm(fact_head, dim_head), txn_expect=consumed,
         )
     keys_t = arrow_table([(k,) for k in keys], gdf.schema)
     scoped_fact = _read_fact_keys(spark, fact_path, fact_head, join_key, keys_t)
-    scoped = _enrich(partial_fn(scoped_fact), dim, join_key, dim_cols)
+    scoped = _enrich(partial_bars(scoped_fact), dim, join_key, dim_cols)
     # inserts OUTSIDE the affected keys are plain new enriched partials
     # (inserts inside them are already in the pinned-head scan above)
     fresh = _enrich(
-        L.in_keys(spark, partial_fn(ins), keys_t, anti=True),
+        L.in_keys(spark, partial_bars(ins), keys_t, anti=True),
         dim,
         join_key,
         dim_cols,
@@ -406,7 +401,7 @@ def refresh_enriched_rollup(
         mv_path,
         cols=(join_key,),
         keys=[(k,) for k in keys],
-        ts_col=ts_col,
+        ts_col=TS_COL,
         txn_app=app,
         txn_id=_wm(fact_head, dim_head),
         txn_expect=consumed,
@@ -421,20 +416,7 @@ def merge_enriched_fn(
     key (time, join key, dim attrs). All live partials of a key share
     their dim attrs by construction — a dim change eq-deleted the old
     generation — so the dim columns ride the group-by unchanged."""
-
-    def merge(partials: DataFrame) -> DataFrame:
-        return partials.groupBy("minute", join_key, *dim_cols).agg(
-            F.min_by("open", F.col("open_key")).alias("open"),
-            F.min_by(F.col("open_key"), F.col("open_key")).alias("open_key"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", F.col("close_key")).alias("close"),
-            F.max_by(F.col("close_key"), F.col("close_key")).alias("close_key"),
-            F.sum("volume").alias("volume"),
-            F.sum("trades").alias("trades"),
-        )
-
-    return merge
+    return lambda partials: merge_bars(partials, TS_COL, join_key, *dim_cols)
 
 
 def rebuild_enriched(
@@ -444,9 +426,7 @@ def rebuild_enriched(
     mv_path: str,
     join_key: str = "symbol",
     dim_cols: Sequence[str] = ("sector",),
-    partial_fn: Callable[[DataFrame], DataFrame] = partial_bars,
     app: str = "joinmv",
-    ts_col: str = "minute",
     dim_view: Callable[[DataFrame], DataFrame] | None = None,
     _dim_local: tuple[int, pa.Table | None] | None = None,
 ) -> int:
@@ -499,12 +479,12 @@ def rebuild_enriched(
             "dedup the dim (SCD2 current view) first"
         )
     partials = _enrich(
-        partial_fn(S.read_snapshot(spark, fact_path, version=fact_head)),
+        partial_bars(S.read_snapshot(spark, fact_path, version=fact_head)),
         dim,
         join_key,
         dim_cols,
     )
-    entries = S._write_txn(partials, mv_path, ts_col=ts_col)
+    entries = S._write_txn(partials, mv_path, ts_col=TS_COL)
     return S._commit(
         mv_path,
         lambda _hf: entries,

@@ -20,11 +20,22 @@ transaction log, not by re-scanning the base. Each refresh
    detected by the watermark and skipped (exactly-once, no sidecar
    checkpoint files).
 
-Reads merge partials at query time (the proven mergeable-partials
-algebra of ``streaming/bars.reaggregate_bars``); :func:`compact_rollup`
-folds accumulated partials into one row per group — the partial algebra
-is CLOSED under merge, so compaction is semantics-free and the MV's
-read cost stays bounded by |groups|, not refresh count.
+What an MV computes is ONE :class:`Rollup` value: its partial, merge and
+final callables, the optional negate, its group columns (time bucket
+first) and how its scoped refresh prunes the base. Every entry point —
+:func:`refresh_rollup`, :func:`rebuild_rollup`, :func:`read_rollup`,
+``plans/maintain.MVSpec`` — takes the same value, so a refresh and a read
+cannot disagree on the family. Three ship: :data:`BARS` (the reference's
+1-minute OHLCV; the default everywhere), :data:`HOURS` (the 1m→1h
+cascade over a BARS MV's own log) and :data:`SUMS` (volume/trade-count
+sums — invertible). The OHLCV partial merge itself is written once, in
+``streaming/bars.merge_bars``/``final_bars``.
+
+Reads merge partials at query time (``Rollup.final``);
+:func:`compact_rollup` folds accumulated partials into one row per group
+with ``Rollup.merge`` — the partial algebra is CLOSED under merge, so
+compaction is semantics-free and the MV's read cost stays bounded by
+|groups|, not refresh count.
 
 When the base range contains a NON-append op, the refresh dispatches on
 what the ops MEAN (r10, the Delta-CDF-consumer contract):
@@ -34,13 +45,15 @@ logical rows, so the CDC feed
 (:func:`plans.snapshots.read_changes_cdc`) carries just the appended
 data and ANY algebra advances the watermark; deleting ops (position-DV
 delete, equality delete, retention, merge) emit retraction rows that an
-INVERTIBLE algebra (:func:`partial_sums` — sum/count form a group under
-addition; CMS cells share the property) absorbs as negative partials in
-the same watermarked commit. Non-invertible algebras facing deletes,
-and genuine visibility rewrites — the DEDUPING ``compact_snapshot``
-(its dedup_view can drop stale duplicate-key rows from the raw row
-set), rollback, rebuild — fall back to :func:`rebuild_rollup`: one full
-recompute committed atomically with the new watermark.
+INVERTIBLE algebra (``Rollup.negate`` set — :data:`SUMS`: sum/count form
+a group under addition; CMS cells share the property) absorbs as
+negative partials in the same watermarked commit, and that a
+non-invertible one (:data:`BARS`, :data:`HOURS`) absorbs by recomputing
+only the affected groups. Genuine visibility rewrites — the DEDUPING
+``compact_snapshot`` (its dedup_view can drop stale duplicate-key rows
+from the raw row set), rollback, rebuild — fall back to
+:func:`rebuild_rollup`: one full recompute committed atomically with the
+new watermark.
 
 Scale notes (100 TB): steady-state refresh cost is O(delta), the rollup
 table is |minutes x symbols| (bounded, tiny next to the fact table), and
@@ -52,35 +65,15 @@ fires exactly when an O(base) rewrite already happened to the base.
 from __future__ import annotations
 
 import datetime as _dt
-from typing import Callable, Sequence
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import localframe as L
-from ..streaming.bars import partial_bars, reaggregate_bars
+from ..streaming.bars import final_bars, merge_bars, partial_bars, reaggregate_bars
 from . import snapshots as S
-
-_warned_scope_key: set[str] = set()
-
-
-def _warn_scope_key_once(base_path: str, cols: list[str]) -> None:
-    """One warning per base table per process: the manifest carries key
-    stats for a group column but the refresh was not told to use them."""
-    if base_path in _warned_scope_key:
-        return
-    _warned_scope_key.add(base_path)
-    import warnings
-
-    warnings.warn(
-        f"base table {base_path!r} is key-clustered (manifest has "
-        f"[min,max] stats for group column(s) {cols}) but the scoped "
-        "refresh was not passed scope_key_col — it will scan the "
-        "affected groups' full time-slice width. Pass "
-        f"scope_key_col={cols[0]!r} if partial_fn passes that column "
-        "through unchanged to enable file-level pruning.",
-        stacklevel=3,
-    )
 
 # fall back to rebuild when a scoped swap would touch more than this
 # fraction of the MV's groups (joinmv: of the dim's keys): the swap then
@@ -95,33 +88,57 @@ MAX_SCOPED_FRAC = 0.5
 # UPPER bound on the span for pruning to stay a pure optimization
 _MINUTE = _dt.timedelta(minutes=1)
 
-# Struct merge keys (open_key/close_key) carried by the partials: the
-# deterministic (ts, trade_id) total order that makes open/close exact
-# under any refresh batching (streaming/bars.py's partials contract).
-_MERGE_COLS = ("open_key", "close_key")
+Frame = Callable[[DataFrame], DataFrame]
 
 
-def _merge_partials(partials: DataFrame) -> DataFrame:
-    """partial x partial -> partial (closed): fold many partial rows per
-    (minute, symbol) into one, KEEPING the merge keys so the result can
-    be merged again by later refreshes."""
-    return partials.groupBy("minute", "symbol").agg(
-        F.min_by("open", F.col("open_key")).alias("open"),
-        F.min_by(F.col("open_key"), F.col("open_key")).alias("open_key"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by("close", F.col("close_key")).alias("close"),
-        F.max_by(F.col("close_key"), F.col("close_key")).alias("close_key"),
-        F.sum("volume").alias("volume"),
-        F.sum("trades").alias("trades"),
-    )
+@dataclass(frozen=True)
+class Rollup:
+    """One MV's algebra, travelling as one value.
+
+    - ``partial``: base rows -> partial rows, one per group in
+      ``group_cols`` (a delta's partials are appended as they are);
+    - ``merge``: partial x partial -> partial, CLOSED (same schema) —
+      what :func:`compact_rollup` folds an MV with;
+    - ``final``: partials -> the MV's query rows (:func:`read_rollup`);
+    - ``negate``: partial -> inverse partial, for an INVERTIBLE algebra
+      (appending ``negate(partial(rows))`` cancels those rows); ``None``
+      means non-invertible, and base deletes take the group-scoped path;
+    - ``group_cols``: the partial's grouping key. Its FIRST element is
+      the MV's time-bucket column (timestamp/date — enforced at refresh
+      time; it is also the MV table's ``ts_col``): the scoped path
+      prunes the pinned-head scan on min/max of it;
+    - ``scope_ts_col``: the BASE rows' time column, and ``scope_bucket``
+      an upper bound on one group time value's span in base time (1
+      minute for minute groups over trades; 1 hour when hour groups are
+      cascaded from a minute-grained MV);
+    - ``key_col``: a group column that ``partial`` passes through
+      UNCHANGED from the base column of the same name (true for "symbol"
+      in every shipped family; NOT true for a derived key like
+      upper(symbol) — declaring one of those would misprune). The scoped
+      refresh then also prunes the pinned head at the FILE level on the
+      affected groups' key values, via the manifest stats a
+      ``cluster_cols`` write records; an unclustered base records no
+      string stats and keeps every file."""
+
+    partial: Frame
+    merge: Frame
+    final: Frame
+    group_cols: tuple[str, ...]
+    negate: Frame | None = None
+    scope_ts_col: str = "ts"
+    scope_bucket: _dt.timedelta = _MINUTE
+    key_col: str | None = None
+
+    @property
+    def ts_col(self) -> str:
+        return self.group_cols[0]
 
 
 # --- The multi-resolution cascade (r10): the 1m→1h rollup maintained from
 # the 1m MV's OWN transaction log. The bars partial algebra is CLOSED under
 # merge and hour groups are unions of minute groups, so the hour partials of
 # a DELTA of minute partials merge exactly — the cascade is just
-# refresh_rollup with the 1m MV as base and this partial_fn; end-to-end the
+# refresh_rollup with the 1m MV as base and HOURS; end-to-end the
 # multires view (ev_ohlcv_multires's semantics) becomes incremental at every
 # level instead of batch-recomputed. A compact_rollup on the 1m MV is a
 # layout op (CDC no-change), so the cascade's watermark rides through it;
@@ -129,68 +146,11 @@ def _merge_partials(partials: DataFrame) -> DataFrame:
 # cascade rebuild.
 
 
-def _hour_merge_aggs() -> list:
-    return [
-        F.min_by("open", F.col("open_key")).alias("open"),
-        F.min_by(F.col("open_key"), F.col("open_key")).alias("open_key"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by("close", F.col("close_key")).alias("close"),
-        F.max_by(F.col("close_key"), F.col("close_key")).alias("close_key"),
-        F.sum("volume").alias("volume"),
-        F.sum("trades").alias("trades"),
-    ]
-
-
 def hour_partials(minute_partials: DataFrame) -> DataFrame:
     """1m partial rows -> 1h partial rows (merge keys kept: closed, so
     later cascade refreshes and compacts keep merging exactly)."""
-    return minute_partials.groupBy(
-        F.date_trunc("hour", F.col("minute")).alias("hour"), "symbol"
-    ).agg(*_hour_merge_aggs())
-
-
-def merge_hour_partials(partials: DataFrame) -> DataFrame:
-    """Closed partial x partial merge for ``compact_rollup`` of the 1h MV."""
-    return partials.groupBy("hour", "symbol").agg(*_hour_merge_aggs())
-
-
-def reaggregate_hours(partials: DataFrame) -> DataFrame:
-    """Read-time merge of 1h partials -> final hour bars (equals the batch
-    hour-truncated OHLCV over the raw trades — gated in tests)."""
-    return partials.groupBy("hour", "symbol").agg(
-        F.min_by("open", F.col("open_key")).alias("open"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by("close", F.col("close_key")).alias("close"),
-        F.sum("volume").alias("volume"),
-        F.sum("trades").alias("trades"),
-    )
-
-
-def refresh_cascade(
-    spark: SparkSession, mv_1m_path: str, mv_1h_path: str, app: str = "logmv-1h"
-) -> int | None:
-    """One cascade tick: fold the 1m MV's new partial rows into the 1h
-    rollup — O(new 1m partials), never a re-read of the 1m MV (let alone
-    the trades base). Exactly-once end to end: the 1h watermark is the 1m
-    MV VERSION consumed, committed atomically with the hour partials,
-    same as every other rollup. A scoped refresh on the 1m MV (an
-    erasure swapping minute partials via ``upsert``) CASCADES scoped:
-    the 1m log's upsert is a CDC-covered deleting op, so this refresh
-    recomputes only the affected HOUR groups from the 1m head — the
-    scope knobs below are the hour algebra's (base rows are minute
-    partials, one hour group spans an hour of them)."""
-    return refresh_rollup(
-        spark,
-        mv_1m_path,
-        mv_1h_path,
-        partial_fn=hour_partials,
-        app=app,
-        ts_col="hour",
-        group_cols=("hour", "symbol"),
-        scope_ts_col="minute",
-        scope_bucket=_dt.timedelta(hours=1),
+    return merge_bars(
+        minute_partials, F.date_trunc("hour", "minute").alias("hour"), "symbol"
     )
 
 
@@ -238,18 +198,58 @@ def final_sums(partials: DataFrame) -> DataFrame:
     )
 
 
+#: the reference's 1-minute OHLCV MV over trades (non-invertible)
+BARS = Rollup(
+    partial=partial_bars,
+    merge=lambda partials: merge_bars(partials, "minute", "symbol"),
+    final=reaggregate_bars,
+    group_cols=("minute", "symbol"),
+    key_col="symbol",
+)
+
+#: 1-hour OHLCV over a BARS MV's partial rows (the cascade's base rows are
+#: minute partials, and one hour group spans an hour of them)
+HOURS = Rollup(
+    partial=hour_partials,
+    merge=lambda partials: merge_bars(partials, "hour", "symbol"),
+    final=lambda partials: final_bars(partials, "hour", "symbol"),
+    group_cols=("hour", "symbol"),
+    scope_ts_col="minute",
+    scope_bucket=_dt.timedelta(hours=1),
+    key_col="symbol",
+)
+
+#: per-minute volume/trade-count sums over trades (invertible)
+SUMS = Rollup(
+    partial=partial_sums,
+    merge=merge_sums,
+    final=final_sums,
+    negate=negate_sums,
+    group_cols=("minute", "symbol"),
+    key_col="symbol",
+)
+
+
+def refresh_cascade(
+    spark: SparkSession, mv_1m_path: str, mv_1h_path: str, app: str = "logmv-1h"
+) -> int | None:
+    """One cascade tick: fold the 1m MV's new partial rows into the 1h
+    rollup — O(new 1m partials), never a re-read of the 1m MV (let alone
+    the trades base). Exactly-once end to end: the 1h watermark is the 1m
+    MV VERSION consumed, committed atomically with the hour partials,
+    same as every other rollup. A scoped refresh on the 1m MV (an
+    erasure swapping minute partials via ``upsert``) CASCADES scoped:
+    the 1m log's upsert is a CDC-covered deleting op, so this refresh
+    recomputes only the affected HOUR groups from the 1m head."""
+    return refresh_rollup(spark, mv_1m_path, mv_1h_path, HOURS, app)
+
+
 def refresh_rollup(
     spark: SparkSession,
     base_path: str,
     mv_path: str,
-    partial_fn: Callable[[DataFrame], DataFrame] = partial_bars,
+    rollup: Rollup = BARS,
     app: str = "logmv",
-    negate_fn: Callable[[DataFrame], DataFrame] | None = None,
-    ts_col: str = "minute",
-    group_cols: Sequence[str] | None = None,
-    scope_ts_col: str = "ts",
-    scope_bucket: _dt.timedelta = _MINUTE,
-    scope_key_col: str | None = None,
 ) -> int | None:
     """Fold the base table's new commits into the rollup MV.
 
@@ -276,15 +276,18 @@ def refresh_rollup(
       watermark advances, NO rebuild (previously every layout op on the
       base forced one);
     - deleting ops in range (delete / eq_delete / retention / merge /
-      upsert) AND ``negate_fn`` given → CDC with RETRACTIONS: the MV
-      appends ``partial_fn(inserts) ∪ negate_fn(partial_fn(deletes))``
-      in one watermarked commit. Requires an INVERTIBLE partial algebra
-      (sum/count/CMS-cell — :func:`partial_sums`/:func:`negate_sums`);
-    - deleting ops WITHOUT ``negate_fn`` (min/max/open/close partials
-      cannot retract) → the GROUP-SCOPED path (r12): the CDC delete rows
-      name exactly which ``group_cols`` groups changed, so re-aggregate
+      upsert) on an INVERTIBLE rollup (``rollup.negate`` set —
+      sum/count/CMS-cell, :data:`SUMS`) → CDC with RETRACTIONS: the MV
+      appends ``partial(inserts) ∪ negate(partial(deletes))`` in one
+      watermarked commit;
+    - deleting ops on a NON-invertible rollup (``negate is None`` —
+      min/max/open/close partials cannot retract) → the GROUP-SCOPED
+      path (r12): the CDC delete rows name exactly which
+      ``rollup.group_cols`` groups changed, so re-aggregate
       ONLY those groups from the pinned base head (scan pruned to the
-      groups' time span via footer stats, then an exact group filter)
+      groups' time span via footer stats and, on a key-clustered base,
+      to the files that can hold the groups' ``rollup.key_col`` values;
+      then an exact group filter)
       and swap their stale partials in ONE atomic
       :func:`snapshots.upsert_by_keys` commit — erasure on a bars MV
       costs O(deleted groups' rows), not O(base). Falls back to
@@ -297,26 +300,15 @@ def refresh_rollup(
     - genuine visibility rewrites (deduping compact / rollback /
       rebuild) → one atomic :func:`rebuild_rollup`.
 
-    Scoped-path knobs (ignored elsewhere): ``group_cols`` is the partial
-    algebra's grouping key and its FIRST element must be the MV's
-    time-bucket column (timestamp/date dtype — enforced at refresh time):
-    the scoped path prunes the pinned-head scan on min/max of
-    ``group_cols[0]``. Default ``(ts_col, "symbol")`` — the bars family.
-    ``scope_ts_col`` is the BASE rows' time column; ``scope_bucket`` an
-    upper bound on one group time value's span in base time (1 minute for
-    minute bars; pass 1 hour when cascading from a minute-grained MV).
-    ``scope_key_col`` (r13, opt-in) names a group column that passes
-    through ``partial_fn`` UNCHANGED from the base column of the SAME
-    name (true for "symbol" in the bars family; NOT true for derived
-    keys like upper(symbol) — declaring one of those would misprune):
-    the pinned-head scan then also prunes at the FILE level on the
-    affected groups' key values via the manifest stats a
-    ``cluster_cols`` write records — on a key-clustered base, an
-    erasure touching one symbol reads that symbol's files only, not the
-    full width of the time slice. The scoped path's bounds are fixed, not
-    knobs: ``localframe.LOCAL_MAX`` groups and ``MAX_SCOPED_FRAC`` of
-    the MV's rows; up to ``localframe.LITERAL_MAX`` groups the group
-    filters are one literal ``IN`` (:func:`localframe.in_keys`)."""
+    ``rollup`` is the MV's whole algebra (:class:`Rollup`): which
+    partial it appends, which negate retracts (or ``None``), which group
+    columns the scoped path recomputes and how it prunes the base for
+    them (``scope_ts_col``/``scope_bucket`` in time, ``key_col`` by
+    file). The same value must maintain, read and compact one MV. The
+    scoped path's bounds are fixed, not knobs: ``localframe.LOCAL_MAX``
+    groups and ``MAX_SCOPED_FRAC`` of the MV's rows; up to
+    ``localframe.LITERAL_MAX`` groups the group filters are one literal
+    ``IN`` (:func:`localframe.in_keys`)."""
     head = S.latest_version(base_path)
     if head is None:
         raise FileNotFoundError(f"no snapshots at {base_path}")
@@ -329,9 +321,7 @@ def refresh_rollup(
         # of current visibility IS the cheap path — hoisted ABOVE the
         # changed_meta scan so first materialization pays zero per-version
         # metadata reads over a long history (r11 ADVICE)
-        return rebuild_rollup(
-            spark, base_path, mv_path, partial_fn, app, ts_col=ts_col
-        )
+        return rebuild_rollup(spark, base_path, mv_path, rollup, app)
     meta = S.changed_meta(base_path, since, head)
     # data_change=False commits (optimize, MV partial compaction) are
     # writer-declared layout-only — invisible to every dispatch decision
@@ -341,27 +331,20 @@ def refresh_rollup(
         # pure-append range (no layout commits at all): the cheapest path
         # — zero per-version manifest loads beyond the two range ends
         delta = S.read_changes(spark, base_path, since, head)
-        parts = partial_fn(delta)
+        parts = rollup.partial(delta)
     elif not ops <= set(S._CDC_COVERED):
         # visibility rewrite in range -> one full recompute, watermark
         # moved in the same commit
-        return rebuild_rollup(
-            spark, base_path, mv_path, partial_fn, app, ts_col=ts_col
-        )
-    elif deleting and negate_fn is None:
+        return rebuild_rollup(spark, base_path, mv_path, rollup, app)
+    elif deleting and rollup.negate is None:
         return _refresh_scoped(
             spark,
             base_path,
             mv_path,
-            partial_fn,
+            rollup,
             app,
-            ts_col,
             head,
             consumed,
-            group_cols=tuple(group_cols or (ts_col, "symbol")),
-            scope_ts_col=scope_ts_col,
-            scope_bucket=scope_bucket,
-            scope_key_col=scope_key_col,
             # r13: ranges containing a partition OVERWRITE derive the
             # affected groups from the FILE-level CDC — the row-precise
             # multiset diff is a WIDE full-row shuffle over the whole
@@ -379,12 +362,12 @@ def refresh_rollup(
         ins = cdc.where(F.col(S.CDC_TYPE) == "insert").drop(
             S.CDC_TYPE, S.CDC_VERSION
         )
-        parts = partial_fn(ins)
+        parts = rollup.partial(ins)
         if deleting:
             dels = cdc.where(F.col(S.CDC_TYPE) == "delete").drop(
                 S.CDC_TYPE, S.CDC_VERSION
             )
-            parts = parts.unionByName(negate_fn(partial_fn(dels)))
+            parts = parts.unionByName(rollup.negate(rollup.partial(dels)))
     # txn_expect=consumed is the exact compare-and-set: this delta is
     # (consumed, head], so it may land ONLY onto the watermark it was
     # computed from — a concurrent refresher that consumed from a
@@ -393,7 +376,7 @@ def refresh_rollup(
     return S.append(
         parts,
         mv_path,
-        ts_col=ts_col,
+        ts_col=rollup.ts_col,
         txn_app=app,
         txn_id=head,
         txn_expect=consumed,
@@ -404,15 +387,10 @@ def _refresh_scoped(
     spark: SparkSession,
     base_path: str,
     mv_path: str,
-    partial_fn: Callable[[DataFrame], DataFrame],
+    rollup: Rollup,
     app: str,
-    ts_col: str,
     head: int,
     consumed: int,
-    group_cols: tuple,
-    scope_ts_col: str,
-    scope_bucket: _dt.timedelta,
-    scope_key_col: str | None = None,
     precise: bool = True,
 ) -> int:
     """The non-invertible delete leg: recompute ONLY the groups the CDC
@@ -450,9 +428,7 @@ def _refresh_scoped(
             if sum(f["rows"] for f in removed) > MAX_SCOPED_FRAC * max(
                 base_rows, 1
             ):
-                return rebuild_rollup(
-                    spark, base_path, mv_path, partial_fn, app, ts_col=ts_col
-                )
+                return rebuild_rollup(spark, base_path, mv_path, rollup, app)
     cdc = S.read_changes_cdc(
         spark, base_path, consumed, head, precise_merge=precise
     )
@@ -462,20 +438,19 @@ def _refresh_scoped(
     dels = cdc.where(F.col(S.CDC_TYPE) == "delete").drop(
         S.CDC_TYPE, S.CDC_VERSION
     )
-    # the affected-group set: partial_fn is the one thing that knows how
+    # the affected-group set: the partial is the one thing that knows how
     # base rows map to group keys, so aggregate the delete rows and keep
     # the keys. Driver-collected (bounded by localframe.LOCAL_MAX) so the
     # CDC pipeline runs ONCE and the group filters below hold the keys.
     # Collected as Arrow and handed back as Arrow: timestamps stay UTC
     # instants end to end (no OS-local naive values, no Python worker).
-    gdf = partial_fn(dels).select(*group_cols).distinct()
+    group_cols = rollup.group_cols
+    gdf = rollup.partial(dels).select(*group_cols).distinct()
     groups_t = gdf.limit(L.LOCAL_MAX + 1).toArrow()
     rows = list(zip(*(c.to_pylist() for c in groups_t.columns)))
     if len(rows) > L.LOCAL_MAX:
         # too many groups for a scoped swap to beat one recompute
-        return rebuild_rollup(
-            spark, base_path, mv_path, partial_fn, app, ts_col=ts_col
-        )
+        return rebuild_rollup(spark, base_path, mv_path, rollup, app)
     # fraction fallback (r13): when the erasure touches most of the MV's
     # groups, the "scoped" swap degenerates — it re-aggregates nearly the
     # whole base AND leaves a composite-key eq-delete entry taxing every
@@ -499,16 +474,14 @@ def _refresh_scoped(
         else 0
     )
     if mv_rows and len(rows) > MAX_SCOPED_FRAC * mv_rows:
-        return rebuild_rollup(
-            spark, base_path, mv_path, partial_fn, app, ts_col=ts_col
-        )
+        return rebuild_rollup(spark, base_path, mv_path, rollup, app)
     if not rows:
         # every delete netted out (a row-precise merge that only moved
         # rows between files): the range degenerates to its inserts
         return S.append(
-            partial_fn(ins),
+            rollup.partial(ins),
             mv_path,
-            ts_col=ts_col,
+            ts_col=rollup.ts_col,
             txn_app=app,
             txn_id=head,
             txn_expect=consumed,
@@ -533,53 +506,40 @@ def _refresh_scoped(
     # instants, which read_snapshot's ts_range takes as such on any
     # driver timezone (the r8 ADVICE error class)
     t_lo = min(r[0] for r in rows)
-    t_hi = max(r[0] for r in rows) + scope_bucket - _dt.timedelta(microseconds=1)
-    # opt-in FILE-level key prune: when scope_key_col passes through
-    # partial_fn unchanged from the same-named base column, the pinned
-    # head only needs files whose key range can hold an affected group's
-    # key. Advisory — the group filter below keeps the row set exact —
-    # and it bites only on a cluster_cols-written base (unclustered files
-    # carry no string key stats and are never pruned).
+    t_hi = (
+        max(r[0] for r in rows)
+        + rollup.scope_bucket
+        - _dt.timedelta(microseconds=1)
+    )
+    # FILE-level key prune: key_col passes through the partial unchanged
+    # from the same-named base column, so the pinned head only needs
+    # files whose key range can hold an affected group's key. Advisory —
+    # the group filter below keeps the row set exact — and it bites only
+    # on a cluster_cols-written base (unclustered files carry no string
+    # key stats and are never pruned).
     extra_prune = None
-    if scope_key_col is not None and scope_key_col in group_cols:
-        ki = list(group_cols).index(scope_key_col)
+    key_col = rollup.key_col
+    if key_col is not None and key_col in group_cols:
+        ki = group_cols.index(key_col)
         key_vals = sorted({r[ki] for r in rows})
         # era-aware (r15): a column-mapped base's per-file stats are
         # keyed by the written name — probe each file under its era's
         _ren = S._version_body(base_path, head).get("renames")
         extra_prune = lambda fs: S.prune_files_by_values(  # noqa: E731
-            fs, scope_key_col, key_vals, renames=_ren
+            fs, key_col, key_vals, renames=_ren
         )
-    elif scope_key_col is None and base_path not in _warned_scope_key:
-        # discoverability (r13 verdict wrong #4): the caller clustered
-        # the base (its manifest carries key [min,max] stats for a group
-        # column) but didn't opt into the key prune — the scoped refresh
-        # will scan the groups' full time-slice width. Say so ONCE; never
-        # prune un-opted (logmv can't prove partial_fn passes the column
-        # through unchanged, which is the opt-in's contract). The
-        # once-per-table set is checked FIRST so steady state never pays
-        # the O(files) stats sweep below.
-        stats_cols = set().union(
-            set(),
-            *(f.get("cols", {}).keys() for f in S.manifest(base_path, head)["files"]),
-        )
-        hinted = [c for c in group_cols[1:] if c in stats_cols]
-        if hinted:
-            _warn_scope_key_once(base_path, hinted)
-        else:
-            _warned_scope_key.add(base_path)  # unclustered: never re-sweep
     base = S.read_snapshot(
         spark,
         base_path,
         version=head,
         ts_range=(t_lo, t_hi),
-        ts_col=scope_ts_col,
+        ts_col=rollup.scope_ts_col,
         extra_prune=extra_prune,
     )
-    scoped = L.in_keys(spark, partial_fn(base), groups_t)
+    scoped = L.in_keys(spark, rollup.partial(base), groups_t)
     # inserts landing OUTSIDE the affected groups are plain new partials
     # (inserts INSIDE them are already part of the head scan above)
-    fresh = L.in_keys(spark, partial_fn(ins), groups_t, anti=True)
+    fresh = L.in_keys(spark, rollup.partial(ins), groups_t, anti=True)
     # one atomic commit: append the replacement + fresh partials and
     # equality-delete every PRIOR partial row of the affected groups
     # (keys=groups, a superset of the replacement rows' keys: a fully
@@ -591,7 +551,7 @@ def _refresh_scoped(
         mv_path,
         cols=group_cols,
         keys=rows,
-        ts_col=ts_col,
+        ts_col=rollup.ts_col,
         txn_app=app,
         txn_id=head,
         txn_expect=consumed,
@@ -602,9 +562,8 @@ def rebuild_rollup(
     spark: SparkSession,
     base_path: str,
     mv_path: str,
-    partial_fn: Callable[[DataFrame], DataFrame] = partial_bars,
+    rollup: Rollup = BARS,
     app: str = "logmv",
-    ts_col: str = "minute",
 ) -> int:
     """Full recompute committed as ONE manifest swap: the new partials
     replace every prior MV file, deletes are cleared (the rewrite read
@@ -619,8 +578,8 @@ def rebuild_rollup(
     head = S.latest_version(base_path)
     if head is None:
         raise FileNotFoundError(f"no snapshots at {base_path}")
-    partials = partial_fn(S.read_snapshot(spark, base_path, version=head))
-    entries = S._write_txn(partials, mv_path, ts_col=ts_col)
+    partials = rollup.partial(S.read_snapshot(spark, base_path, version=head))
+    entries = S._write_txn(partials, mv_path, ts_col=rollup.ts_col)
     return S._commit(
         mv_path,
         lambda _hf: entries,
@@ -638,25 +597,23 @@ def read_rollup(
     spark: SparkSession,
     mv_path: str,
     version: int | None = None,
-    final_fn: Callable[[DataFrame], DataFrame] = reaggregate_bars,
+    rollup: Rollup = BARS,
 ) -> DataFrame:
-    """The MV's query surface: merge partials at read time. Equals
-    ``bars_batch`` over the base snapshot the watermark points at.
-    An MV maintained with a custom ``partial_fn`` must supply the
-    matching ``final_fn`` (the three algebra callables — partial, merge,
-    final — travel together; mixing families corrupts silently)."""
-    return final_fn(S.read_snapshot(spark, mv_path, version=version))
+    """The MV's query surface: ``rollup.final`` over the partials. For
+    :data:`BARS` this equals ``bars_batch`` over the base snapshot the
+    watermark points at."""
+    return rollup.final(S.read_snapshot(spark, mv_path, version=version))
 
 
 def compact_rollup(
     spark: SparkSession,
     mv_path: str,
-    merge_fn: Callable[[DataFrame], DataFrame] = _merge_partials,
+    merge_fn: Frame = BARS.merge,
     ts_col: str = "minute",
 ) -> int:
     """Fold accumulated partial rows into one partial per group with
-    ``merge_fn`` (default: the bars partial x partial algebra — an MV
-    with a custom ``partial_fn`` must supply its own closed merge).
+    ``merge_fn`` (a closed partial x partial merge: ``Rollup.merge`` for a
+    log-driven MV, the CDF and CMS seats' own merges for theirs).
     Reads before and after are IDENTICAL (gated in tests); only the
     partial-row count changes, so a weekly compact bounds read-time
     merge work regardless of refresh cadence. Any deletion vectors on

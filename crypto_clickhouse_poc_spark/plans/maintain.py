@@ -30,13 +30,11 @@ Every rewrite here rebases over pure-append interleaves
 
 from __future__ import annotations
 
-import datetime as _dt
-from dataclasses import dataclass, field
-from typing import Callable, Sequence
+from dataclasses import dataclass
+from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-from ..streaming.bars import partial_bars
 from . import bloomidx as B
 from . import joinmv as J
 from . import logmv as M
@@ -45,24 +43,15 @@ from . import snapshots as S
 
 @dataclass(frozen=True)
 class MVSpec:
-    """One rollup MV maintained from the base table's log."""
+    """One rollup MV maintained from the base table's log. ``rollup`` is
+    its whole algebra (``logmv.Rollup``): the tick refreshes with it and
+    compacts with ``rollup.merge`` at ``rollup.ts_col``."""
 
     mv_path: str
-    partial_fn: Callable[[DataFrame], DataFrame] = partial_bars
-    negate_fn: Callable[[DataFrame], DataFrame] | None = None
+    rollup: M.Rollup = M.BARS
     app: str = "logmv"
-    ts_col: str = "minute"
     # compact the MV's partials once they exceed this many live files
     max_live_files: int = 64
-    merge_fn: Callable[[DataFrame], DataFrame] = field(
-        default=M._merge_partials
-    )
-    # group-scoped refresh knobs for NON-invertible algebras (r12) — see
-    # logmv.refresh_rollup: the grouping key, the BASE rows' time column,
-    # and an upper bound on one group time value's span in base time
-    group_cols: Sequence[str] | None = None
-    scope_ts_col: str = "ts"
-    scope_bucket: _dt.timedelta = M._MINUTE
 
 
 @dataclass(frozen=True)
@@ -93,19 +82,16 @@ class CdfMVSpec:
 class EnrichedMVSpec:
     """One fact ⋈ dim rollup maintained from BOTH tables' logs (r12 —
     plans/joinmv). ``dim_path`` is the dimension snapshot table; the tick
-    folds fact appends O(delta) and swaps dim-changed keys' partials."""
+    folds fact appends O(delta) and swaps dim-changed keys' partials. The
+    MV is bars partials at ``minute`` by construction, compacted at its
+    full stored key (``joinmv.merge_enriched_fn(join_key, dim_cols)``)."""
 
     mv_path: str
     dim_path: str
     join_key: str = "symbol"
     dim_cols: Sequence[str] = ("sector",)
-    partial_fn: Callable[[DataFrame], DataFrame] = partial_bars
     app: str = "joinmv"
-    ts_col: str = "minute"
     max_live_files: int = 64
-    # compaction merge at the MV's FULL stored key (time, join key, dim
-    # attrs) — None derives it from join_key/dim_cols via joinmv
-    merge_fn: Callable[[DataFrame], DataFrame] | None = None
 
 
 def maintenance_tick(
@@ -134,13 +120,8 @@ def maintenance_tick(
                 spark,
                 path,
                 spec.mv_path,
-                partial_fn=spec.partial_fn,
+                rollup=spec.rollup,
                 app=spec.app,
-                negate_fn=spec.negate_fn,
-                ts_col=spec.ts_col,
-                group_cols=spec.group_cols,
-                scope_ts_col=spec.scope_ts_col,
-                scope_bucket=spec.scope_bucket,
             )
             report[f"mv:{spec.mv_path}"] = v
         except S.CommitConflict:
@@ -154,8 +135,8 @@ def maintenance_tick(
         ):
             try:
                 report[f"mv-compact:{spec.mv_path}"] = M.compact_rollup(
-                    spark, spec.mv_path, merge_fn=spec.merge_fn,
-                    ts_col=spec.ts_col,
+                    spark, spec.mv_path, merge_fn=spec.rollup.merge,
+                    ts_col=spec.rollup.ts_col,
                 )
             except S.CommitConflict:
                 report[f"mv-compact:{spec.mv_path}"] = "conflict-deferred"
@@ -168,9 +149,7 @@ def maintenance_tick(
                 espec.mv_path,
                 join_key=espec.join_key,
                 dim_cols=espec.dim_cols,
-                partial_fn=espec.partial_fn,
                 app=espec.app,
-                ts_col=espec.ts_col,
             )
             report[f"joinmv:{espec.mv_path}"] = v
         except S.CommitConflict:
@@ -184,9 +163,8 @@ def maintenance_tick(
                 report[f"joinmv-compact:{espec.mv_path}"] = M.compact_rollup(
                     spark,
                     espec.mv_path,
-                    merge_fn=espec.merge_fn
-                    or J.merge_enriched_fn(espec.join_key, espec.dim_cols),
-                    ts_col=espec.ts_col,
+                    merge_fn=J.merge_enriched_fn(espec.join_key, espec.dim_cols),
+                    ts_col=J.TS_COL,
                 )
             except S.CommitConflict:
                 report[f"joinmv-compact:{espec.mv_path}"] = "conflict-deferred"

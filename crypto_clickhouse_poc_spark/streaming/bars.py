@@ -20,6 +20,11 @@ Partial-merge algebra: OHLCV is decomposable — min/max/sum/count merge
 directly; open/close merge via min_by/max_by over the carried
 (open_ts, open_tid)/(close_ts, close_tid) keys. That is exactly ClickHouse's
 partial-aggregate machinery (survey X5) reproduced with carried columns.
+The merge is written once here — :func:`merge_bars` (closed, keeps the
+keys) and :func:`final_bars` (read time) — and every level that merges
+bars partials (the log-driven MV and its hour cascade in
+``plans/logmv.py``, the enriched MV in ``plans/joinmv.py``, the partials
+compactor in ``compaction.py``) calls them with its own group keys.
 """
 
 from __future__ import annotations
@@ -69,16 +74,35 @@ def partial_bars(batch: DataFrame) -> DataFrame:
     ).agg(*_partial_aggs())
 
 
-def reaggregate_bars(partials: DataFrame) -> DataFrame:
-    """Read-time merge of partial bars → final bars (equals bars_batch)."""
-    return partials.groupBy("minute", "symbol").agg(
+def merge_bars(partials: DataFrame, *keys) -> DataFrame:
+    """partial x partial -> partial (closed): fold the partial rows of each
+    ``keys`` group into one, KEEPING the open/close merge keys so the
+    result merges again. Columns come out in ``partial_bars``'s order, so
+    parquet appends after a compaction stay schema-identical. ``keys`` are
+    names or Columns — the hour level passes
+    ``F.date_trunc("hour", "minute").alias("hour")``."""
+    return partials.groupBy(*keys).agg(
         F.min_by("open", F.col("open_key")).alias("open"),
+        F.min_by(F.col("open_key"), F.col("open_key")).alias("open_key"),
         F.max("high").alias("high"),
         F.min("low").alias("low"),
         F.max_by("close", F.col("close_key")).alias("close"),
+        F.max_by(F.col("close_key"), F.col("close_key")).alias("close_key"),
         F.sum("volume").alias("volume"),
         F.sum("trades").alias("trades"),
     )
+
+
+def final_bars(partials: DataFrame, *keys) -> DataFrame:
+    """Read-time merge of partial bars to final bars per ``keys`` group:
+    :func:`merge_bars` without the carried merge keys (the optimizer
+    prunes their two aggregates, so the plan computes only the bars)."""
+    return merge_bars(partials, *keys).drop("open_key", "close_key")
+
+
+def reaggregate_bars(partials: DataFrame) -> DataFrame:
+    """Read-time merge of partial bars → final bars (equals bars_batch)."""
+    return final_bars(partials, "minute", "symbol")
 
 
 def start_bars_partials(

@@ -12,9 +12,10 @@ each seat's tests already gate — so N flush partials can be collapsed into
 ONE partial of the same schema using the seat's OWN read-time merge
 algebra, and every reader result is invariant:
 
-- bars: min_by/max_by over the carried open/close keys + sum/min/max — the
-  merged row is exactly the partial a single covering flush would have
-  written (``reaggregate_bars`` output is unchanged — exact).
+- bars: ``bars.merge_bars`` — min_by/max_by over the carried open/close
+  keys + sum/min/max; the merged row is exactly the partial a single
+  covering flush would have written (``reaggregate_bars`` output is
+  unchanged — exact).
 - quantiles: bucket counts add (exact).
 - KMV: the global k-minima are inside the union's k-minima (lossless).
 - Misra-Gries: the read-time merge is an uncompressed pointwise sum, so
@@ -48,24 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.layout import recover_compaction, swap_in
-
-
-def merge_bars_to_partial(partials: DataFrame) -> DataFrame:
-    """N partial bars per (minute, symbol) → one, SAME partial schema (the
-    open/close merge keys are carried through so later flushes can still
-    merge against the compacted row). Column order matches
-    ``bars.partial_bars`` so parquet appends after compaction stay
-    schema-identical."""
-    return partials.groupBy("minute", "symbol").agg(
-        F.min_by("open", F.col("open_key")).alias("open"),
-        F.min("open_key").alias("open_key"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by("close", F.col("close_key")).alias("close"),
-        F.max("close_key").alias("close_key"),
-        F.sum("volume").alias("volume"),
-        F.sum("trades").alias("trades"),
-    )
+from .bars import merge_bars
 
 
 def merge_quantiles_to_partial(partials: DataFrame) -> DataFrame:
@@ -120,7 +104,8 @@ def merge_bloom_to_partial(partials: DataFrame) -> DataFrame:
 #: seat's flush-partial schema, so readers and future appends are
 #: unaffected)
 COMPACTORS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "bars": merge_bars_to_partial,
+    # N partial bars per (minute, symbol) -> one, same partial schema
+    "bars": lambda partials: merge_bars(partials, "minute", "symbol"),
     "quantiles": merge_quantiles_to_partial,
     "kmv": merge_kmv_to_partial,
     "mg": merge_mg_to_partial,

@@ -222,23 +222,17 @@ def test_duplicate_key_base_deduping_compact_forces_mv_rebuild(
     base, mv = str(tmp_path / "base"), str(tmp_path / "mv")
     S.append(_batch(spark, range(20)), base)
     S.append(_batch(spark, range(10, 20)), base)  # ids 10-19 DUPLICATED
-    M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     # MV correctly counts the raw duplicates pre-compact
     assert _sums_mv(spark, mv) == _sums_expect(spark, base)
     S.compact_snapshot(spark, base)  # dedups: ids 10-19 lose a copy
-    M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     assert S._version_body(mv, S.latest_version(mv))["op"] == "rebuild"
     assert _sums_mv(spark, mv) == _sums_expect(spark, base)
     # flagged layout op afterwards: incremental again, no rebuild
     S.append(_batch(spark, range(100, 110)), base)
     S.optimize_small_files(spark, base, min_rows=10_000)
-    M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     assert S._version_body(mv, S.latest_version(mv))["op"] == "append"
     assert _sums_mv(spark, mv) == _sums_expect(spark, base)
 
@@ -299,33 +293,27 @@ def _sums_expect(spark, path):
 def _sums_mv(spark, mv):
     return sorted(
         tuple(r)
-        for r in M.read_rollup(spark, mv, final_fn=M.final_sums).collect()
+        for r in M.read_rollup(spark, mv, rollup=M.SUMS).collect()
     )
 
 
 def test_sums_mv_consumes_deletes_without_rebuild(spark, tmp_path):
     base, mv = str(tmp_path / "base"), str(tmp_path / "mv")
     S.append(_batch(spark, range(60)), base)
-    M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     # GDPR-style erasure on the base: position delete AND equality delete
     S.delete_where(spark, base, "trade_id in (7, 8, 9)")
     S.delete_by_keys(
         spark, base, spark.createDataFrame([(10,), (11,)], "trade_id long")
     )
-    v = M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    v = M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     assert v is not None
     # the refresh APPENDED negative partials — it did not rebuild
     assert S._version_body(mv, S.latest_version(mv))["op"] == "append"
     assert _sums_mv(spark, mv) == _sums_expect(spark, base)
     # steady state and replay safety unchanged
     assert (
-        M.refresh_rollup(
-            spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-        )
+        M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
         is None
     )
 
@@ -336,18 +324,14 @@ def test_sums_mv_group_fully_deleted_disappears(spark, tmp_path):
     # one group's rows and the group must vanish from the rollup, not
     # surface as a zero row
     S.append(_batch(spark, range(30)), base)
-    M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     S.delete_where(spark, base, "symbol = 'ETH'")
-    M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     got = _sums_mv(spark, mv)
     assert got == _sums_expect(spark, base)
     assert all(r[1] == "BTC" for r in [(None, g[1]) for g in got])
     # compaction drops the netted-zero partials and preserves reads
-    M.compact_rollup(spark, mv, merge_fn=M.merge_sums)
+    M.compact_rollup(spark, mv, merge_fn=M.SUMS.merge)
     assert _sums_mv(spark, mv) == got
 
 
@@ -361,16 +345,12 @@ def test_uninitialized_mv_over_deleted_history_rebuilds_not_replays(
     S.append(_batch(spark, range(30)), base)
     S.delete_where(spark, base, "trade_id < 3")
     S.append(_batch(spark, range(30, 40)), base)
-    v = M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    v = M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     assert S._version_body(mv, v)["op"] == "rebuild"
     assert _sums_mv(spark, mv) == _sums_expect(spark, base)
     # and the next delete IS consumed incrementally (watermark in place)
     S.delete_where(spark, base, "trade_id = 35")
-    M.refresh_rollup(
-        spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-    )
+    M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
     assert S._version_body(mv, S.latest_version(mv))["op"] == "append"
     assert _sums_mv(spark, mv) == _sums_expect(spark, base)
 
@@ -406,7 +386,7 @@ def test_non_invertible_mv_survives_flagged_layout_op_without_rebuild(
 
 
 def test_non_invertible_mv_consumes_deletes_group_scoped(spark, tmp_path):
-    """r12 (was: must rebuild): with no negate_fn the refresh takes the
+    """r12 (was: must rebuild): with no negate the refresh takes the
     GROUP-SCOPED path — recompute only the CDC-named groups from the
     pinned head and swap their partials in one atomic upsert commit."""
     base, mv = str(tmp_path / "base"), str(tmp_path / "mv")
@@ -415,7 +395,7 @@ def test_non_invertible_mv_consumes_deletes_group_scoped(spark, tmp_path):
     # a NARROW erasure (2 of 6 groups — past max_scoped_frac the r13
     # dispatch correctly prefers a rebuild, gated elsewhere)
     S.delete_where(spark, base, "trade_id < 2")
-    M.refresh_rollup(spark, base, mv)  # no negate_fn -> scoped swap
+    M.refresh_rollup(spark, base, mv)  # no negate -> scoped swap
     assert S._version_body(mv, S.latest_version(mv))["op"] == "upsert"
     from crypto_clickhouse_poc_spark.streaming.bars import bars_batch
 
@@ -428,7 +408,7 @@ def test_cms_cell_mv_consumes_deletes_as_negative_cells(spark, tmp_path):
     """The second invertible algebra the CDC contract names: Count-Min
     cells are plain sums, so a CMS maintained as a log-driven MV absorbs
     erasures as NEGATIVE cell partials through the SAME refresh machinery
-    (no CMS-specific code — partial_fn/negate_fn are parameters). After
+    (no CMS-specific code — the algebra is a ``Rollup`` value). After
     deletes, the merged grid equals a one-shot sketch of the live
     snapshot EXACTLY (not just within the CMS error bound)."""
     from crypto_clickhouse_poc_spark.operators import cms as C
@@ -457,18 +437,26 @@ def test_cms_cell_mv_consumes_deletes_as_negative_cells(spark, tmp_path):
             .collect()
         )
 
+    def merge_cms(partials):
+        return partials.groupBy("minute", "d", "bucket").agg(
+            F.sum("cnt").alias("cnt")
+        )
+
+    cms = M.Rollup(
+        partial=partial_cms,
+        merge=merge_cms,
+        final=merge_cms,
+        negate=negate_cms,
+        group_cols=("minute", "d", "bucket"),
+    )
     base, mv = str(tmp_path / "base"), str(tmp_path / "mv")
     S.append(_batch(spark, range(60)), base)
-    M.refresh_rollup(
-        spark, base, mv, partial_fn=partial_cms, negate_fn=negate_cms
-    )
+    M.refresh_rollup(spark, base, mv, rollup=cms)
     S.delete_where(spark, base, "trade_id in (1, 3, 5, 7)")  # ETH rows
     S.delete_by_keys(
         spark, base, spark.createDataFrame([(2,), (4,)], "trade_id long")
     )
-    v = M.refresh_rollup(
-        spark, base, mv, partial_fn=partial_cms, negate_fn=negate_cms
-    )
+    v = M.refresh_rollup(spark, base, mv, rollup=cms)
     assert S._version_body(mv, v)["op"] == "append"  # no rebuild
     want = grid(
         partial_cms(S.read_snapshot(spark, base))
@@ -489,9 +477,7 @@ def test_random_op_interleaving_matches_recompute(spark, tmp_path, seed):
     live = list(range(25))
 
     def refresh():
-        M.refresh_rollup(
-            spark, base, mv, partial_fn=M.partial_sums, negate_fn=M.negate_sums
-        )
+        M.refresh_rollup(spark, base, mv, rollup=M.SUMS)
         assert _sums_mv(spark, mv) == _sums_expect(spark, base)
 
     refresh()
@@ -574,7 +560,7 @@ def test_random_op_interleaving_matches_recompute_bars(spark, tmp_path, seed):
         )
 
     def refresh():
-        M.refresh_rollup(spark, base, mv)  # bars partials, no negate_fn
+        M.refresh_rollup(spark, base, mv)  # bars partials, no negate
         assert _bars(M.read_rollup(spark, mv)) == _bars(
             bars_batch(S.read_snapshot(spark, base))
         )

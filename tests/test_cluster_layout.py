@@ -116,31 +116,40 @@ def test_scoped_refresh_prunes_clustered_base_at_file_level(
 ):
     """The r12 verdict's one remaining scan-width gap: on a symbol-
     clustered base, an erasure touching one symbol must re-aggregate from
-    that symbol's files only. Gate: the scoped refresh's prune call drops
-    files, and the MV still equals the batch recompute."""
+    that symbol's files only. The default rollup declares
+    ``key_col="symbol"``, so the prune needs no opt-in. Gate: each of two
+    successive scoped refreshes' prune call drops files, and the MV
+    still equals the batch recompute after each."""
     base, mv = str(tmp_path / "base"), str(tmp_path / "mv")
     S.append(_batch(spark, range(2000)), base, cluster_cols=("symbol",), n_files=8)
     M.refresh_rollup(spark, base, mv)
-    S.delete_where(spark, base, "symbol = 'S3' and trade_id < 100")
-    effects: list[tuple[int, int]] = []
     real = S.prune_files_by_values
+    for erasure in (
+        "symbol = 'S3' and trade_id < 100",
+        "symbol = 'S5' and trade_id < 200",
+    ):
+        S.delete_where(spark, base, erasure)
+        effects: list[tuple[int, int]] = []
 
-    def spy(files, key_col, values, **kw):
-        out = real(files, key_col, values, **kw)
-        effects.append((len(files), len(out)))
-        return out
+        def spy(files, key_col, values, **kw):
+            out = real(files, key_col, values, **kw)
+            effects.append((len(files), len(out)))
+            return out
 
-    monkeypatch.setattr(S, "prune_files_by_values", spy)
-    v = M.refresh_rollup(spark, base, mv, scope_key_col="symbol")
-    monkeypatch.undo()
-    assert S.manifest(mv, v)["op"] == "upsert"
-    assert any(n_out < n_in for n_in, n_out in effects), effects
-    assert _mv_rows(spark, mv) == sorted(
-        tuple(r)
-        for r in bars_batch(S.read_snapshot(spark, base))
-        .select("minute", "symbol", "open", "high", "low", "close", "volume", "trades")
-        .collect()
-    )
+        monkeypatch.setattr(S, "prune_files_by_values", spy)
+        v = M.refresh_rollup(spark, base, mv)
+        monkeypatch.undo()
+        assert S.manifest(mv, v)["op"] == "upsert"
+        assert any(n_out < n_in for n_in, n_out in effects), effects
+        assert _mv_rows(spark, mv) == sorted(
+            tuple(r)
+            for r in bars_batch(S.read_snapshot(spark, base))
+            .select(
+                "minute", "symbol", "open", "high", "low", "close", "volume",
+                "trades",
+            )
+            .collect()
+        )
 
 
 def test_joinmv_fact_read_prunes_clustered_fact_at_file_level(
@@ -214,7 +223,7 @@ def test_joinmv_fact_read_prunes_clustered_fact_at_file_level(
 
     got = sorted(
         tuple(r)
-        for r in M.read_rollup(spark, mv, final_fn=_merge_sector)
+        for r in _merge_sector(S.read_snapshot(spark, mv))
         .select("minute", "sector", "open", "high", "low", "close", "volume", "trades")
         .collect()
     )

@@ -64,7 +64,7 @@ def _merge_sector(partials):
 def _mv_rows(spark, mv):
     return sorted(
         tuple(r)
-        for r in M.read_rollup(spark, mv, final_fn=_merge_sector)
+        for r in _merge_sector(S.read_snapshot(spark, mv))
         .select("minute", "sector", "open", "high", "low", "close", "volume", "trades")
         .collect()
     )

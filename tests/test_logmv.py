@@ -459,7 +459,7 @@ def test_cascade_1m_to_1h_is_incremental_end_to_end(spark, tmp_path):
         # hoisted above the meta scan); every later tick appends O(delta)
         want_op = "rebuild" if k == 0 else "append"
         assert S._version_body(mv1h, S.latest_version(mv1h))["op"] == want_op
-        got = _hour_rows(M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours))
+        got = _hour_rows(M.read_rollup(spark, mv1h, rollup=M.HOURS))
         assert got == _hour_batch_expect(spark, base)
     # steady state at BOTH levels
     assert M.refresh_rollup(spark, base, mv1m) is None
@@ -481,13 +481,13 @@ def test_cascade_rides_through_1m_compaction_without_rebuild(spark, tmp_path):
     # compact is a CDC no-change: the cascade appended, no rebuild
     assert S._version_body(mv1h, S.latest_version(mv1h))["op"] == "append"
     assert _hour_rows(
-        M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours)
+        M.read_rollup(spark, mv1h, rollup=M.HOURS)
     ) == _hour_batch_expect(spark, base)
     # compaction of the upper level via the parameterized merge
-    before = _hour_rows(M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours))
-    M.compact_rollup(spark, mv1h, merge_fn=M.merge_hour_partials, ts_col="hour")
+    before = _hour_rows(M.read_rollup(spark, mv1h, rollup=M.HOURS))
+    M.compact_rollup(spark, mv1h, merge_fn=M.HOURS.merge, ts_col=M.HOURS.ts_col)
     assert (
-        _hour_rows(M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours))
+        _hour_rows(M.read_rollup(spark, mv1h, rollup=M.HOURS))
         == before
     )
 
@@ -511,7 +511,7 @@ def test_erasure_cascades_scoped_end_to_end(spark, tmp_path):
     M.refresh_cascade(spark, mv1m, mv1h)
     assert S._version_body(mv1h, S.latest_version(mv1h))["op"] == "upsert"
     assert _hour_rows(
-        M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours)
+        M.read_rollup(spark, mv1h, rollup=M.HOURS)
     ) == _hour_batch_expect(spark, base)
     # and the NEXT tick is a plain incremental append at both levels
     S.append(_batch(spark, range(100, 120), minute_of=lambda i: (i % 4) * 20), base)
@@ -519,7 +519,7 @@ def test_erasure_cascades_scoped_end_to_end(spark, tmp_path):
     M.refresh_cascade(spark, mv1m, mv1h)
     assert S._version_body(mv1h, S.latest_version(mv1h))["op"] == "append"
     assert _hour_rows(
-        M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours)
+        M.read_rollup(spark, mv1h, rollup=M.HOURS)
     ) == _hour_batch_expect(spark, base)
 
 
@@ -541,7 +541,7 @@ def test_cascade_1m_rebuild_degrades_cascade_to_rebuild_then_recovers(
     M.refresh_cascade(spark, mv1m, mv1h)
     assert S._version_body(mv1h, S.latest_version(mv1h))["op"] == "rebuild"
     assert _hour_rows(
-        M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours)
+        M.read_rollup(spark, mv1h, rollup=M.HOURS)
     ) == _hour_batch_expect(spark, base)
     # and the NEXT tick is incremental again at both levels
     S.append(_batch(spark, range(100, 120), minute_of=lambda i: (i % 4) * 20), base)
@@ -549,7 +549,7 @@ def test_cascade_1m_rebuild_degrades_cascade_to_rebuild_then_recovers(
     M.refresh_cascade(spark, mv1m, mv1h)
     assert S._version_body(mv1h, S.latest_version(mv1h))["op"] == "append"
     assert _hour_rows(
-        M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours)
+        M.read_rollup(spark, mv1h, rollup=M.HOURS)
     ) == _hour_batch_expect(spark, base)
 
 
@@ -559,12 +559,15 @@ def test_misordered_group_cols_fail_loud_not_misprune(spark, paths):
     misordered tuple used to feed a string into the ts-range parse
     (obscure ValueError at best, silent misprune for ISO-shaped strings);
     now it raises a targeted TypeError before any scan."""
+    import dataclasses
+
     base, mv = paths
     S.append(_batch(spark, range(60)), base)
-    M.refresh_rollup(spark, base, mv, group_cols=("symbol", "minute"))
+    M.refresh_rollup(spark, base, mv)
     S.delete_where(spark, base, "trade_id = 7")
+    misordered = dataclasses.replace(M.BARS, group_cols=("symbol", "minute"))
     with pytest.raises(TypeError, match="time-bucket"):
-        M.refresh_rollup(spark, base, mv, group_cols=("symbol", "minute"))
+        M.refresh_rollup(spark, base, mv, rollup=misordered)
 
 
 def test_scoped_refresh_over_group_fraction_falls_back_to_rebuild(spark, paths):
@@ -591,61 +594,6 @@ def test_scoped_refresh_over_group_fraction_falls_back_to_rebuild(spark, paths):
     assert _rows(M.read_rollup(spark, mv)) == _rows(
         bars_batch(S.read_snapshot(spark, base))
     )
-
-
-def test_clustered_base_without_scope_key_col_warns_once(spark, paths):
-    """r13 verdict wrong #4: the caller clustered the base (manifest key
-    stats exist for the 'symbol' group column) but didn't pass
-    scope_key_col — the scoped refresh warns ONCE naming the knob, and
-    the prune never fires un-opted (the spy sees the full file set)."""
-    import warnings as W
-
-    base, mv = paths
-    M._warned_scope_key.discard(base)
-    S.append(_batch(spark, range(60)), base, cluster_cols=("symbol",), n_files=4)
-    M.refresh_rollup(spark, base, mv)
-    S.delete_where(spark, base, "trade_id = 7")  # forces the scoped path
-    pruned_calls = []
-    real = S.prune_files_by_values
-
-    def spy(files, col, vals):
-        pruned_calls.append(col)
-        return real(files, col, vals)
-
-    S.prune_files_by_values = spy
-    try:
-        with W.catch_warnings(record=True) as rec:
-            W.simplefilter("always")
-            M.refresh_rollup(spark, base, mv)
-        hits = [w for w in rec if "scope_key_col" in str(w.message)]
-        assert len(hits) == 1 and "'symbol'" in str(hits[0].message)
-        assert pruned_calls == []  # never prunes un-opted
-        # second scoped refresh: no repeat warning (once per table)
-        S.delete_where(spark, base, "trade_id = 8")
-        with W.catch_warnings(record=True) as rec2:
-            W.simplefilter("always")
-            M.refresh_rollup(spark, base, mv)
-        assert not [w for w in rec2 if "scope_key_col" in str(w.message)]
-    finally:
-        S.prune_files_by_values = real
-    # correctness unchanged either way
-    assert _rows(M.read_rollup(spark, mv)) == _rows(
-        bars_batch(S.read_snapshot(spark, base))
-    )
-
-
-def test_unclustered_base_without_scope_key_col_stays_silent(spark, paths):
-    import warnings as W
-
-    base, mv = paths
-    M._warned_scope_key.discard(base)
-    S.append(_batch(spark, range(60)), base)  # no cluster stats
-    M.refresh_rollup(spark, base, mv)
-    S.delete_where(spark, base, "trade_id = 7")
-    with W.catch_warnings(record=True) as rec:
-        W.simplefilter("always")
-        M.refresh_rollup(spark, base, mv)
-    assert not [w for w in rec if "scope_key_col" in str(w.message)]
 
 
 def test_scoped_erasure_refresh_under_non_utc_os_tz_equals_rebuild(
@@ -679,3 +627,26 @@ def test_scoped_erasure_refresh_under_non_utc_os_tz_equals_rebuild(
         else:
             os.environ["TZ"] = old
         _time.tzset()
+
+
+def test_rollup_algebra_has_one_owner():
+    """Source scan: the OHLCV partial merge is written once, in
+    streaming/bars.py (merge_bars / final_bars); an MV's algebra travels
+    as one ``Rollup`` value, never as loose callables or scope knobs."""
+    from pathlib import Path
+
+    pkg = Path(M.__file__).resolve().parents[1]
+    # operators/trades.py merges RAW events keyed by (ts, event_id) with
+    # per-level counts (ev_ohlcv_multires, its own DuckDB oracle) and
+    # takes a day close over finished bars — neither merges partials
+    exempt = {"streaming/bars.py", "operators/trades.py"}
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        src = f.read_text()
+        if rel not in exempt:
+            assert 'min_by("open"' not in src, rel
+            assert 'max_by("close"' not in src, rel
+        if rel.startswith(("plans/", "operators/")):
+            for kw in ("partial_fn=", "negate_fn=", "final_fn=", "scope_key_col"):
+                assert kw not in src, (rel, kw)
+    assert "_warned_scope_key" not in Path(M.__file__).read_text()

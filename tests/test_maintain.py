@@ -47,7 +47,7 @@ def _base_sums(spark, base):
 def _mv_sums(spark, mv):
     return sorted(
         tuple(r)
-        for r in M.read_rollup(spark, mv, final_fn=M.final_sums).collect()
+        for r in M.read_rollup(spark, mv, rollup=M.SUMS).collect()
     )
 
 
@@ -56,13 +56,7 @@ def test_tick_services_everything_and_reads_stay_exact(spark, tmp_path):
     mv = str(tmp_path / "mv")
     for k in range(3):  # micro-batch debt: three small txn dirs
         S.append(_batch(spark, range(k * 30, (k + 1) * 30)), base)
-    spec = X.MVSpec(
-        mv_path=mv,
-        partial_fn=M.partial_sums,
-        negate_fn=M.negate_sums,
-        merge_fn=M.merge_sums,
-        max_live_files=2,
-    )
+    spec = X.MVSpec(mv_path=mv, rollup=M.SUMS, max_live_files=2)
     r1 = X.maintenance_tick(
         spark, base, mvs=[spec], bloom_keys=["trade_id"], min_rows=10_000
     )

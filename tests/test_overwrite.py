@@ -316,7 +316,7 @@ def test_backfill_cascades_scoped_through_mv_levels(spark, table, tmp_path):
     assert S.manifest(mv1h, S.latest_version(mv1h))["op"] == "upsert"
     got = sorted(
         tuple(r)
-        for r in M.read_rollup(spark, mv1h, final_fn=M.reaggregate_hours)
+        for r in M.read_rollup(spark, mv1h, rollup=M.HOURS)
         .collect()
     )
     want = sorted(
